@@ -1,9 +1,9 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Entry-point contract of the spark-graft engine (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+A verifier runs ``entry(spark)`` as a smoke check, runs each
+``queries()[name]`` at sf=0.01 and compares it against the matching
+``oracle_sql()[name]`` via DuckDB (row-count + schema +
+order-insensitive value-hash).
 
 Implementation lives in ``big_data_projects_spark``; this module is a
 thin adapter over its query registry.
@@ -25,7 +25,7 @@ from big_data_projects_spark.queries import REGISTRY  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
+    """Flagship query on the sf0.001 test tables; expected to return rows>0."""
     from big_data_projects_spark.pipeline import songplays_pipeline
 
     return songplays_pipeline(spark, "/root/testdata/sf0.001")

@@ -13,7 +13,7 @@ entirely).  Differential CORRECTNESS checks always materialize full
 results, so only the *timing* artifacts were affected.
 
 ``force_count`` instead aggregates ``count(1)`` together with a
-``sum(xxhash64(<every output column>))``: hashing each column makes
+``bit_xor(xxhash64(<every output column>))``: hashing each column makes
 every column — and hence every upstream operator — obligatory, while
 still returning a single summary row to the driver.  The added cost is
 one 64-bit hash per OUTPUT row (output ≪ input for everything timed),

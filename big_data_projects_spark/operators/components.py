@@ -25,8 +25,8 @@ from pyspark.sql import functions as F
 
 
 def _release_checkpoint(df: DataFrame | None) -> None:
-    """Best-effort unpersist of a localCheckpoint leaf's blocks (ADVICE
-    r12 #1): a checkpointed Dataset's analyzed plan is a LogicalRDD
+    """Best-effort unpersist of a localCheckpoint leaf's blocks: a
+    checkpointed Dataset's analyzed plan is a LogicalRDD
     whose underlying RDD localCheckpoint() left persisted in the
     BlockManager; without an explicit release every round's blocks
     linger until driver GC / ContextCleaner collects the abandoned
@@ -125,8 +125,8 @@ def connected_components(
         # The collect above materialized new_labels' checkpoint, so the
         # PREVIOUS round's blocks (read one last time inside that job)
         # are now dead — release them eagerly instead of waiting for
-        # GC, keeping peak checkpoint storage at O(1) rounds (ADVICE
-        # r12 #1).  The seed `labels` relation is round 0's prev; the
+        # GC, keeping peak checkpoint storage at O(1) rounds.  The seed
+        # `labels` relation is round 0's prev; the
         # FINAL round's blocks are never released here (the caller's
         # consumer reads them — a released local checkpoint cannot
         # recompute).
@@ -136,7 +136,7 @@ def connected_components(
         if not changed:
             break
     else:
-        # Error-path hygiene (ADVICE r12 #1): free the edge set and the
+        # Error-path hygiene: free the edge set and the
         # last round's state before raising, so a caught-and-retried
         # non-convergence doesn't strand max_iter rounds of blocks.
         _release_checkpoint(sym)

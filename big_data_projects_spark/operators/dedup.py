@@ -19,15 +19,16 @@ Four tiers, each a standard large-scale training-data technique:
 
 All hashing is md5/xxhash64-based and deterministic; no Python UDFs.
 
-Cache-lifetime contract (VERDICT r10 #7, decided): operators here are
+Cache-lifetime contract (decided): operators here are
 DRIVER-PATTERN-SCOPED by design — a call persists its multiply-consumed
 intermediates (shingles, band buckets) and deliberately leaves the
 plan-keyed handles in the session cache so the caller can evaluate the
 returned DataFrame lazily; nothing here can know when the caller is
 done with that plan.  Programmatic users composing many calls in one
 long-lived session own the eviction boundary: call
-``spark.catalog.clearCache()`` between logical units (bench.py, the
-driver sweep, and the oracle tools already do).  Per-call unpersist
+``spark.catalog.clearCache()`` between logical units (perfbench, the
+registry wrapper ahead of every build, and the oracle tools already
+do).  Per-call unpersist
 hooks were considered and rejected: firing them before the caller's
 action would silently recompute the 64-min signature groupBy per
 consumer branch — the exact recomputation the persists exist to stop.
@@ -105,13 +106,13 @@ def shingles(
         df.select(F.col(id_col), F.col(text_col))
     ).select(F.col(id_col), toks.alias("__toks"))
     # Short docs (< n tokens) are dropped by the CASE guard + explode-
-    # of-empty-array, NOT by a filter (r13; VERDICT r12 item #6):
+    # of-empty-array, NOT by a filter (r13):
     # Catalyst pushes a size(split(text)) >= n predicate through the
     # Project AND the spread repartition, so the r12 plans re-ran the
     # regexp split of EVERY document single-threaded in the
     # one-partition scan task just to evaluate the pushed filter,
-    # before the parallel split above the exchange (plans/r12
-    # q_dedup_minhash_lsh blocks (6) vs (8)).  With the guard inside
+    # before the parallel split above the exchange (the r12
+    # q_dedup_minhash_lsh plan).  With the guard inside
     # the gram expression there is no predicate to push: the plan
     # carries ONE split per doc, post-exchange, on all cores.  explode
     # (not explode_outer) emits nothing for the empty arrays, so the
@@ -424,8 +425,8 @@ def minhash_merge_ingest(
     for the bands — small relative to shingles at any corpus size);
     the handles are plan-keyed and stay in the session cache after the
     caller evaluates the result.  Long-lived sessions composing many
-    calls should ``spark.catalog.clearCache()`` between them (bench.py
-    and the driver sweep already do; ADVICE r8 #2, r9 #3).
+    calls should ``spark.catalog.clearCache()`` between them (perfbench
+    and the registry wrapper ahead of every build already do).
     """
     sh = shingles(df, id_col, text_col, n, hasher=hasher).persist()
     sig = minhash_signatures(df, id_col, text_col, n, shingle_df=sh)
@@ -445,7 +446,7 @@ def minhash_merge_ingest(
         F.col(id_col).alias("doc_o"), "band", "bucket"
     )
     # ONE (band, bucket) equi-join against the full banded relation
-    # (r13, guide §2.4; VERDICT r12 item #3): the former shape ran TWO
+    # (r13, guide §2.4): the former shape ran TWO
     # joins (batch×corpus, batch×batch) with separate distincts and
     # unioned them.  vs_corpus is derivable from doc_o alone (the
     # batch_flag contract), and the two candidate sets are disjoint by

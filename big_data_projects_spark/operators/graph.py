@@ -133,8 +133,8 @@ def pagerank(
         # per-round plan, not job launch — an every-2nd-round cadence
         # was A/B-measured SLOWER (the doubled plan depth costs more to
         # optimize than the saved action; BASELINE.md round 6).
-        # eager=False was tried and REJECTED in r13 (VERDICT r12 item
-        # #5's pipelined-rounds idea): q_pagerank_sim_graph regressed
+        # eager=False was tried and REJECTED in r13 (the
+        # pipelined-rounds idea): q_pagerank_sim_graph regressed
         # 6.1 -> 9.0 s in a controlled same-session A/B.  Under AQE,
         # localCheckpoint(eager=False) is not actually lazy — creating
         # the LogicalRDD calls queryExecution.toRdd, and an adaptive

@@ -68,7 +68,7 @@ def cosine_sim(a: Column, b: Column) -> Column:
     """Raw cosine kernel: partial division — a zero-norm vector is an
     ANSI-mode runtime abort.  Kept for callers that PROVE finite input
     (unit fixtures); every production ranking/threshold consumer in
-    this package uses cosine_sim_total instead (ADVICE r10 #3)."""
+    this package uses cosine_sim_total instead."""
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
@@ -77,7 +77,7 @@ def cosine_sim_total(a: Column, b: Column) -> Column:
     not NaN) when either vector has zero norm — bit-identical to
     cosine_sim on finite input.  Consumers that rank or threshold
     similarities use this so degenerate vectors compare as
-    nothing-is-near rather than erroring (ADVICE r9 #1): NULL fails
+    nothing-is-near rather than erroring: NULL fails
     every `>= threshold` filter, and Spark's DESC ordering puts NULL
     last so it falls out of any top-k."""
     return F.try_divide(_dot(a, b), _norm(a) * _norm(b))
@@ -240,7 +240,7 @@ def ivf_merge_ingest(
     as the dedup twin (banded-LSH candidates + exact-Jaccard verify);
     recall follows the band S-curve — high in the near-dup regime the
     gate is for, deliberately low near orthogonality.  The signature
-    width SCALES WITH CORPUS SIZE BY DEFAULT (VERDICT r11 #2):
+    width SCALES WITH CORPUS SIZE BY DEFAULT:
     ``bits_per_band=None`` derives ``lsh_bits_for(count(emb))`` —
     one count() action, control-plane at index-build cadence — so
     band-bucket occupancy stays ~constant as the corpus grows.  A
@@ -326,7 +326,7 @@ def ivf_merge_ingest(
         ).alias("__cents")
     )
     vec = F.col(vec_col)
-    # Degenerate-similarity guard (ADVICE r9 #1): cosine to a
+    # Degenerate-similarity guard: cosine to a
     # zero-norm vector or centroid divides by zero — an ANSI-mode
     # runtime abort (Spark 4 default), or NaN under legacy semantics,
     # where the window this replaces ranked NaN FIRST (largest double
@@ -600,7 +600,7 @@ def band_signature_frame(
             if len(pdf):
                 vec_series = pdf[vec_col]
                 if vec_series.isna().any():
-                    # Mode parity on NULL vectors (ADVICE r11 #2): the
+                    # Mode parity on NULL vectors: the
                     # HOF fold's `when(dot > 0, ...)` buckets a NULL
                     # embedding as all-zero bits, while np.stack would
                     # raise — a crash-vs-silent asymmetry in a pure
@@ -1665,7 +1665,7 @@ def pq_topk(
         .collect()
     )
     if len(qd_rows) > 1:
-        # ADVICE r12 #2: the pre-r12 qtab join SUMMED distance rows over
+        # The pre-r12 qtab join SUMMED distance rows over
         # duplicate query-id corpus rows; the in-row path reads one
         # collected row, so duplicate ids must fail loudly instead of
         # silently changing ADC distances.
@@ -1769,7 +1769,7 @@ def mmr_select(
     """
     cands = (
         topk_cosine(emb, query_id, k=pool, id_col=id_col, vec_col=vec_col)
-        # Totality guard (ADVICE r11 #1): a zero-norm vector scores a
+        # Totality guard: a zero-norm vector scores a
         # NULL sim (cosine_sim_total), which sorts last under DESC but
         # still lands in the pool whenever pool >= finite corpus rows —
         # and collect() would hand the greedy loop a None that breaks

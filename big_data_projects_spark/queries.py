@@ -1,7 +1,8 @@
 """Assembled query registry.
 
 Importing this module populates ``REGISTRY`` with every implemented
-query (reference parity + LLM-pipeline extensions + streaming).
+query (reference parity + LLM-pipeline extensions + streaming), in
+registration order.
 """
 
 from __future__ import annotations
@@ -15,635 +16,9 @@ import big_data_projects_spark.queries_tpch  # noqa: F401,E402
 import big_data_projects_spark.queries_tpch_full  # noqa: F401,E402
 import big_data_projects_spark.queries_expr  # noqa: F401,E402
 import big_data_projects_spark.queries_scale  # noqa: F401,E402
-
-try:  # extension modules land incrementally
-    import big_data_projects_spark.queries_llm  # noqa: F401,E402
-except ImportError:
-    pass
-try:
-    import big_data_projects_spark.queries_corpus  # noqa: F401,E402
-except ImportError:
-    pass
-try:
-    import big_data_projects_spark.queries_streaming  # noqa: F401,E402
-except ImportError:
-    pass
-try:
-    import big_data_projects_spark.queries_series  # noqa: F401,E402
-except ImportError:
-    pass
-try:
-    import big_data_projects_spark.queries_sql_api  # noqa: F401,E402
-except ImportError:
-    pass
-try:
-    import big_data_projects_spark.queries_curation  # noqa: F401,E402
-except ImportError:
-    pass
-
-# The driver's per-round CORRECTNESS sweep checks the first 50 registry
-# entries in registration order (r01 covered exactly entries 0-49, r02 the
-# rotated window below).  Rotate the window each round so every family lands
-# under the driver's own signal: queries already green in a prior round go
-# last; the highest-value still unchecked families go first.
-_ALREADY_DRIVER_CHECKED = [
-    # CORRECTNESS_r01.json — all green (47 hash-match + 3 declared rows-only).
-    "q_scan_project_rename", "q_filter_eq", "q_filter_neq", "q_fillna",
-    "q_cast", "q_dedup", "q_groupby_count", "q_tpch_q1", "q_join_agg_agg",
-    "q_join_dim_report", "q_join_multiway", "q_time_dim", "q_concat",
-    "q_row_number", "q_mono_id", "q_top_k_per_group", "q_sessionize",
-    "q_asof_join", "q_sink_parquet_partitioned", "q_sink_csv_roundtrip",
-    "q_sink_orc_roundtrip", "q_flagship_star_rollup", "q_sql_entry_report",
-    "q_ctas_insert", "q_sink_json_roundtrip", "q_join_left_outer",
-    "q_join_semi", "q_join_anti", "q_set_ops", "q_rollup", "q_cube",
-    "q_pivot", "q_window_analytics", "q_having_topn", "q_scalar_subquery",
-    "q_case_when_bucketing", "q_distinct_agg", "q_approx_agg", "q_median",
-    "q_rolling_time_window", "q_quantiles", "q_set_ops_all",
-    "q_window_firstlast", "q_gapfill_hourly", "q_pandas_udaf_trimmed",
-    "q_union_by_name", "q_nullsafe_join", "q_scd2_intervals", "q_histogram",
-    "q_string_agg",
-    # CORRECTNESS_r02.json — all green (41 hash-match + 9 declared rows-only).
-    "q_tpch_q2", "q_tpch_q3", "q_tpch_q4", "q_tpch_q5", "q_tpch_q6",
-    "q_tpch_q7", "q_tpch_q8", "q_tpch_q9", "q_tpch_q10", "q_tpch_q11",
-    "q_tpch_q12", "q_tpch_q13", "q_tpch_q14", "q_tpch_q15", "q_tpch_q16",
-    "q_tpch_q17", "q_tpch_q18", "q_tpch_q19", "q_tpch_q20", "q_tpch_q21",
-    "q_tpch_q22",
-    "q_dedup_exact", "q_ngram_jaccard", "q_dedup_minhash_lsh",
-    "q_simhash", "q_simhash_pairs", "q_dedup_clusters", "q_dedup_keep_best",
-    "q_edit_distance",
-    "q_knn_cosine", "q_embed_neardup", "q_embed_outliers", "q_knn_ivf",
-    "q_embed_lsh_neardup", "q_kmeans_clusters", "q_knn_batch", "q_knn_int8",
-    "q_pagerank_sim_graph",
-    "q_stream_hourly_counts", "q_stream_sliding_counts",
-    "q_stream_session_windows", "q_stream_dedup", "q_stream_user_stats",
-    "q_stream_static_join", "q_stream_stream_join", "q_stream_foreach_sink",
-    "q_token_stats", "q_lang_id", "q_text_quality", "q_doc_fingerprint",
-]
-
-# Round-3 window — exactly 50 entries, all oracle-backed (hash-match is the
-# strong signal), never driver-checked before this round (VERDICT r02 item
-# #1).  Leads with the 15 queries registered after the round-2 rotation was
-# frozen, then the streaming straggler, the physical-strategy family, the
-# text/corpus family, and the strongest of the remaining OLAP entries.
-_ROUND3_WINDOW = [
-    # post-rotation round-2 additions (oracle-backed; q_semdedup is
-    # rows-only and waits for round 4)
-    "q_bloom_filter_join", "q_interval_overlap", "q_vocab_build",
-    "q_line_dedup", "q_random_projection", "q_zscore_per_group",
-    "q_quality_classifier", "q_hard_negatives", "q_sample_per_group",
-    "q_udtf_spans", "q_scan_text_lines", "q_scan_binaryfile",
-    "q_zorder_layout", "q_stream_anti_dedup",
-    # streaming straggler (VERDICT item #7): restart semantics under the
-    # driver's own signal
-    "q_stream_custom_source",
-    # scale / physical-strategy family
-    "q_salted_join", "q_bucketed_join", "q_salted_agg", "q_shuffle_hash_hint",
-    "q_compaction", "q_scan_json_schema", "q_scan_json_corrupt",
-    "q_custom_source", "q_custom_sink",
-    # text / corpus / LLM-pipeline family
-    "q_bpe_token_count", "q_winnow_fingerprint", "q_embed_decontaminate",
-    "q_unigram_ppl", "q_tfidf_top_terms", "q_bm25", "q_pipeline_corpus_clean",
-    "q_hash_split", "q_data_quality", "q_triangle_count", "q_bigram_pmi",
-    "q_recursive_reachability", "q_repetition", "q_doc_chunking",
-    "q_contamination", "q_pii_redact", "q_stratified_sample",
-    "q_sequence_packing", "q_domain_mix", "q_weighted_sample",
-    "q_quality_percentile", "q_entropy",
-    # multimodal front door (oracle-backed, md5-verified ingestion)
-    "q_multimodal_bytes",
-    # highest-value OLAP entries that fit in the 50
-    "q_merge_upsert", "q_funnel", "q_retention_cohorts",
-]
-
-# Round-4 queue: the ≤29 overflow — the remaining OLAP-expression family
-# (oracle-backed, lower risk: single-table expression surfaces) and the
-# rows-only stubs (weakest driver signal, declared).  At round-4 start,
-# rotate THIS list plus the round-3 additions (registered after this
-# window froze, currently ~24 entries — q_hard_negatives_ann,
-# q_multimodal_decode, q_gopher_rules, q_incremental_dedup,
-# q_range_sharded_write, q_skew_stats, q_bpe_merge_step, q_prefix_dedup,
-# q_token_histogram, q_higher_order_funcs, q_regex_extract_all,
-# q_xml_extract, q_null_semantics, q_cogroup_stats, q_quality_ensemble,
-# q_asof_forward, q_url_parse, q_html_strip, q_oov_rate,
-# q_stream_dedup_watermarked, q_scan_merge_schema, q_dpp_join,
-# q_map_lambdas, q_pipeline_web_corpus, q_label_propagation,
-# q_stream_daily_topk, q_scan_csv_corrupt, q_semdedup_hier,
-# q_tfidf_cosine_pairs, the time-series/sketch family (q_interpolate_linear,
-# q_ewma, q_event_transitions, q_mad_outliers, q_trend_slope, q_hll_uniques,
-# q_sketch_top_terms, q_dup_span, q_ohlc_bars, q_drift_psi,
-# q_approx_percentile_bound, q_feature_store_join, q_cdc_apply,
-# q_profile_columns, q_shard_assignment — all oracle-backed), the
-# SQL entry-point family (q_parameterized_sql, q_sql_variables,
-# q_sql_scripting, q_pandas_api_rollup, q_sql_udf — oracle-backed),
-# the Python-boundary API pins (q_scalar_iter_udf, q_map_in_arrow),
-# q_stream_drift_psi (streamed PSI monitor), q_stream_fuzzy_dedup
-# (streaming MinHash-LSH gate, in-row signatures), q_codec_tradeoff,
-# q_rank_fusion
-# (hybrid-retrieval RRF, oracle-backed), and the
-# late-round-3 batch: q_upsample_mix,
-# q_length_batching, q_global_shuffle, q_asof_nearest,
-# q_generator_funcs, q_stream_file_ingest, q_skipgram_pairs, q_knn_pq,
-# q_inverted_index, q_containment_pairs, q_mmr_diversity, q_scan_xml,
-# q_collation, q_observe_metrics, q_metadata_columns — plus SEVEN
-# upgraded from rows-only to oracle-backed this round, whose r01/r02
-# driver rows are stale rows-only checks worth refreshing when slots
-# allow: q_pandas_udaf_trimmed, q_pagerank_sim_graph, q_knn_batch,
-# q_multimodal_features, q_multimodal_resize, q_multimodal_frames)
-# to the front, oracle-backed first — they fit a 50-entry window with
-# the 25 queue entries only partially, so lead with the queue (older
-# debt) and the strongest new families.
-_ROUND4_QUEUE = [
-    "q_grouping_id", "q_bitwise_agg", "q_incremental_rollup",
-    "q_order_limit", "q_window_ignore_nulls", "q_snapshot_diff",
-    "q_user_gap_features", "q_running_count_distinct", "q_null_ordering",
-    "q_json_extract", "q_explode_terms", "q_grouping_sets", "q_date_arith",
-    "q_string_funcs", "q_range_join", "q_ntile_cume", "q_array_ops",
-    "q_max_by", "q_map_ops", "q_try_arith", "q_variant_json", "q_unpivot",
-    "q_lateral_topn", "q_stats_moments", "q_mode_per_group",
-    # rows-only stubs last
-    "q_semdedup", "q_multimodal_features", "q_multimodal_resize",
-    "q_multimodal_frames",
-]
-
-# Round-4 window, pre-staged: the 25-entry queue above (oldest driver
-# debt) plus the 25 strongest never-checked round-3 additions — family
-# flagships, the streaming drift monitor, and the multimodal decode.
-# It ACTIVATES AUTOMATICALLY when the driver has recorded
-# CORRECTNESS_r03.json (i.e. round 4 has started): this round's sweep
-# order is untouched, and next round's rotation cannot be forgotten.
-# The ~45 remaining never-checked entries queue for round 5.
-_ROUND4_WINDOW = _ROUND4_QUEUE[:25] + [
-    "q_hard_negatives_ann", "q_multimodal_decode", "q_incremental_dedup",
-    "q_prefix_dedup", "q_label_propagation", "q_tfidf_cosine_pairs",
-    "q_knn_pq", "q_inverted_index", "q_containment_pairs",
-    "q_mmr_diversity", "q_pipeline_web_corpus", "q_rank_fusion",
-    "q_feature_store_join", "q_cdc_apply", "q_drift_psi",
-    "q_stream_drift_psi", "q_interpolate_linear", "q_ewma",
-    "q_hll_uniques", "q_sketch_top_terms", "q_dup_span",
-    "q_profile_columns", "q_shard_assignment", "q_stream_fuzzy_dedup",
-    "q_scalar_iter_udf",
-]
-
-
-# Round-5 window, pre-staged the same way (gated on the driver-committed
-# CORRECTNESS_r04.json artifact — the correctness files are checked into
-# git each round, so the rotation is reproducible from the repo alone).
-# Contents: every remaining never-driver-checked query — after round 4
-# lands, exactly the 49 below — plus one stale-row refresh
-# (q_kmeans_clusters: its r02 row is a rows-only check; it gained an
-# invariant hash-match oracle in round 4).  Union of r1–r5 windows then
-# covers the whole registry.  The other stale rows-only driver rows
-# (q_pandas_udaf_trimmed, q_pagerank_sim_graph, q_knn_batch, q_knn_ivf,
-# plus the r4-upgraded q_semdedup stale pair if r4 misses them) queue
-# for round 6.
-_ROUND5_WINDOW = [
-    # expression / API surface stragglers
-    "q_skew_stats", "q_cogroup_stats", "q_asof_forward", "q_asof_nearest",
-    "q_higher_order_funcs", "q_regex_extract_all", "q_xml_extract",
-    "q_null_semantics", "q_map_lambdas", "q_generator_funcs",
-    "q_collation", "q_map_in_arrow",
-    # source / sink / physical-layout stragglers
-    "q_range_sharded_write", "q_scan_merge_schema", "q_dpp_join",
-    "q_scan_csv_corrupt", "q_scan_xml", "q_observe_metrics",
-    "q_metadata_columns", "q_codec_tradeoff",
-    # multimodal trio (stale r01 rows-only rows; oracle-backed since r3)
-    "q_multimodal_features", "q_multimodal_resize", "q_multimodal_frames",
-    # k-means family (invariant oracles landed in round 4)
-    "q_semdedup", "q_semdedup_hier", "q_kmeans_clusters",
-    # text / corpus stragglers
-    "q_bpe_merge_step", "q_gopher_rules", "q_token_histogram",
-    "q_quality_ensemble", "q_url_parse", "q_html_strip", "q_oov_rate",
-    "q_upsample_mix", "q_length_batching", "q_global_shuffle",
-    "q_skipgram_pairs",
-    # streaming stragglers
-    "q_stream_dedup_watermarked", "q_stream_daily_topk",
-    "q_stream_file_ingest",
-    # time-series stragglers
-    "q_event_transitions", "q_mad_outliers", "q_trend_slope",
-    "q_ohlc_bars", "q_approx_percentile_bound",
-    # SQL entry points
-    "q_parameterized_sql", "q_sql_variables", "q_sql_scripting",
-    "q_pandas_api_rollup", "q_sql_udf",
-]
-
-
-# Round-6 queue (front of the round-6 window when CORRECTNESS_r05.json
-# lands): the nine operators registered during round 4 — all
-# oracle-backed, all pre-verified through the vanilla driver-sim — plus
-# the four remaining stale rows-only driver rows whose queries have
-# since gained hash-match oracles (q_pandas_udaf_trimmed r01,
-# q_pagerank_sim_graph / q_knn_batch / q_knn_ivf r02).  Anything
-# registered in round 5 joins this list.
-_ROUND6_QUEUE = [
-    "q_kn_bigram_ppl", "q_pipeline_ccnet", "q_bpe_train",
-    "q_preference_pairs", "q_stream_bloom_dedup", "q_ann_recall",
-    "q_sql_pipe", "q_stream_cdc_apply", "q_multimodal_dhash",
-    "q_apply_in_arrow", "q_dataset_report", "q_bpe_encode",
-    "q_matryoshka_recall", "q_negative_sampling", "q_cluster_purity",
-    "q_pandas_udaf_trimmed", "q_pagerank_sim_graph", "q_knn_batch",
-    "q_knn_ivf",
-    # The last five stale rows-only driver rows (q_approx_agg r01; the
-    # rest r02 `no_oracle`): each has since gained a hash-match oracle
-    # and passes the local sweep, but its LATEST driver row still
-    # reads rows-only — refresh so no query's newest signal is weaker
-    # than its current oracle (VERDICT r4 item #2).
-    "q_approx_agg", "q_dedup_minhash_lsh", "q_simhash_pairs",
-    "q_embed_lsh_neardup", "q_knn_int8",
-]
-
-
-# Round-7 queue: operators registered during round 5 (the rotation
-# contract: anything NEW joins the _ROUND{n+2}_QUEUE so the meta-test
-# proves every query eventually lands under a driver window). These
-# all carry hash-match oracles and the local differential sweep from
-# day one; they reach the driver after the round-6 window drains.
-# The twelve round-5 registrations pulled forward into the round-6
-# window (they'd normally wait for round 7).
-_ROUND5_BATCH = [
-    "q_dsir_weights", "q_char_entropy", "q_trigram_backoff",
-    "q_pca_variance", "q_bt_reward", "q_rouge_overlap",
-    "q_span_corruption", "q_ngram_novelty", "q_stream_dsir_gate",
-    "q_zipf_fit", "q_lsh_quality", "q_minhash_est",
-]
-
-# Registrations AFTER the round-6 window froze: front of the round-7
-# window when CORRECTNESS_r06.json lands.
-_ROUND7_QUEUE = [
-    "q_length_kl", "q_tokenizer_fertility", "q_embed_centroid_shift",
-    "q_quality_calibration", "q_lang_confusion", "q_dedup_cluster_stats",
-    "q_simhash_hamming_hist", "q_graph_modularity",
-    "q_ngram_entropy_rate", "q_stream_gopher_gate",
-    # round-6 registrations (sampled-eval / provenance / label-QA,
-    # then the DSIR resampling-degeneracy audit and the IVF probe
-    # tuning curve).
-    "q_pass_at_k", "q_cross_source_leakage", "q_annotator_agreement",
-    "q_dsir_ess", "q_ivf_probe_recall",
-]
-
-# Registrations AFTER the round-7 window froze go here; the round-8
-# window builds from this list plus refreshes. The rotation meta-test
-# unions it so sessions can append without touching the test.
-# Seeded with the two post-freeze round-6 registrations (the dedup
-# threshold-sensitivity curve and the PII prevalence audit).
-_ROUND8_QUEUE: list[str] = [
-    "q_dedup_threshold_sweep", "q_pii_prevalence",
-    "q_quality_lr_train", "q_filter_ablation", "q_dedup_survivor_bias",
-    "q_split_leakage", "q_encoding_audit", "q_sft_turn_audit",
-    "q_vocab_growth",
-]
-
-# Registrations AFTER the round-8 window froze go here; the round-9
-# window builds from this list plus refreshes, same contract.
-# Seeded with the round-7 registration (intra-document code-switching
-# audit — per-window lang-id over higher-order transforms), then the
-# round-8 registrations: the incremental-ingest near-dup MERGE and the
-# tokenizer encode→decode round-trip audit (VERDICT r7 item #6's two
-# named candidates).
-_ROUND9_QUEUE: list[str] = [
-    "q_code_switch_audit",
-    "q_dedup_merge_ingest",
-    "q_tokenizer_roundtrip",
-]
-
-# Registrations AFTER the round-9 window froze go here; the round-10
-# window builds from this list plus refreshes (the 3 r03 rows deferred
-# by round 9 — q_bloom_filter_join, q_interval_overlap, q_line_dedup —
-# then the oldest r04 rows), same contract.
-# Seeded with the round-9 registration: the incremental ANN index
-# MERGE (VERDICT r8 item #6's named candidate — the embedding twin of
-# q_dedup_merge_ingest).
-_ROUND10_QUEUE: list[str] = [
-    "q_ivf_merge_ingest",
-]
-
-# Registrations AFTER the round-10 window froze go here; the round-11
-# window builds from this list plus refreshes (the 4 r04 rows deferred
-# by round 10 — q_knn_pq, q_interpolate_linear, q_sketch_top_terms,
-# q_stats_moments — then the oldest r05 rows), same contract.
-# Seeded with the round-10 registration: the streaming ANN near-dup
-# gate (VERDICT r9 item #6's named candidate — the vector-side
-# streaming twin of q_stream_fuzzy_dedup, deploying q_ivf_merge_ingest's
-# frozen index against a vector stream).
-_ROUND11_QUEUE: list[str] = [
-    "q_stream_ivf_gate",
-]
-
-# Registrations AFTER the round-11 window froze go here; the round-12
-# window builds from this list plus refreshes (the 5 r05 rows deferred
-# by round 11 — see _R11_DEFERRED_R05 — then the oldest r06 rows),
-# same contract.
-_ROUND12_QUEUE: list[str] = []
-
-# Registrations AFTER the round-12 window froze go here; the round-13
-# window builds from this list plus refreshes (the 5 r06 rows deferred
-# by round 12 — see _R12_DEFERRED_R06 — then the oldest r07 rows),
-# same contract.
-_ROUND13_QUEUE: list[str] = []
-
-# Registrations AFTER the round-13 window froze go here; the round-14
-# window builds from this list plus refreshes (the 5 r07 rows deferred
-# by round 13 — see _R13_DEFERRED_R07 — then the oldest r08 rows),
-# same contract.
-_ROUND14_QUEUE: list[str] = []
-
-
-# Round-10 window, pre-staged (gated on the driver-committed
-# CORRECTNESS_r09.json): the 1-entry round-10 queue (the round-9 ANN
-# MERGE registration — after it lands, every registered query has a
-# driver row again), then the 3 r03 rows round 9 deliberately deferred
-# (q_bloom_filter_join, q_interval_overlap, q_line_dedup — VERDICT r8
-# "what's missing" #2: they must not slip past r10), then 46 of the 50
-# round-4 rows — after round 9 they are the OLDEST remaining driver
-# rows (six rounds stale when this window runs).  The 4 r04 rows
-# deferred to round 11 (q_knn_pq, q_interpolate_linear,
-# q_sketch_top_terms, q_stats_moments) are the ones with the strongest
-# standing alternate signal: all four sit in bench HEADLINE_41 (timed
-# every round), and the first two are sf-robustness representatives
-# besides.
-_ROUND10_WINDOW = _ROUND10_QUEUE + [
-    "q_bloom_filter_join", "q_interval_overlap", "q_line_dedup",
-    # r04 refreshes (latest row: round 4)
-    "q_array_ops", "q_bitwise_agg", "q_cdc_apply", "q_containment_pairs",
-    "q_date_arith", "q_drift_psi", "q_dup_span", "q_ewma",
-    "q_explode_terms", "q_feature_store_join", "q_grouping_id",
-    "q_grouping_sets", "q_hard_negatives_ann", "q_hll_uniques",
-    "q_incremental_dedup", "q_incremental_rollup", "q_inverted_index",
-    "q_json_extract", "q_label_propagation", "q_lateral_topn",
-    "q_map_ops", "q_max_by", "q_mmr_diversity", "q_mode_per_group",
-    "q_multimodal_decode", "q_ntile_cume", "q_null_ordering",
-    "q_order_limit", "q_pipeline_web_corpus", "q_prefix_dedup",
-    "q_profile_columns", "q_range_join", "q_rank_fusion",
-    "q_running_count_distinct", "q_scalar_iter_udf",
-    "q_shard_assignment", "q_snapshot_diff", "q_stream_drift_psi",
-    "q_stream_fuzzy_dedup", "q_string_funcs", "q_tfidf_cosine_pairs",
-    "q_try_arith", "q_unpivot", "q_user_gap_features", "q_variant_json",
-    "q_window_ignore_nulls",
-]
-
-
-# The 5 round-5 rows round 11 defers to round 12 — chosen for the
-# strongest standing alternate signal: q_global_shuffle and
-# q_skipgram_pairs sit in bench HEADLINE_41 (timed every round);
-# q_semdedup is scale-smoke-tracked with a fresh M=100 record;
-# q_kmeans_clusters' machinery (kmeans_assign) is exercised every
-# bench round by q_cluster_purity (HEADLINE + its own M=100 record);
-# and q_gopher_rules' rule set (shared GOPHER_STOPWORDS + the same
-# three in-row rules) is re-evaluated every bench round by the
-# HEADLINE q_stream_gopher_gate.  The 5th deferral makes room for the
-# round-10 registration at the queue front (windows are exactly 50).
-_R11_DEFERRED_R05 = [
-    "q_global_shuffle", "q_skipgram_pairs", "q_semdedup",
-    "q_kmeans_clusters", "q_gopher_rules",
-]
-
-# Round-11 window, pre-staged (gated on the driver-committed
-# CORRECTNESS_r10.json): the round-11 queue (the round-10 streaming
-# ANN gate registration), then the 4 r04 rows round 10 deliberately
-# deferred (all bench-HEADLINE_41 — they must not slip past r11),
-# then 45 of the 50 round-5 rows — after round 10 they are the OLDEST
-# remaining driver rows (six rounds stale when this window runs).
-# Derived from _ROUND5_WINDOW so a drifted name can't silently orphan
-# a row; the rotation meta-tests pin size, uniqueness, registration,
-# and the deferred rows' standing alternate signal.
-_ROUND11_WINDOW = _ROUND11_QUEUE + [
-    "q_knn_pq", "q_interpolate_linear", "q_sketch_top_terms",
-    "q_stats_moments",
-] + [n for n in _ROUND5_WINDOW if n not in _R11_DEFERRED_R05]
-
-
-# Round-8 window, pre-staged (gated on the driver-committed
-# CORRECTNESS_r07.json): the 9-entry round-8 queue (the late-round-6
-# registrations — after it lands, every registered query has a driver
-# row no older than... this is also the round where the LAST
-# never-checked query gets its first row), then the 41 OLDEST remaining
-# driver rows — exactly the 34 r01 rows and 7 r02 rows not refreshed by
-# the r6/r7 windows (computed from the committed CORRECTNESS_r0*.json
-# history), so after round 8 no query's latest hard signal predates
-# round 3.  q_mono_id rides along: its rows-only check is weak by
-# declared contract but it is the single oldest row in the ledger.
-_ROUND8_WINDOW = _ROUND8_QUEUE + [
-    # r01 refreshes (latest row: round 1)
-    "q_filter_neq", "q_fillna", "q_cast", "q_concat", "q_mono_id",
-    "q_sink_parquet_partitioned", "q_sink_csv_roundtrip",
-    "q_sink_orc_roundtrip", "q_sink_json_roundtrip",
-    "q_sql_entry_report", "q_ctas_insert", "q_join_left_outer", "q_join_semi", "q_join_anti",
-    "q_set_ops", "q_set_ops_all", "q_rollup", "q_cube", "q_pivot",
-    "q_window_analytics", "q_window_firstlast", "q_having_topn",
-    "q_scalar_subquery", "q_case_when_bucketing", "q_distinct_agg",
-    "q_median", "q_rolling_time_window", "q_quantiles", "q_gapfill_hourly",
-    "q_union_by_name", "q_nullsafe_join", "q_scd2_intervals",
-    "q_histogram", "q_string_agg",
-    # r02 refreshes (latest row: round 2)
-    "q_tpch_q4", "q_tpch_q6",
-    "q_stream_sliding_counts", "q_stream_session_windows",
-    "q_stream_user_stats", "q_stream_stream_join",
-    "q_stream_foreach_sink",
-]
-
-
-# Round-9 window, pre-staged (gated on the driver-committed
-# CORRECTNESS_r08.json): the 3-entry round-9 queue (the round-7
-# code-switch audit + the two round-8 registrations — after it lands,
-# every registered query has a driver row again), then 47 of the 50
-# round-3 rows — after round 8 they are the ONLY rows older than round
-# 4 (six rounds stale when this window runs).  The 3 r03 rows deferred
-# to round 10 (q_bloom_filter_join, q_interval_overlap, q_line_dedup)
-# are the ones with the strongest standing alternate signal: all three
-# sit in bench HEADLINE_41 (timed every round) on top of the local
-# differential sweep.
-_ROUND9_WINDOW = _ROUND9_QUEUE + [
-    "q_bigram_pmi", "q_bm25", "q_bpe_token_count", "q_bucketed_join",
-    "q_compaction", "q_contamination", "q_custom_sink",
-    "q_custom_source", "q_data_quality", "q_doc_chunking",
-    "q_domain_mix", "q_embed_decontaminate", "q_entropy", "q_funnel",
-    "q_hard_negatives", "q_hash_split", "q_merge_upsert",
-    "q_multimodal_bytes", "q_pii_redact", "q_pipeline_corpus_clean",
-    "q_quality_classifier", "q_quality_percentile",
-    "q_random_projection", "q_recursive_reachability", "q_repetition",
-    "q_retention_cohorts", "q_salted_agg", "q_salted_join",
-    "q_sample_per_group", "q_scan_binaryfile", "q_scan_json_corrupt",
-    "q_scan_json_schema", "q_scan_text_lines", "q_sequence_packing",
-    "q_shuffle_hash_hint", "q_stratified_sample", "q_stream_anti_dedup",
-    "q_stream_custom_source", "q_tfidf_top_terms", "q_triangle_count",
-    "q_udtf_spans", "q_unigram_ppl", "q_vocab_build",
-    "q_weighted_sample", "q_winnow_fingerprint", "q_zorder_layout",
-    "q_zscore_per_group",
-]
-
-
-# Round-7 window, pre-staged (gated on the driver-committed
-# CORRECTNESS_r06.json): the 15-entry round-7 queue (10 late-round-5
-# diagnostics + 5 round-6 registrations — after it lands, every
-# registered query has a driver row), then 35 refreshes of the OLDEST
-# remaining driver rows (r02: their last hard signal is five rounds
-# old — the TPC-H suite minus q4/q6 (dropped for the two late round-6
-# registrations; both are pure-Catalyst plans exercised by every local
-# sweep and q6 by the bench besides), the dedup/similarity/text cores,
-# and three streaming rows; the same anti-drift rationale as the r01
-# refreshes in the round-6 window).
-_ROUND7_WINDOW = _ROUND7_QUEUE + [
-    "q_tpch_q2", "q_tpch_q3", "q_tpch_q5",
-    "q_tpch_q7", "q_tpch_q8", "q_tpch_q9", "q_tpch_q10", "q_tpch_q11",
-    "q_tpch_q12", "q_tpch_q13", "q_tpch_q14", "q_tpch_q15", "q_tpch_q16",
-    "q_tpch_q17", "q_tpch_q18", "q_tpch_q19", "q_tpch_q20", "q_tpch_q21",
-    "q_tpch_q22",
-    "q_dedup_exact", "q_ngram_jaccard", "q_simhash", "q_dedup_clusters",
-    "q_dedup_keep_best", "q_edit_distance",
-    "q_knn_cosine", "q_embed_neardup", "q_embed_outliers",
-    "q_token_stats", "q_lang_id", "q_text_quality", "q_doc_fingerprint",
-    "q_stream_hourly_counts", "q_stream_dedup", "q_stream_static_join",
-]
-
-
-# Round-6 window, pre-staged (gated on the driver-committed
-# CORRECTNESS_r05.json): the 24-entry round-6 queue (15 round-4
-# operators + 9 stale rows-only refreshes), then the ENTIRE round-5
-# registration batch pulled forward — the window had free slots, so the
-# curation family gets driver signal one round early — then 14
-# refreshes of the OLDEST driver rows (r01: their last hard signal is
-# four rounds old; re-pinning the core parity surface guards against
-# regression drift the local suite alone can't prove to the judge).
-_ROUND6_WINDOW = _ROUND6_QUEUE + _ROUND5_BATCH + [
-    "q_flagship_star_rollup", "q_scan_project_rename", "q_filter_eq",
-    "q_dedup", "q_groupby_count", "q_tpch_q1", "q_join_agg_agg",
-    "q_join_dim_report", "q_join_multiway", "q_time_dim",
-    "q_row_number", "q_top_k_per_group", "q_sessionize", "q_asof_join",
-]
-
-
-# The 5 round-6 rows round 12 defers to round 13 — all five sit in
-# bench HEADLINE (timed every round; GRADUATED_R4/R5 members), and
-# four carry their own M=100 scale-smoke ledger rows besides.
-_R12_DEFERRED_R06 = [
-    "q_kn_bigram_ppl", "q_bpe_train", "q_ann_recall",
-    "q_cluster_purity", "q_multimodal_dhash",
-]
-
-# Round-12 window, pre-staged (gated on the driver-committed
-# CORRECTNESS_r11.json): the round-12 queue (registrations after the
-# round-11 window froze), then the 5 r05 rows round 11 deliberately
-# deferred (all carrying standing bench/smoke/machinery signal — they
-# must not slip past r12), then 45 of the 50 round-6 rows — after
-# round 11 they are the OLDEST remaining driver rows.  Derived from
-# _ROUND6_WINDOW so a drifted name can't silently orphan a row; if
-# anything registers into _ROUND12_QUEUE, defer equally many further
-# r06 rows (the meta-test pins len == 50).
-_ROUND12_WINDOW = _ROUND12_QUEUE + _R11_DEFERRED_R05 + [
-    n for n in _ROUND6_WINDOW if n not in _R12_DEFERRED_R06
-]
-
-
-# The 5 round-7 rows round 13 defers to round 14 — all five sit in
-# bench HEADLINE_41 (timed every round, the strongest standing
-# alternate signal), and q_ngram_jaccard besides carries its own
-# scale-smoke M=10/30/100 ledger rows.
-_R13_DEFERRED_R07 = [
-    "q_dedup_exact", "q_ngram_jaccard", "q_simhash",
-    "q_knn_cosine", "q_embed_neardup",
-]
-
-# Round-13 window, pre-staged (gated on the driver-committed
-# CORRECTNESS_r12.json): the round-13 queue (registrations after the
-# round-12 window froze), then the 5 r06 rows round 12 deliberately
-# deferred (all bench-HEADLINE — they must not slip past r13), then
-# 45 of the 50 round-7 rows — after round 12 they are the OLDEST
-# remaining driver rows.  Derived from _ROUND7_WINDOW so a drifted
-# name can't silently orphan a row; if anything registers into
-# _ROUND13_QUEUE, defer equally many further r07 rows (the meta-test
-# pins len == 50).
-_ROUND13_WINDOW = _ROUND13_QUEUE + _R12_DEFERRED_R06 + [
-    n for n in _ROUND7_WINDOW if n not in _R13_DEFERRED_R07
-]
-
-
-# The 5 round-8 rows round 14 defers to round 15 — all five sit in
-# bench HEADLINE (timed every round); q_tpch_q6 besides is in the
-# like-for-like HEADLINE_41 series, and the other four each carry
-# their own M=100 scale-smoke ledger rows.
-_R14_DEFERRED_R08 = [
-    "q_tpch_q6", "q_dedup_threshold_sweep", "q_quality_lr_train",
-    "q_filter_ablation", "q_split_leakage",
-]
-
-# Round-14 window, pre-staged (gated on the driver-committed
-# CORRECTNESS_r13.json): the round-14 queue (registrations after the
-# round-13 window froze), then the 5 r07 rows round 13 deliberately
-# deferred (all bench-HEADLINE_41 — they must not slip past r14), then
-# 45 of the 50 round-8 rows — after round 13 they are the OLDEST
-# remaining driver rows.  Derived from _ROUND8_WINDOW so a drifted
-# name can't silently orphan a row; if anything registers into
-# _ROUND14_QUEUE, defer equally many further r08 rows (the meta-test
-# pins len == 50).
-_ROUND14_WINDOW = _ROUND14_QUEUE + _R13_DEFERRED_R07 + [
-    n for n in _ROUND8_WINDOW if n not in _R14_DEFERRED_R08
-]
-
-
-# Single-source rotation ladder (VERDICT r11 #1): one (gate_round,
-# window) entry per pre-staged round, highest gate first.  A window
-# activates when the driver-committed CORRECTNESS_r{gate}.json exists;
-# _rotate_registry AND the rotation meta-tests both consume THIS table,
-# so staging a new round is exactly one entry here (plus the window
-# definition) and the meta-test can never again go stale when the
-# driver commits a new CORRECTNESS file after round close.
-_WINDOW_LADDER: list[tuple[int, list[str]]] = [
-    (13, _ROUND14_WINDOW),
-    (12, _ROUND13_WINDOW),
-    (11, _ROUND12_WINDOW),
-    (10, _ROUND11_WINDOW),
-    (9, _ROUND10_WINDOW),
-    (8, _ROUND9_WINDOW),
-    (7, _ROUND8_WINDOW),
-    (6, _ROUND7_WINDOW),
-    (5, _ROUND6_WINDOW),
-    (4, _ROUND5_WINDOW),
-    (3, _ROUND4_WINDOW),
-]
-
-
-def _swept(round_no: int) -> bool:
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    return os.path.exists(
-        os.path.join(repo, f"CORRECTNESS_r{round_no:02d}.json")
-    )
-
-
-def _active_window() -> tuple[int, list[str]]:
-    """Return (gate_round, window) for the highest ladder rung whose
-    CORRECTNESS file the driver has committed; (0, round-3 frozen
-    order) before any gate file exists.  Single source of truth for
-    both production rotation and the rotation meta-tests."""
-    for gate, window in _WINDOW_LADDER:
-        if _swept(gate):
-            return gate, window
-    return 0, _ROUND3_WINDOW + _ROUND4_QUEUE
-
-
-def _rotate_registry() -> None:
-    gate, front = _active_window()
-    # Rows already carrying a driver signal go to the back: the seed
-    # r01/r02 ledger plus every window whose gate round has passed
-    # (ascending, so relative back-of-registry order is stable).
-    already = list(_ALREADY_DRIVER_CHECKED)
-    if gate > 0:
-        already += _ROUND3_WINDOW
-        for g, window in sorted(_WINDOW_LADDER, key=lambda t: t[0]):
-            if g < gate:
-                already += window
-
-    ordered: dict[str, Query] = {}
-    for name in front:
-        if name in REGISTRY:
-            ordered[name] = REGISTRY[name]
-    for name, q in REGISTRY.items():  # anything new keeps relative order
-        if name not in ordered and name not in already:
-            ordered[name] = q
-    for name in already:  # green rows from prior rounds go last
-        if name in REGISTRY and name not in ordered:
-            ordered[name] = REGISTRY[name]
-    REGISTRY.clear()
-    REGISTRY.update(ordered)
-
-
-_rotate_registry()
+import big_data_projects_spark.queries_llm  # noqa: F401,E402
+import big_data_projects_spark.queries_corpus  # noqa: F401,E402
+import big_data_projects_spark.queries_streaming  # noqa: F401,E402
+import big_data_projects_spark.queries_series  # noqa: F401,E402
+import big_data_projects_spark.queries_sql_api  # noqa: F401,E402
+import big_data_projects_spark.queries_curation  # noqa: F401,E402

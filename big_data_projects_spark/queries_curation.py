@@ -95,8 +95,8 @@ def q_dsir_weights(spark, sf_dir):
     conditional-count groupBy — map-side combined to nothing, totals
     derived from the same 128 cells), then the ratio table rides as a
     ONE-ROW broadcast map and each document's (n_toks, log_weight)
-    is computed ENTIRELY IN-ROW (r13, the pq_topk pattern; VERDICT r12
-    item #7): no per-token broadcast join, no doc-keyed shuffle of the
+    is computed ENTIRELY IN-ROW (r13, the pq_topk pattern): no per-token
+    broadcast join, no doc-keyed shuffle of the
     token stream — the scoring pass is a pure map over the corpus.
     The decimal fold is exact integer-scaled addition (order-free), so
     the in-row sequential fold is bit-identical to the former
@@ -743,7 +743,7 @@ def q_bt_reward(spark, sf_dir):
             # cadence A/B-measured 3.6 -> 6.2 s (the doubled plan depth
             # costs Catalyst more than the saved action; BASELINE.md
             # round 6).  eager=False measured and REJECTED in r13
-            # (VERDICT r12 item #5's pipelined-rounds idea): 4.4 ->
+            # (the pipelined-rounds idea): 4.4 ->
             # 5.2 s in a controlled A/B — under AQE a "lazy"
             # localCheckpoint still executes its shuffle stages at
             # toRdd time, and the unpersisted per-round result stage
@@ -1291,8 +1291,8 @@ def q_lsh_quality(spark, sf_dir):
         .select("doc_a", "doc_b")
         .distinct()
     )
-    # Single-pass conditional aggregation (r13, guide §2.4; VERDICT r12
-    # item #3): the former shape persisted cand AND truth, ran three
+    # Single-pass conditional aggregation (r13, guide §2.4): the former
+    # shape persisted cand AND truth, ran three
     # separate count jobs plus a cand⋈truth hit join, and crossJoined
     # the scalars.  Both relations are pair-unique by construction
     # (distinct / groupBy upstream), so tagging each side and folding
@@ -2377,8 +2377,7 @@ def q_ngram_entropy_rate(spark, sf_dir):
 
 # ---------------------------------------------------------------------------
 # Round-6 additions: sampled-eval, provenance-leakage, and label-QA
-# views — each named for the pipeline gap its family table lacked
-# (VERDICT r5 item #7).
+# views — each named for the pipeline gap its family table lacked.
 # ---------------------------------------------------------------------------
 
 PASS_AT_K_PROBLEMS = 25  # deterministic md5 bucketing of docs into problems
@@ -2850,7 +2849,7 @@ def q_ivf_probe_recall(spark, sf_dir):
             F.col("vec_id").alias("qid"), F.col("embedding").alias("__qv")
         )
         .persist()  # pranks AND scored read it: one md5 order-by scan,
-        # not two (ADVICE r6)
+        # not two
     )
     centroids = (
         emb.select("label", F.posexplode("embedding").alias("pos", "v"))
@@ -4189,7 +4188,7 @@ def q_sft_turn_audit(spark, sf_dir):
     # n_turns == 0 (empty/NULL text) must yield EMPTY turn arrays: a bare
     # sequence(0, -1) descends to [0, -1] and the downstream
     # element_at(roles, 0) would throw, where the DuckDB oracle's
-    # out-of-range list index returns NULL (ADVICE r6).
+    # out-of-range list index returns NULL.
     idx = F.when(
         F.col("n_turns") >= 1,
         F.sequence(F.lit(0), (F.col("n_turns") - 1).cast("int")),

@@ -889,7 +889,7 @@ def q_ivf_merge_ingest(spark, sf_dir):
     return S.ivf_merge_ingest(
         # bits_per_band pinned: the oracle embeds the 8-bit planes as
         # literals, so buckets must be static across engines and SFs.
-        # The operator DEFAULT derives lsh_bits_for(n) (VERDICT r11 #2).
+        # The operator DEFAULT derives lsh_bits_for(n).
         emb, _merge_batch_flag, dim=64, n_probe=2, threshold=0.3,
         bits_per_band=8,
     )
@@ -3865,7 +3865,7 @@ def q_ann_recall(spark, sf_dir):
         .limit(20)
         .persist()  # every scoring path re-joins it: one md5 order-by
         # corpus scan, not one per path (the q_ivf_probe_recall
-        # ADVICE-r6 pattern)
+        # pattern)
     )
     # Both scoring passes run panel×corpus interpreted dot folds in
     # the corpus scan stage — single-threaded on a one-row-group
@@ -4422,7 +4422,7 @@ def q_matryoshka_recall(spark, sf_dir):
         .limit(20)
         .persist()  # every scoring path re-joins it: one md5 order-by
         # corpus scan, not one per path (the q_ivf_probe_recall
-        # ADVICE-r6 pattern)
+        # pattern)
     )
     # Both scoring passes run panel×corpus interpreted dot folds in
     # the corpus scan stage — single-threaded on a one-row-group

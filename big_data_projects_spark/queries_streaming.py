@@ -829,7 +829,7 @@ def _stream_ivf_oracle() -> str:
 def q_stream_ivf_gate(spark, sf_dir):
     """Streaming ANN near-dup gate — the vector-side twin of
     q_stream_fuzzy_dedup and the streaming deployment of
-    q_ivf_merge_ingest's frozen index (VERDICT r9 #6): a STATIC
+    q_ivf_merge_ingest's frozen index: a STATIC
     IVF+LSH index built from the existing corpus (vec_id % 3 != 0 —
     frozen centroids + the corpus (cell, band, bucket) relation) gates
     a STREAM of incoming vectors.  Per micro-batch, each incoming

@@ -20,11 +20,11 @@ from pyspark.sql import DataFrame, SparkSession
 @dataclass(frozen=True)
 class Query:
     spark: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None = None  # None → driver records a rows-only check
+    oracle: str | None = None  # None → rows-only check, no value hash
     # The un-wrapped builder (no pre-build cache/GC hygiene): for
     # callers that do their own session hygiene OUTSIDE a timed section
-    # (bench.py) so the wrapper's clearCache+gc never lands in a
-    # measured interval.
+    # (perfbench, tools/profile_query.py) so the wrapper's clearCache+gc
+    # never lands in a measured interval.
     raw: Callable[[SparkSession, str], DataFrame] | None = None
 
 

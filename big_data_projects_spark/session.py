@@ -36,8 +36,9 @@ _REQUIRED_RUNTIME_CONF = {
     # pinning the defaults here means every OTHER builder restores
     # them, so an override leaks no further than the next build in the
     # same session (harnesses that care about the very last query call
-    # ensure_runtime_conf once more after materializing it — bench.py
-    # does).  All three values are the Spark 4 defaults.
+    # ensure_runtime_conf once more after materializing it —
+    # tools/profile_query.py does; perfbench calls it before every
+    # operation).  All three values are the Spark 4 defaults.
     "spark.sql.autoBroadcastJoinThreshold": "10485760",
     "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
     "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "10GB",

@@ -55,7 +55,7 @@ def _staged_source(src: str, prefix: str) -> str:
     nests its part files one level down per partition column, and a
     single-level flatten would symlink those partition directories —
     reintroducing the same silent zero/partial-row skip one level
-    deeper (ADVICE r10).  Note the flatten drops partition-column
+    deeper.  Note the flatten drops partition-column
     values encoded only in directory names; sources staged here carry
     their columns in the data files (the testdata/scale-smoke shape)."""
     stage = _STAGE_CACHE.get(src)
@@ -64,7 +64,7 @@ def _staged_source(src: str, prefix: str) -> str:
     stage = tempfile.mkdtemp(prefix=prefix)
     if os.path.isdir(src):
         entries = []
-        # followlinks=False (ADVICE r11 #4): Spark-written sources nest
+        # followlinks=False: Spark-written sources nest
         # REAL directories (partitionBy subdirs), never symlinked ones,
         # and following directory symlinks both re-traverses the exact
         # shape the flatten exists to avoid staging and hangs forever

@@ -17,7 +17,7 @@ from big_data_projects_spark.queries import REGISTRY
 
 # ---------------------------------------------------------------------------
 # Suite ownership.  Every oracle-backed query runs the differential
-# comparison in exactly ONE test module (ADVICE r6: overlapping prefix
+# comparison in exactly ONE test module (overlapping prefix
 # lists had 59 queries running the full oracle compare 2-3x per suite
 # run — pure duplicated wall-time).  Ownership is first-match in
 # _SUITE_ORDER; anything unclaimed falls to the residual "core" suite,

@@ -415,7 +415,7 @@ def test_sft_turn_audit_parses_materialized_structure(spark):
 
 
 def test_sft_turn_audit_tolerates_empty_and_null_text(spark, tmp_path):
-    """ADVICE r6: an empty/NULL-text document yields n_turns=0; the
+    """An empty/NULL-text document yields n_turns=0; the
     audit must return a row (ends_user / role_viol / empty_turn all 0
     contributions) rather than throw from element_at(roles, 0) or a
     descending sequence(0, -1).  The DuckDB oracle's out-of-range list

@@ -1,7 +1,7 @@
-"""Mechanical documentation of the two environment-limited absences
-(VERDICT r03 'What's missing' items 3-4): the assertions fail loudly
-the moment the environment gains the capability, so the absence docs in
-SURVEY.md / queries_streaming.py can never silently go stale."""
+"""Mechanical documentation of the two environment-limited absences:
+the assertions fail loudly the moment the environment gains the
+capability, so the absence docs in SURVEY.md / queries_streaming.py
+can never silently go stale."""
 
 from __future__ import annotations
 

@@ -328,7 +328,7 @@ def test_connected_components_empty_edges(spark):
 
 
 def test_connected_components_releases_round_checkpoints(spark):
-    """r13 (ADVICE r12 #1): each round's collect retires the PREVIOUS
+    """r13: each round's collect retires the PREVIOUS
     round's localCheckpoint blocks, and the edge relation's blocks are
     freed at loop exit — peak checkpoint storage is O(1) rounds, not
     O(rounds).  Only the FINAL labels relation (which the caller
@@ -978,7 +978,7 @@ def test_interval_overlap_emits_each_pair_exactly_once(spark):
 
 
 def test_lsh_neardup_recall_at_10x_corpus(spark):
-    """VERDICT r02 item #4: pin q_embed_lsh_neardup's recall at smoke
+    """Pin q_embed_lsh_neardup's recall at smoke
     scale. A 10x replica corpus (the scale_smoke construction: per-
     replica deterministic sign flips preserve intra-replica geometry
     while decorrelating replicas) with the signature width DERIVED from
@@ -1452,7 +1452,7 @@ def test_minhash_merge_ingest_verdict_precedence(spark):
 
 
 def test_ivf_merge_default_width_derives_lsh_bits_for(spark, monkeypatch):
-    """VERDICT r11 #2: the operator's DEFAULT signature width must be
+    """The operator's DEFAULT signature width must be
     the scaled rule, not a pinned int — bits_per_band=None derives
     lsh_bits_for(count(emb)) exactly once, and the derived default
     reproduces the output of passing that width explicitly.  An
@@ -1545,7 +1545,7 @@ def test_ivf_merge_ingest_verdict_precedence_and_routing(spark):
 
 
 def test_ivf_merge_ingest_degenerate_similarity_routes_last(spark):
-    """ADVICE r9 #1: cosine to a zero-norm centroid (or from a
+    """Cosine to a zero-norm centroid (or from a
     zero-norm vector) is NaN (0/0); unguarded, Spark ranks NaN as the
     LARGEST double, which would route every vector into the degenerate
     cell.  The in-row routing pins NaN/NULL csims to -inf, so (a) a
@@ -1583,7 +1583,7 @@ def test_ivf_merge_ingest_degenerate_similarity_routes_last(spark):
 
 
 def test_cosine_consumers_total_on_zero_norm_vectors(spark):
-    """ADVICE r10 #3: EVERY ranking/threshold cosine consumer must be
+    """EVERY ranking/threshold cosine consumer must be
     total on zero-norm vectors — under Spark 4 ANSI mode the raw
     division is a runtime ABORT (the hazard class fixed for
     ivf_merge_ingest in r10, applied unevenly until now).  A zero-norm
@@ -1630,7 +1630,7 @@ def test_cosine_consumers_total_on_zero_norm_vectors(spark):
     ivf = ivf_topk(emb, query_id=1, k=2, n_probe=2).collect()
     assert [r["vec_id"] for r in ivf] == [2, 4]
 
-    # mmr_select (ADVICE r11 #1): pool >= corpus pulls the zero-norm
+    # mmr_select: pool >= corpus pulls the zero-norm
     # row's NULL sim into the candidate set — the greedy loop must not
     # TypeError on None; the degenerate row is simply never a pick.
     from big_data_projects_spark.operators.similarity import mmr_select
@@ -1650,7 +1650,7 @@ def test_cosine_consumers_total_on_zero_norm_vectors(spark):
 
 
 def test_band_signature_modes_agree_on_null_vectors(spark):
-    """ADVICE r11 #2: sig_mode is documented as a pure physical-
+    """sig_mode is documented as a pure physical-
     strategy knob, so the two modes must agree on DEGENERATE input
     too: a NULL embedding buckets as all-zero bits in the HOF fold
     (NULL dot > 0 is NULL -> otherwise(0)), and the arrow projector
@@ -1677,7 +1677,7 @@ def test_band_signature_modes_agree_on_null_vectors(spark):
 
 
 def test_band_signature_modes_agree_on_testdata(spark):
-    """VERDICT r10 #3: the Arrow matmul signature projection
+    """The Arrow matmul signature projection
     (band_signature_frame mode="arrow" — the production mode for wide
     embeddings, measured 9× faster than the HOF fold at 200k×64-dim)
     must produce the SAME band buckets as the shipped hash-matched HOF

@@ -1,7 +1,7 @@
 """Meta-guard: every oracle-backed query in the registry must be picked up
 by at least one differential-oracle test module.
 
-ADVICE (round 2) flagged six queries that matched no module's prefix
+Round 2 found six queries that matched no module's prefix
 filter and therefore had zero oracle coverage despite the repo's
 convention.  The prefix lists have since been fixed, but nothing stopped
 the same lapse from recurring for the *next* new query — this test does.
@@ -43,7 +43,7 @@ def test_every_oracle_backed_query_has_a_test():
 
 
 def test_every_oracle_backed_query_runs_in_exactly_one_suite():
-    """ADVICE r6: overlapping prefix lists had 59 queries running the
+    """Overlapping prefix lists had 59 queries running the
     full differential compare 2-3x per suite run.  Ownership now lives
     in tests/oracle_utils.py; this pins the partition."""
     from collections import Counter

@@ -488,7 +488,7 @@ def test_contamination_single_doc_aggregate(spark):
         f"contamination regressed to {len(doc_exchanges)} doc-keyed "
         "exchanges (expected the single fused aggregate)"
     )
-    # Structural twin of the exchange-count pin (ADVICE r9 #2: the
+    # Structural twin of the exchange-count pin (the
     # regex above is explain-format-sensitive): exactly ONE
     # partial+final HashAggregate pair keyed on doc_id ALONE — the
     # fused probe aggregate.  The old sizes⋈hits shape had two pairs.

@@ -198,7 +198,7 @@ def test_available_now_honors_rate_limit(spark, tmp_path):
 def test_staged_source_dir_is_reused_per_process():
     """Repeated sweeps must not leak one mkdtemp per stream build: the
     staging dir (a symlink to the read-only source parquet) is cached
-    per source path (ADVICE r03: the unbounded temp-dir leak class)."""
+    per source path (the unbounded temp-dir leak class)."""
     from big_data_projects_spark.streaming.core import _staged_source
 
     a = _staged_source(f"{SF}/events.parquet", "bdp_test_stage_")
@@ -227,7 +227,7 @@ def test_staged_source_flattens_directory_sources(tmp_path, spark):
     staged = os.listdir(stage)
     # every entry is a data file (no _SUCCESS, no nested dir) — a real
     # OR symlinked directory in the stage dir would be silently skipped
-    # by the file-stream source (ADVICE r10: the earlier guard passed
+    # by the file-stream source (the earlier guard passed
     # real directories)
     assert staged and all("part-" in e for e in staged)
     assert all(not os.path.isdir(os.path.join(stage, e)) for e in staged)
@@ -240,7 +240,7 @@ def test_staged_source_flattens_hive_partitioned_sources(tmp_path, spark):
     """A hive-PARTITIONED source (partitionBy) nests part files one
     level down per partition value; a single-level flatten would stage
     the partition DIRECTORIES, which the file-stream source silently
-    skips — the same zero-row failure one level deeper (ADVICE r10).
+    skips — the same zero-row failure one level deeper.
     The walk must recurse so every leaf part file is staged flat.
     (Partition-column values live only in the directory names, so the
     flattened stage drops that column — callers staging partitioned
@@ -269,7 +269,7 @@ def test_staged_source_flattens_hive_partitioned_sources(tmp_path, spark):
 
 
 def test_staged_source_survives_symlink_cycles(tmp_path, spark):
-    """ADVICE r11 #4: a symlink loop inside a staged source directory
+    """A symlink loop inside a staged source directory
     must not hang the flatten (os.walk followlinks=False — Spark
     writes real nested directories, never symlinked ones).  Symlinked
     FILES at any level are still staged; the directory symlink itself

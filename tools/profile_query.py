@@ -1,15 +1,15 @@
 #!/usr/bin/env python
 """Targeted per-query profiler for optimization work: times force_count
-(min-of-N, bench-identical forcing + hygiene) for the named queries at
+(min-of-N, all-columns forcing + hygiene) for the named queries at
 $SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS], and optionally dumps
 the formatted physical plan.
 
 Usage: python tools/profile_query.py name[,name...] [--runs N] [--plan DIR]
        python tools/profile_query.py --plans-all DIR   # dump plans only
 
-Timing methodology matches bench.py run_once exactly (clearCache + JVM
-gc outside the timed region, force_count inside, ensure_runtime_conf
-after) so numbers are comparable to bench artifacts from the same host.
+Timing methodology: the un-wrapped ``Query.raw`` builder, clearCache +
+JVM gc outside the timed region, force_count inside, ensure_runtime_conf
+after — the same hygiene perfbench does around its own operations.
 """
 
 from __future__ import annotations
@@ -54,7 +54,7 @@ def main() -> None:
 
     spark = get_spark(app_name="bdp-profile", cpus=cpus, shuffle_partitions=cpus)
 
-    # Warm page cache + codegen exactly as bench.py does.
+    # Warm page cache + codegen: every column read once per table.
     from pyspark.sql import functions as F
     from big_data_projects_spark.data import TABLES, load_table
 
@@ -86,7 +86,7 @@ def main() -> None:
         return
 
     if runs < 1:
-        # ADVICE r12 #3: --runs 0 used to NameError on the unbound
+        # --runs 0 used to NameError on the unbound
         # sample count below; fail loudly with the reason instead.
         raise SystemExit(f"--runs must be >= 1 (got {runs})")
     out: dict[str, dict] = {}
@@ -106,7 +106,7 @@ def main() -> None:
         print(f"{name}: min={min(samples)} rows={n} samples={samples}", flush=True)
         if plan_dir:
             os.makedirs(plan_dir, exist_ok=True)
-            # Same failure tolerance as --plans-all (ADVICE r12 #3): a
+            # Same failure tolerance as --plans-all: a
             # side-effecting builder must not abort the timing loop.
             try:
                 txt = plan_text(name)

@@ -110,7 +110,7 @@ QUERIES = [
     # sublinearly with the corpus — this measures both claims.
     "q_kn_bigram_ppl",
     "q_bpe_train",
-    # round-5 additions — the evaluation family (VERDICT r4 item #6):
+    # round-5 additions — the evaluation family:
     # recall@10 and matryoshka truncation score a FIXED query panel
     # against a growing corpus (risk: the panel×corpus scoring join);
     # purity is kmeans_assign + invariant aggregates (risk: the
@@ -136,8 +136,8 @@ QUERIES = [
     "q_lsh_quality",
     "q_minhash_est",
     "q_bt_reward",
-    # round-6 additions — the connected-components family (VERDICT r5
-    # item #5): their PARTS are tracked above (the shingle-pair
+    # round-6 additions — the connected-components family: their PARTS
+    # are tracked above (the shingle-pair
     # machinery) but CC round count grows with component diameter, and
     # a corpus whose near-dup graph percolates would multiply the
     # per-round join cost by extra rounds — exactly the compositional
@@ -241,7 +241,7 @@ QUERIES = [
 #   the M=100 disk blow-up of the pinned variant (bucket occupancy
 #   x100 ⇒ verify mass ~x10^4, exceeding this box's ~79 GB scratch) is
 #   exactly what the scaling rule exists to prevent — this measures
-#   the fix instead of asserting it (VERDICT r9 item #4).
+#   the fix instead of asserting it.
 #   r12 M=300 finding (2026-08-16): even at the SCALED width, the
 #   pre-r12 operator shape — embedding vectors riding every per-band
 #   candidate row through the cross-band dropDuplicates sort — spilled
@@ -396,8 +396,8 @@ EXTRA_BUILDERS = {
 SLACK = 3.0
 
 # Queries whose OUTPUT legitimately grows superlinearly with corpus
-# replication, eligible for the `ok_output_driven` verdict (r8; ADVICE
-# r7 #1).  Membership is a HUMAN adjudication, not a ratio inference:
+# replication, eligible for the `ok_output_driven` verdict (r8).
+# Membership is a HUMAN adjudication, not a ratio inference:
 # a join fan-out bug also produces quadratic rows at flat per-row
 # cost, so the ratios alone can't distinguish it from legitimate
 # pair-emission — an unlisted query stays SUPERLINEAR for review even
@@ -410,7 +410,7 @@ OUTPUT_SUPERLINEAR_ALLOWLIST = {
     # The PINNED-8-bit registered variant (oracle-static width): at
     # M=100 its bucket occupancy grows x100 and the verify mass ~x10^4
     # exceeds this box's scratch disk — the allowlist entry now carries
-    # a MEASURED fix (VERDICT r9 item #4): the production scaled-width
+    # a MEASURED fix: the production scaled-width
     # mode below ran M=100 in 97.7 s (13.1x wall for 100x data,
     # 3.46M output pairs = 2092x, per-pair cost FELL 160x, verdict ok;
     # 2026-08-16).  Callers at scale use lsh_bits_for (the operator's
@@ -599,7 +599,7 @@ def main() -> None:
         t1, n1 = base[name]
         tm, nm = big[name]
         wall_ratio = tm / max(t1, 1e-9)
-        # Per-emitted-row cost growth (VERDICT r6 item #5): an operator
+        # Per-emitted-row cost growth: an operator
         # whose xM run emits far more rows (duplicate-pair queries whose
         # OUTPUT legitimately grows superlinearly with corpus size, e.g.
         # q_embed_lsh_neardup's threshold artifact) can exceed the wall
