@@ -246,20 +246,20 @@ def minhash_signatures(
     """
     sh = shingle_df if shingle_df is not None else shingles(df, id_col, text_col, n)
     # bigint shingles are already uniform hashes — fold to the 31-bit
-    # domain directly; string (md5) shingles get hashed first.
+    # domain directly; string (md5) shingles get hashed first.  Each
+    # aggregate goes in as SQL text: a few py4j calls, not dozens.
     base = (
-        F.pmod("shingle", F.lit(_MERSENNE31))
+        f"pmod(shingle, {_MERSENNE31})"
         if dict(sh.dtypes).get("shingle") == "bigint"
-        else F.pmod(F.xxhash64("shingle"), F.lit(_MERSENNE31))
+        else f"pmod(xxhash64(shingle), {_MERSENNE31})"
     )
     mins = [
-        F.min((base * F.lit(a) + F.lit(b)) % F.lit(_MERSENNE31)).alias(f"h{i}")
+        F.expr(f"min(({base} * {a} + {b}) % {_MERSENNE31}) AS h{i}")
         for i, (a, b) in enumerate(_PERMS)
     ]
-    agg = sh.groupBy(id_col).agg(*mins)
-    return agg.select(
-        F.col(id_col),
-        F.array(*[F.col(f"h{i}") for i in range(NUM_PERM)]).alias("sig"),
+    hs = ", ".join(f"h{i}" for i in range(NUM_PERM))
+    return sh.groupBy(id_col).agg(*mins).select(
+        F.col(id_col), F.expr(f"array({hs}) AS sig")
     )
 
 
@@ -272,32 +272,24 @@ def band_buckets(
     xxh64 mode is the fastest production variant. Shared by the batch
     self-join pairing AND the streaming corpus-index lookup."""
 
-    def bucket_key(b: int):
-        slice_cols = [
-            F.col("sig")[i] for i in range(b * LSH_ROWS, (b + 1) * LSH_ROWS)
-        ]
+    def bucket_key(b: int) -> str:
+        cells = ", ".join(
+            f"sig[{i}]" for i in range(b * LSH_ROWS, (b + 1) * LSH_ROWS)
+        )
         if hasher == "md5":
             return (
-                F.conv(
-                    F.substring(F.md5(F.concat_ws(":", *slice_cols)), 1, 15),
-                    16, 10,
-                ).cast("long")
+                f"CAST(conv(substring(md5(concat_ws(':', {cells})), 1, 15), "
+                "16, 10) AS BIGINT)"
             )
-        return F.xxhash64(*slice_cols)
+        return f"xxhash64({cells})"
 
+    # One SQL-text projection for all LSH_BANDS structs.
+    bands = ", ".join(
+        f"named_struct('band', {b}, 'bucket', {bucket_key(b)})"
+        for b in range(LSH_BANDS)
+    )
     return sig.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        bucket_key(b).alias("bucket"),
-                    )
-                    for b in range(LSH_BANDS)
-                ]
-            )
-        ).alias("bb"),
+        F.col(id_col), F.expr(f"explode(array({bands})) AS bb")
     ).select(id_col, "bb.band", "bb.bucket")
 
 
@@ -518,6 +510,13 @@ SIMHASH_SEGMENTS = 4
 SIMHASH_SEG_BITS = SIMHASH_BITS // SIMHASH_SEGMENTS
 
 
+def _check_simhash_bits(bits: int) -> None:
+    # Whole md5 hex chars that fit a signed BIGINT: any other width
+    # silently drops low bits or overflows the cast.
+    if not (0 < bits <= SIMHASH_BITS and bits % 4 == 0):
+        raise ValueError(f"simhash bits must be 4..{SIMHASH_BITS}, step 4: {bits}")
+
+
 def simhash(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -534,6 +533,7 @@ def simhash(
     """
     from big_data_projects_spark.data import spread_small_scan
 
+    _check_simhash_bits(bits)
     toks = tokens(text_col)
     # Tokenize + explode + one md5 per token + ``bits`` partial sums
     # all run in the scan stage — single-threaded on a one-row-group
@@ -549,24 +549,19 @@ def simhash(
             .alias("h"),
         )
     )
+    # Votes and the bit accumulator go in as SQL text (see
+    # minhash_signatures): as Column chains they cost ~9,000 py4j calls.
     votes = [
-        F.sum(
-            F.when(F.shiftright(F.col("h"), i).bitwiseAND(1) == 1, 1).otherwise(-1)
-        ).alias(f"v{i}")
+        F.expr(f"sum(CASE WHEN shiftright(h, {i}) & 1 = 1 THEN 1 ELSE -1 END) AS v{i}")
         for i in range(bits)
     ]
-    agg = exploded.groupBy(id_col).agg(*votes)
-    acc = F.lit(0).cast("long")
-    for i in range(bits):
-        acc = acc + F.when(F.col(f"v{i}") > 0, F.lit(1 << i)).otherwise(0).cast("long")
-    return agg.select(F.col(id_col), acc.alias("simhash"))
-
-
-def simhash32(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Legacy 32-bit variant (kept for comparison tests)."""
-    return simhash(df, id_col, text_col, bits=32)
+    acc = "CAST(0 AS BIGINT)" + "".join(
+        f" + CAST(CASE WHEN v{i} > 0 THEN {1 << i} ELSE 0 END AS BIGINT)"
+        for i in range(bits)
+    )
+    return exploded.groupBy(id_col).agg(*votes).select(
+        F.col(id_col), F.expr(f"{acc} AS simhash")
+    )
 
 
 def simhash_near_pairs(
@@ -645,6 +640,7 @@ def simhash_oracle_sql(
     bits: int = SIMHASH_BITS,
 ) -> str:
     """Generate the DuckDB twin of simhash (same bit votes, same hash)."""
+    _check_simhash_bits(bits)
     vote_cols = ",\n          ".join(
         f"SUM(CASE WHEN (h >> {i}) & 1 = 1 THEN 1 ELSE -1 END) AS v{i}"
         for i in range(bits)

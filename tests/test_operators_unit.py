@@ -19,6 +19,7 @@ from big_data_projects_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash,
     simhash_near_pairs,
+    simhash_oracle_sql,
 )
 from big_data_projects_spark.operators.multimodal import (
     _byte_features,
@@ -185,6 +186,17 @@ def test_simhash_identical_docs_equal_hash(spark):
     hashes = {r.doc_id: r.simhash for r in simhash(df).collect()}
     assert hashes[1] == hashes[2]
     assert 0 <= hashes[1] < (1 << SIMHASH_BITS)
+
+
+@pytest.mark.parametrize("bits", [0, 30, 64])
+def test_simhash_rejects_bits_that_are_not_whole_md5_hex_chars(spark, bits):
+    # bits=30 would hash only 7 hex chars (a 28-bit hash); bits=64
+    # overflows the BIGINT cast.
+    df = spark.createDataFrame([Row(doc_id=1, text="alpha beta gamma")])
+    with pytest.raises(ValueError, match="simhash bits"):
+        simhash(df, bits=bits)
+    with pytest.raises(ValueError, match="simhash bits"):
+        simhash_oracle_sql(bits=bits)
 
 
 def test_simhash_near_pairs_matches_brute_force(spark):

@@ -1,8 +1,9 @@
 #!/usr/bin/env python
-"""Targeted per-query profiler for optimization work: times force_count
-(min-of-N, all-columns forcing + hygiene) for the named queries at
-$SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS], and optionally dumps
-the formatted physical plan.
+"""Targeted per-query profiler for optimization work: for the named
+queries at $SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS], each sample
+reports the builder's seconds, its py4j round trips and the seconds of
+force_count (all-columns forcing) on the built DataFrame; optionally
+dumps the formatted physical plan.
 
 Usage: python tools/profile_query.py name[,name...] [--runs N] [--plan DIR]
        python tools/profile_query.py --plans-all DIR   # dump plans only
@@ -10,6 +11,10 @@ Usage: python tools/profile_query.py name[,name...] [--runs N] [--plan DIR]
 Timing methodology: the un-wrapped ``Query.raw`` builder, clearCache +
 JVM gc outside the timed region, force_count inside, ensure_runtime_conf
 after — the same hygiene perfbench does around its own operations.
+Round trips are the commands the builder's thread sends to the JVM
+(``ClientServerConnection.send_command`` calls; py4j's finalizer thread
+is not counted); thousands of them mean a Column chain that belongs in
+SQL text.
 """
 
 from __future__ import annotations
@@ -19,6 +24,7 @@ import io
 import json
 import os
 import sys
+import threading
 import time
 from pathlib import Path
 
@@ -89,6 +95,19 @@ def main() -> None:
         # --runs 0 used to NameError on the unbound
         # sample count below; fail loudly with the reason instead.
         raise SystemExit(f"--runs must be >= 1 (got {runs})")
+    from py4j.clientserver import ClientServerConnection
+
+    round_trips = 0
+    send_command = ClientServerConnection.send_command
+    main_thread = threading.get_ident()
+
+    def counting_send(self, command):
+        nonlocal round_trips
+        round_trips += threading.get_ident() == main_thread
+        return send_command(self, command)
+
+    ClientServerConnection.send_command = counting_send
+
     out: dict[str, dict] = {}
     for name in names:
         q = REGISTRY[name]
@@ -98,12 +117,21 @@ def main() -> None:
             spark.catalog.clearCache()
             spark.sparkContext._jvm.System.gc()
             builder = q.raw or q.spark
+            calls0 = round_trips
             t0 = time.perf_counter()
-            n = force_count(builder(spark, sf_dir))
-            samples.append(round(time.perf_counter() - t0, 3))
+            df = builder(spark, sf_dir)
+            t1 = time.perf_counter()
+            calls = round_trips - calls0
+            n = force_count(df)
+            samples.append({
+                "build_s": round(t1 - t0, 3),
+                "force_s": round(time.perf_counter() - t1, 3),
+                "round_trips": calls,
+            })
             ensure_runtime_conf(spark)
-        out[name] = {"min": min(samples), "rows": n, "samples": samples}
-        print(f"{name}: min={min(samples)} rows={n} samples={samples}", flush=True)
+        totals = [round(s["build_s"] + s["force_s"], 3) for s in samples]
+        out[name] = {"min": min(totals), "rows": n, "samples": samples}
+        print(f"{name}: min={min(totals)} rows={n} samples={samples}", flush=True)
         if plan_dir:
             os.makedirs(plan_dir, exist_ok=True)
             # Same failure tolerance as --plans-all: a
