@@ -3,11 +3,12 @@
 The reference (transform-data.py:11-26) defines create_spark_session()
 but never calls it (it relies on the Databricks `spark` global and would
 NameError anyway — SURVEY.md §0). Here the session is explicit, with the
-configs that matter for both local[32] testing and a real cluster:
+configs that matter for both local testing and a real cluster:
 AQE (runtime re-planning + skew-join), UTC session timezone (the
 reference's timestamp UDF was local-tz dependent — SURVEY.md §2.8 F1),
-Arrow for any pandas interchange, and shuffle parallelism sized to
-cores rather than the 200 default.
+Arrow for any pandas interchange, and shuffle parallelism taken from
+the session (one partition per core unless it set its own) rather
+than the 200 default.
 """
 
 from __future__ import annotations
@@ -17,14 +18,11 @@ import os
 from pyspark.sql import SparkSession
 
 _REQUIRED_RUNTIME_CONF = {
-    # Pinned at runtime too (see ensure_runtime_conf) because the driver
-    # may hand us a session we didn't build.
+    # Pinned by ensure_runtime_conf at the top of every builder because
+    # the driver may hand us a session we didn't build.
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    # Spark's 200 default over-parallelizes local/test scale; streaming
-    # aggregations don't get AQE coalescing, so pin explicitly.
-    "spark.sql.shuffle.partitions": "32",
     # Plan-string generation is UNBOUNDED by default; the composed
     # pipeline queries (minhash bands × components iterations) produce
     # plan descriptions whose single contiguous char[] allocation OOM'd
@@ -44,6 +42,10 @@ _REQUIRED_RUNTIME_CONF = {
     "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "10GB",
 }
 
+# Not pinned: the session owns its shuffle parallelism (see
+# ensure_runtime_conf).
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+
 
 def get_spark(
     app_name: str = "big-data-projects-spark",
@@ -60,11 +62,8 @@ def get_spark(
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .config(_SHUFFLE_PARTITIONS, str(shuffle_partitions))
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "12g"))
         .config("spark.ui.enabled", "false")
@@ -87,10 +86,18 @@ def ensure_runtime_conf(spark: SparkSession) -> SparkSession:
     passes in its own SparkSession, and timestamp semantics (calendar
     extraction, epoch conversion) require a UTC session timezone to
     match the UTC-naive oracle (SURVEY.md §7 hard-parts #2).
+
+    Shuffle parallelism is the session's: a value it set (get_spark's,
+    a caller's ``conf.set``) is kept, and only a session that never set
+    one gets ``defaultParallelism`` (one partition per core) instead of
+    Spark's 200, which streaming aggregations would run as 200
+    state-store tasks per micro-batch (AQE does not coalesce them).
     """
     for k, v in _REQUIRED_RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)
         except Exception:
             pass
+    if not spark._jsparkSession.sessionState().conf().contains(_SHUFFLE_PARTITIONS):
+        spark.conf.set(_SHUFFLE_PARTITIONS, str(spark.sparkContext.defaultParallelism))
     return spark

@@ -123,7 +123,8 @@ def run_to_completion(df: DataFrame, output_mode: str) -> DataFrame:
     to thousands of rows). Streams whose output scales with the data —
     candidate pairs, per-row gates — must drain through
     run_to_distributed_batch (foreachBatch → parquet, no driver
-    collect) instead."""
+    collect) instead. The sink's named view (and the rows it holds in
+    the driver) is dropped once its rows are collected."""
     spark = df.sparkSession
     name = f"bdp_stream_{uuid.uuid4().hex[:8]}"
     query = (
@@ -133,11 +134,14 @@ def run_to_completion(df: DataFrame, output_mode: str) -> DataFrame:
         .start()
     )
     try:
-        query.processAllAvailable()
+        try:
+            query.processAllAvailable()
+        finally:
+            query.stop()
+        result = spark.table(name)
+        return spark.createDataFrame(result.collect(), schema=result.schema)
     finally:
-        query.stop()
-    result = spark.table(name)
-    return spark.createDataFrame(result.collect(), schema=result.schema)
+        spark.catalog.dropTempView(name)
 
 
 def run_to_distributed_batch(df: DataFrame) -> DataFrame:

@@ -3,7 +3,8 @@
 queries at $SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS], each sample
 reports the builder's seconds, its py4j round trips and the seconds of
 force_count (all-columns forcing) on the built DataFrame; optionally
-dumps the formatted physical plan.
+dumps the formatted physical plan. The first line of output records
+the shuffle partitions and default parallelism the samples ran under.
 
 Usage: python tools/profile_query.py name[,name...] [--runs N] [--plan DIR]
        python tools/profile_query.py --plans-all DIR   # dump plans only
@@ -59,6 +60,11 @@ def main() -> None:
     from big_data_projects_spark.queries import REGISTRY
 
     spark = get_spark(app_name="bdp-profile", cpus=cpus, shuffle_partitions=cpus)
+    print(
+        f"spark.sql.shuffle.partitions={spark.conf.get('spark.sql.shuffle.partitions')} "
+        f"defaultParallelism={spark.sparkContext.defaultParallelism}",
+        flush=True,
+    )
 
     # Warm page cache + codegen: every column read once per table.
     from pyspark.sql import functions as F
