@@ -4,9 +4,17 @@ Tables (TESTDATA.md): region nation customer supplier part orders
 lineitem events documents embeddings — one parquet per table under
 /root/testdata/sf{0.001,0.01,0.1}/.
 
-The reference read schema'd JSON from a mounted S3 bucket
-(transform-data.py:52-56,64-81); here sources are local parquet with
-schemas carried by the files themselves. Parquet scans get column
+The reference read JSON with explicit schemas from a mounted S3 bucket
+(transform-data.py:52-56,64-81,186-226); here sources are local parquet
+whose schema is inferred from the file footers ONCE per table and then
+passed back as an explicit read schema, so building a plan over a table
+launches no Spark job (a bare ``spark.read.parquet`` runs a
+footer-reading job on every call). The memo is keyed on the absolute
+path, the data files' count, newest ``st_mtime_ns`` and total bytes,
+and the session's values of the confs that change parquet inference
+(``_INFERENCE_CONFS``): a table rewritten under the same path, or a
+session that infers differently, gets a fresh inference. Non-local
+(``scheme://``) paths are not memoized. Parquet scans get column
 pruning + predicate pushdown from Catalyst for free.
 """
 
@@ -15,6 +23,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
 TABLES = (
     "region",
@@ -31,46 +41,109 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# Session confs whose values change the schema parquet inference returns.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# (absolute path, inference conf values) -> (data files stamp, raw schema).
+# One entry per path and conf combination: a rewrite replaces it.  The
+# memo is per process, not per session: a StructType is plain Python,
+# and the key carries the only session state inference depends on.
+_SCHEMAS: dict[tuple, tuple[tuple[int, int, int], StructType]] = {}
+
+
+def _files_stamp(path: str) -> tuple[int, int, int]:
+    """(count, newest st_mtime_ns, total bytes) of the data files at
+    ``path`` — the file itself, or every file under the directory that
+    Spark's file index would list (names starting with ``.``, or with
+    ``_`` and no ``=``, are skipped there and here)."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return (1, st.st_mtime_ns, st.st_size)
+
+    def hidden(name: str) -> bool:
+        return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+    count = newest = total = 0
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not hidden(d)]
+        for f in files:
+            if not hidden(f):
+                st = os.stat(os.path.join(root, f))
+                count += 1
+                newest = max(newest, st.st_mtime_ns)
+                total += st.st_size
+    return (count, newest, total)
+
+
+def table_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` would infer under this
+    session's conf, before load_table's timestamp normalization;
+    inferred on the first call per memo key (see the module docstring)
+    and served from the memo afterwards."""
+    if "://" in path or not os.path.exists(path):
+        # Not local, or missing: Spark infers (or raises) as it would.
+        return spark.read.parquet(path).schema
+    key = (os.path.abspath(path), tuple(spark.conf.get(k) for k in _INFERENCE_CONFS))
+    # Stamp before inferring: a rewrite racing the inference leaves an
+    # old stamp behind, which the next call re-infers past.  Racing
+    # callers at worst infer twice.
+    stamp = _files_stamp(path)
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == stamp:
+        return hit[1]
+    schema = spark.read.parquet(path).schema
+    _SCHEMAS[key] = (stamp, schema)
+    return schema
+
+
+def normalize_timestamps(df: DataFrame, schema: StructType) -> DataFrame:
+    """Turn ``df``'s raw parquet timestamps (``schema`` is its
+    table_schema) into session-tz TIMESTAMP; works on batch and
+    streaming DataFrames.
+
+    - ``ts`` stored as parquet TIMESTAMP(NANOS), which Spark 4 reads
+      only via the legacy nanos-as-long conf, is converted with
+      *integer* division (ns→µs — double division would lose precision
+      at int64-nanosecond scale).
+    - Columns written tz-naive (isAdjustedToUTC=false: events.ts,
+      lineitem.l_shipdate, orders.o_orderdate) read as TIMESTAMP_NTZ
+      when the session has inferTimestampNTZ on (Spark 4 default) —
+      including a session the caller built, whose config we don't
+      control. All engine operators and the DuckDB oracle treat these
+      as UTC-naive wall clock, so they are reinterpreted as TIMESTAMP;
+      under the UTC session tz (session.py) the cast preserves the
+      wall-clock value exactly.
+    """
+    fixes = {}
+    for f in schema.fields:
+        if f.name == "ts" and isinstance(f.dataType, LongType):
+            fixes[f.name] = F.timestamp_micros(F.expr("ts div 1000"))
+        elif isinstance(f.dataType, TimestampNTZType):
+            fixes[f.name] = F.col(f.name).cast("timestamp")
+    return df.withColumns(fixes) if fixes else df
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one testdata table as a DataFrame (lazy parquet scan).
+    """Read one testdata table as a DataFrame (lazy parquet scan over
+    the memoized schema; see normalize_timestamps for ``events.ts``
+    and the tz-naive columns).
 
-    ``events.ts`` is stored as parquet TIMESTAMP(NANOS), which Spark 4
-    rejects by default; it is read via the legacy nanos-as-long conf and
-    converted to a proper timestamp with *integer* division (ns→µs —
-    double division would lose precision at int64-nanosecond scale).
-    """
+    Every table is read under nanos-as-long, not only ``events``: the
+    conf is part of the memo key, and setting it only for ``events``
+    would leave a table loaded before ``events`` memoized under the
+    other value, to be inferred again once ``events`` had set it."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        from pyspark.sql import functions as F
-
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        return _normalize_ntz(df)
-    return _normalize_ntz(spark.read.parquet(path))
-
-
-def _normalize_ntz(df: DataFrame) -> DataFrame:
-    """Reinterpret TIMESTAMP_NTZ columns as session-tz TIMESTAMP.
-
-    Driver testdata written tz-naive (isAdjustedToUTC=false: events.ts,
-    lineitem.l_shipdate, orders.o_orderdate) reads as TIMESTAMP_NTZ when
-    the session has inferTimestampNTZ on (Spark 4 default) — including
-    under the driver's own session, whose config we don't control. All
-    engine operators and the DuckDB oracle treat these as UTC-naive wall
-    clock, so reinterpret as TIMESTAMP; under the UTC session tz
-    (session.py:22) the cast preserves the wall-clock value exactly.
-    """
-    from pyspark.sql import functions as F
-
-    ntz = [c for c, t in df.dtypes if t == "timestamp_ntz"]
-    if not ntz:
-        return df
-    return df.withColumns({c: F.col(c).cast("timestamp") for c in ntz})
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    schema = table_schema(spark, path)
+    return normalize_timestamps(spark.read.schema(schema).parquet(path), schema)
 
 
 def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:

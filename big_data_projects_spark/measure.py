@@ -18,12 +18,20 @@ every column — and hence every upstream operator — obligatory, while
 still returning a single summary row to the driver.  The added cost is
 one 64-bit hash per OUTPUT row (output ≪ input for everything timed),
 so the measurement stays a measurement of the query.
+
+``jobs_launched`` counts the Spark jobs a call launches — for a
+builder, the jobs it runs before the caller asks for any result.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import uuid
+from typing import Callable, TypeVar
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+T = TypeVar("T")
 
 
 def force_count(df: DataFrame) -> int:
@@ -42,3 +50,19 @@ def force_count(df: DataFrame) -> int:
         F.bit_xor(F.xxhash64(*cols)).alias("h"),
     ).collect()[0]
     return row["n"]
+
+
+def jobs_launched(spark: SparkSession, fn: Callable[[], T]) -> tuple[T, int]:
+    """Run ``fn()`` under a fresh job group and return its result with
+    the number of Spark jobs it launched from the calling thread.  The
+    thread leaves with no job group set."""
+    sc = spark.sparkContext
+    group = f"bdp_jobs_{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    # The status store learns of jobs from the listener bus.
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))

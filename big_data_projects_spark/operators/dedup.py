@@ -66,13 +66,6 @@ def content_hash(col: Column | str) -> Column:
     return F.md5(c)
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Keep one row per distinct content hash (first by natural order of
-    a deterministic tiebreak on all columns is unnecessary — any row of
-    an exact-duplicate group is equivalent by definition)."""
-    return df.dropDuplicates([text_col])
-
-
 def shingles(
     df: DataFrame, id_col: str, text_col: str, n: int = 3, hasher: str = "md5"
 ) -> DataFrame:

@@ -135,12 +135,6 @@ ROLL_BASE = 131
 ROLL_MOD = (1 << 31) - 1
 
 
-def _tok_hash28(c: Column) -> Column:
-    """28-bit md5-derived token hash — `CAST('0x'||substr(md5(t),1,7)
-    AS BIGINT)` in the DuckDB twin."""
-    return F.conv(F.substring(F.md5(c), 1, 7), 16, 10).cast("long")
-
-
 def bpe_token_count(col: Column | str) -> Column:
     """Number of BPE-style pre-tokens (bigint)."""
     c = F.col(col) if isinstance(col, str) else col

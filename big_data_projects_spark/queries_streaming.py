@@ -333,15 +333,15 @@ def q_stream_file_ingest(spark, sf_dir):
     tests/test_streaming_recovery.py pins the batch split itself."""
     import tempfile
 
+    from big_data_projects_spark.data import load_table
     from big_data_projects_spark.streaming.core import (
         run_available_now_to_parquet,
     )
     from big_data_projects_spark.operators.relational import dsum
 
     ensure_runtime_conf(spark)
-    src = f"{sf_dir}/events.parquet"
     stage = tempfile.mkdtemp(prefix="bdp_file_ingest_src_")
-    base = spark.read.parquet(src).select("event_id", "event_type", "value")
+    base = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
     base.repartition(8).write.mode("overwrite").parquet(stage)
     stream = spark.readStream.schema(base.schema).option(
         "maxFilesPerTrigger", 2

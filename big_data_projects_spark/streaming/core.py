@@ -16,28 +16,14 @@ import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from big_data_projects_spark.data import normalize_timestamps, table_schema
 
 # One staging dir per source file per process (reused across calls):
 # repeated sweeps/tests must not accumulate mkdtemp dirs — the staging
 # dir only holds a symlink to the read-only source parquet, so reuse
 # is always safe.
 _STAGE_CACHE: dict[str, str] = {}
-
-# Schema-peek cache (r13): the file-stream source requires an explicit
-# schema, so every *_stream() call paid a batch `read.parquet().schema`
-# footer scan (~0.1 s of driver round-trips) for a schema that is
-# immutable per source path within a process — the testdata files never
-# change under a running session.  Keyed by path, like _STAGE_CACHE.
-_SCHEMA_CACHE: dict[str, object] = {}
-
-
-def _peeked_schema(spark: SparkSession, src: str):
-    schema = _SCHEMA_CACHE.get(src)
-    if schema is None:
-        schema = spark.read.parquet(src).schema
-        _SCHEMA_CACHE[src] = schema
-    return schema
 
 
 def _staged_source(src: str, prefix: str) -> str:
@@ -94,24 +80,17 @@ def _staged_source(src: str, prefix: str) -> str:
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events table (bounded backfill).
 
-    Schema comes from a batch peek (the file-stream source requires an
-    explicit schema); the nanos-epoch ts column is normalized to a real
-    timestamp exactly as in data.load_table.
+    The file-stream source requires an explicit schema: it is the
+    batch table's (data.table_schema), and the timestamps are
+    normalized exactly as in data.load_table.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     src = f"{sf_dir}/events.parquet"
-    batch_schema = _peeked_schema(spark, src)
+    schema = table_schema(spark, src)
     stage = _staged_source(src, "bdp_stream_src_")
-    stream = spark.readStream.schema(batch_schema).parquet(stage)
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        # tz-naive parquet → TIMESTAMP_NTZ under inferTimestampNTZ;
-        # reinterpret as UTC TIMESTAMP exactly as data._normalize_ntz.
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+    return normalize_timestamps(spark.readStream.schema(schema).parquet(stage), schema)
 
 
 def run_to_completion(df: DataFrame, output_mode: str) -> DataFrame:
@@ -209,9 +188,8 @@ def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     timestamp if they need windows."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     src = f"{sf_dir}/documents.parquet"
-    batch_schema = _peeked_schema(spark, src)
     stage = _staged_source(src, "bdp_stream_docs_")
-    return spark.readStream.schema(batch_schema).parquet(stage)
+    return spark.readStream.schema(table_schema(spark, src)).parquet(stage)
 
 
 def embeddings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -221,6 +199,5 @@ def embeddings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     in append mode."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     src = f"{sf_dir}/embeddings.parquet"
-    batch_schema = _peeked_schema(spark, src)
     stage = _staged_source(src, "bdp_stream_emb_")
-    return spark.readStream.schema(batch_schema).parquet(stage)
+    return spark.readStream.schema(table_schema(spark, src)).parquet(stage)

@@ -1,10 +1,12 @@
 #!/usr/bin/env python
 """Targeted per-query profiler for optimization work: for the named
 queries at $SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS], each sample
-reports the builder's seconds, its py4j round trips and the seconds of
-force_count (all-columns forcing) on the built DataFrame; optionally
-dumps the formatted physical plan. The first line of output records
-the shuffle partitions and default parallelism the samples ran under.
+reports the builder's seconds, its py4j round trips, the seconds of
+force_count (all-columns forcing) on the built DataFrame, and the Spark
+jobs each of the two launched (``build_jobs``, ``force_jobs``; counted
+under a job group per phase); optionally dumps the formatted physical
+plan. The first line of output records the shuffle partitions and
+default parallelism the samples ran under.
 
 Usage: python tools/profile_query.py name[,name...] [--runs N] [--plan DIR]
        python tools/profile_query.py --plans-all DIR   # dump plans only
@@ -55,7 +57,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or (os.cpu_count() or 4)
 
-    from big_data_projects_spark.measure import force_count
+    from big_data_projects_spark.measure import force_count, jobs_launched
     from big_data_projects_spark.session import ensure_runtime_conf, get_spark
     from big_data_projects_spark.queries import REGISTRY
 
@@ -123,16 +125,25 @@ def main() -> None:
             spark.catalog.clearCache()
             spark.sparkContext._jvm.System.gc()
             builder = q.raw or q.spark
-            calls0 = round_trips
-            t0 = time.perf_counter()
-            df = builder(spark, sf_dir)
-            t1 = time.perf_counter()
-            calls = round_trips - calls0
-            n = force_count(df)
+
+            def build():
+                calls0 = round_trips
+                t0 = time.perf_counter()
+                df = builder(spark, sf_dir)
+                return df, time.perf_counter() - t0, round_trips - calls0
+
+            def force():
+                t0 = time.perf_counter()
+                return force_count(df), time.perf_counter() - t0
+
+            (df, build_s, calls), build_jobs = jobs_launched(spark, build)
+            (n, force_s), force_jobs = jobs_launched(spark, force)
             samples.append({
-                "build_s": round(t1 - t0, 3),
-                "force_s": round(time.perf_counter() - t1, 3),
+                "build_s": round(build_s, 3),
+                "force_s": round(force_s, 3),
                 "round_trips": calls,
+                "build_jobs": build_jobs,
+                "force_jobs": force_jobs,
             })
             ensure_runtime_conf(spark)
         totals = [round(s["build_s"] + s["force_s"], 3) for s in samples]
