@@ -98,7 +98,7 @@ def pagerank(
             # one contribution, so summed's key set IS the node set —
             # the nodes left-join would be a per-round no-op costing a
             # join stage (A/B-measured ~2.4x on the whole loop,
-            # bit-identical ranks; BASELINE.md round 6).
+            # bit-identical ranks; BASELINE.md@be14222 round 6).
             new_ranks = summed
         if has_dangling:
             # One-row decimal aggregate of dangling rank, broadcast to
@@ -132,7 +132,7 @@ def pagerank(
         # control-plane sized, so the wall is Catalyst analysis of the
         # per-round plan, not job launch — an every-2nd-round cadence
         # was A/B-measured SLOWER (the doubled plan depth costs more to
-        # optimize than the saved action; BASELINE.md round 6).
+        # optimize than the saved action; BASELINE.md@be14222 round 6).
         # eager=False was tried and REJECTED in r13 (the
         # pipelined-rounds idea): q_pagerank_sim_graph regressed
         # 6.1 -> 9.0 s in a controlled same-session A/B.  Under AQE,
@@ -209,7 +209,7 @@ def pagerank_units(
         # distinct(links.b)), so the defensive nodes left-join the
         # loop used to carry was a per-round no-op that cost a join
         # stage — removing it A/B-measured ~2.4x on the whole loop
-        # with bit-identical ranks (BASELINE.md round 6).
+        # with bit-identical ranks (BASELINE.md@be14222 round 6).
         ranks = contribs.groupBy("node").agg(
             F.sum("contrib").alias("mass")
         ).select(

@@ -741,8 +741,8 @@ def q_bt_reward(spark, sf_dir):
             )
             # EVERY iteration, deliberately: an every-2nd-iteration
             # cadence A/B-measured 3.6 -> 6.2 s (the doubled plan depth
-            # costs Catalyst more than the saved action; BASELINE.md
-            # round 6).  eager=False measured and REJECTED in r13
+            # costs Catalyst more than the saved action;
+            # BASELINE.md@be14222 round 6).  eager=False measured and REJECTED in r13
             # (the pipelined-rounds idea): 4.4 ->
             # 5.2 s in a controlled A/B — under AQE a "lazy"
             # localCheckpoint still executes its shuffle stages at

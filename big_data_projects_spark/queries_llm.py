@@ -1952,7 +1952,7 @@ def q_pagerank_sim_graph(spark, sf_dir):
     purpose is representative PICKING, i.e. the rank ORDERING — and
     the full ordering at 5 rounds is bit-identical to 10 rounds on
     both sf0.01 (47 nodes) and sf0.1 (485 nodes) similarity graphs
-    (A/B in BASELINE.md; even 3 rounds agrees).  Near-dup similarity
+    (A/B in BASELINE.md@be14222; even 3 rounds agrees).  Near-dup similarity
     graphs are small dense clusters, so the power iteration's order
     stabilizes in a few hops; each dropped round saves one join+agg
     stage + a localCheckpoint.  The oracle unrolls the same 5 levels,

@@ -16,13 +16,18 @@ users, time, songplays, user_level_listen), the same sink layout
   ``monotonically_increasing_id`` (unique, no shuffle, any scale).
 - Credentials `collect()` and S3 mounts (transform-data.py:38-56):
   out of engine scope; paths come in as arguments.
+- Serial sinks (transform-data.py:313-327): six independent writes
+  run one after another, the cores idle while the driver starts each
+  job → all six submitted together, one thread per table, each
+  carrying the caller's job group and local properties
+  (``write_star_schema``).
 
 Faithfully preserved semantics (deliberate, documented):
 - `users` dim dedups on (user_id, first_name, last_name, gender,
   level) — a user who switched level appears twice
   (transform-data.py:135-138).
-- `user_level_listen` inner-joins per-user paid×free counts — only
-  users active at BOTH levels appear (transform-data.py:152-157).
+- `user_level_listen` keeps per-user paid×free counts only for users
+  active at BOTH levels (transform-data.py:152-157).
 - songplays joins logs to songs/artists on *natural* keys (artist
   name, song title — transform-data.py:281-284), so duplicate titles
   fan out. Kept because output parity matters; at scale prefer
@@ -31,9 +36,12 @@ Faithfully preserved semantics (deliberate, documented):
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.util import inheritable_thread_target
 
 from big_data_projects_spark.functions.timestamps import (
     ts_from_epoch_ms,
@@ -150,19 +158,19 @@ def time_dim(listens: DataFrame) -> DataFrame:
 
 def user_level_listen(listens: DataFrame) -> DataFrame:
     """Per-user paid×free listen counts (transform-data.py:144-165):
-    two filtered aggregates inner-joined (users with BOTH levels only),
-    empty userId dropped, full_name concat, DISTINCT."""
-    paid = (
-        listens.filter(F.col("level") == "paid")
+    users with BOTH levels only, empty userId dropped, full_name
+    concat, DISTINCT.  The reference inner-joins two filtered
+    aggregates; one aggregate with both counts keeps the same rows in
+    one shuffle (a null userId fails ``!= ''`` as it failed the join)."""
+    both = (
+        listens.filter(F.col("userId") != "")
         .groupBy("userId")
-        .agg(F.count(F.lit(1)).alias("paid_use_count"))
+        .agg(
+            F.count_if(F.col("level") == "paid").alias("paid_use_count"),
+            F.count_if(F.col("level") == "free").alias("free_use_count"),
+        )
+        .filter((F.col("paid_use_count") > 0) & (F.col("free_use_count") > 0))
     )
-    free = (
-        listens.filter(F.col("level") == "free")
-        .groupBy("userId")
-        .agg(F.count(F.lit(1)).alias("free_use_count"))
-    )
-    both = paid.join(free, "userId").filter(F.col("userId") != "")
     users = users_dim(listens)
     return (
         users.join(both, users.user_id == both.userId)
@@ -209,17 +217,39 @@ def songplays_fact(
 def write_star_schema(out_dir: str, **tables: DataFrame) -> None:
     """S4 sinks (transform-data.py:313-327): overwrite parquet,
     hive-partitioned — songs_info by year; time & songplays by
-    (year, month); artists/users unpartitioned."""
+    (year, month); artists/users unpartitioned.
+
+    The writes are independent, so all of them are submitted at once,
+    one thread per table: written one after another, each small job
+    chain waits on the driver and the cores idle between jobs.  Each
+    thread's target is wrapped in ``inheritable_thread_target``:
+    PySpark pins every Python thread to a JVM thread of its own, and a
+    bare thread would lose the caller's job group and local properties
+    (its jobs would escape ``measure.jobs_launched``, for one).  Once
+    every write has ended, the first failed one in table order raises
+    here."""
     partitioning = {
         "songs_info": ["year"],
         "time": ["year", "month"],
         "songplays": ["year", "month"],
     }
-    for name, df in tables.items():
+
+    def write(name: str, df: DataFrame) -> None:
         writer = df.write.mode("overwrite")
         if name in partitioning:
             writer = writer.partitionBy(*partitioning[name])
         writer.parquet(f"{out_dir}/{name}.parquet")
+
+    if not tables:
+        return
+    spark = next(iter(tables.values())).sparkSession
+    with ThreadPoolExecutor(max_workers=len(tables)) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(write), name, df)
+            for name, df in tables.items()
+        ]
+    for future in futures:
+        future.result()
 
 
 def run_reference_etl(

@@ -56,13 +56,10 @@ def get_spark(
     """Build (or fetch) a local SparkSession tuned for this engine."""
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or (os.cpu_count() or 4)
-    if shuffle_partitions is None:
-        shuffle_partitions = cpus
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config(_SHUFFLE_PARTITIONS, str(shuffle_partitions))
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "12g"))
@@ -70,6 +67,8 @@ def get_spark(
         .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC")
         .config("spark.executor.extraJavaOptions", "-Duser.timezone=UTC")
     )
+    if shuffle_partitions is not None:
+        builder = builder.config(_SHUFFLE_PARTITIONS, str(shuffle_partitions))
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)

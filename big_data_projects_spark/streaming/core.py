@@ -19,16 +19,20 @@ from pyspark.sql import DataFrame, SparkSession
 
 from big_data_projects_spark.data import normalize_timestamps, table_schema
 
-# One staging dir per source file per process (reused across calls):
+# One staging dir per source per process (reused across calls):
 # repeated sweeps/tests must not accumulate mkdtemp dirs — the staging
-# dir only holds a symlink to the read-only source parquet, so reuse
-# is always safe.
-_STAGE_CACHE: dict[str, str] = {}
+# dir only holds symlinks to the read-only source files, so reuse is
+# safe while the source lists the same files.  Value: (stage dir, the
+# files it links).
+_STAGE_CACHE: dict[str, tuple[str, list[str]]] = {}
 
 
 def _staged_source(src: str, prefix: str) -> str:
     """Return a directory containing (symlinks to) ``src``'s data
-    file(s), creating it on first use and reusing it afterwards.
+    file(s), creating it on first use and reusing it afterwards while
+    ``src`` lists the same files.  A source rewritten under new file
+    names gets a fresh stage (the old one is removed): the stale
+    links would point at deleted files and stream zero rows.
 
     ``src`` may be a single parquet file (the driver testdata shape)
     or a Spark-written DIRECTORY of part files (the scale-smoke
@@ -44,10 +48,6 @@ def _staged_source(src: str, prefix: str) -> str:
     deeper.  Note the flatten drops partition-column
     values encoded only in directory names; sources staged here carry
     their columns in the data files (the testdata/scale-smoke shape)."""
-    stage = _STAGE_CACHE.get(src)
-    if stage is not None and os.path.isdir(stage):
-        return stage
-    stage = tempfile.mkdtemp(prefix=prefix)
     if os.path.isdir(src):
         entries = []
         # followlinks=False: Spark-written sources nest
@@ -67,13 +67,20 @@ def _staged_source(src: str, prefix: str) -> str:
             )
     else:
         entries = [src]
+    cached = _STAGE_CACHE.get(src)
+    if cached is not None:
+        stage, staged = cached
+        if staged == entries and os.path.isdir(stage):
+            return stage
+        shutil.rmtree(stage, ignore_errors=True)
+    stage = tempfile.mkdtemp(prefix=prefix)
     for i, path in enumerate(entries):
         link = os.path.join(stage, f"{i:05d}_{os.path.basename(path)}")
         try:
             os.symlink(path, link)
         except OSError:
             shutil.copy(path, link)
-    _STAGE_CACHE[src] = stage
+    _STAGE_CACHE[src] = (stage, entries)
     return stage
 
 

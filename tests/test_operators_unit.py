@@ -667,7 +667,7 @@ def test_watermark_drops_late_rows(spark, tmp_path):
 
 def test_pagerank_sim_graph_5_rounds_preserves_converged_ordering(spark):
     """q_pagerank_sim_graph runs 5 power-iteration rounds on the claim
-    (A/B'd in BASELINE.md round 7) that the rank ORDERING — the
+    (A/B'd in BASELINE.md@be14222 round 7) that the rank ORDERING — the
     query's entire purpose, representative picking — already equals
     the 10-round ordering on near-dup similarity graphs.  That claim
     is corpus-dependent: this pins it against the actual test corpus,

@@ -5,10 +5,19 @@ of /root/reference/Song-Analytics-with-Spark/transform-data.py."""
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
+from pyspark.sql import functions as F
 
-from big_data_projects_spark.reference_etl import run_reference_etl
+from big_data_projects_spark.measure import jobs_launched
+from big_data_projects_spark.reference_etl import (
+    LOGS_SCHEMA,
+    process_logs,
+    run_reference_etl,
+    user_level_listen,
+    write_star_schema,
+)
 
 SONGS = [
     # artist Alpha has two songs; song "Shared Title" exists under TWO
@@ -107,6 +116,43 @@ def test_user_level_listen_both_levels_only(etl):
     assert len(rows) == 1
     r = rows[0]
     assert (r.full_name, r.paid_use_count, r.free_use_count) == ("Ann Lee", 2, 1)
+
+
+def test_user_level_listen_keeps_only_named_users_with_both_levels(spark):
+    rows = [
+        log(0, None, "No", "Id", "paid", "Song A", "Alpha"),
+        log(60, None, "No", "Id", "free", "Song A", "Alpha"),
+        log(120, "", "", "", "paid", "Song A", "Alpha"),
+        log(180, "", "", "", "free", "Song A", "Alpha"),
+        log(240, "3", "Cid", "Paid", "paid", "Song A", "Alpha"),
+        log(300, "3", "Cid", "Paid", "paid", "Song A", "Alpha"),
+        log(360, "4", "Dee", "Both", "paid", "Song A", "Alpha"),
+        log(420, "4", "Dee", "Both", "free", "Song A", "Alpha"),
+        log(480, "4", "Dee", "Both", "free", "Song A", "Alpha"),
+    ]
+    listens = process_logs(spark.createDataFrame(rows, LOGS_SCHEMA))
+    got = [tuple(r) for r in user_level_listen(listens).collect()]
+    assert got == [("Dee Both", 1, 2)]
+
+
+def test_star_schema_sinks_run_in_the_callers_job_group(spark, etl, tmp_path):
+    """The six sinks are written from worker threads; each must carry
+    the caller's job group, or its jobs escape the count."""
+    d = os.path.dirname(etl[1])  # the fixture's input directory
+    songs_path, logs_path = f"{d}/songs.json", f"{d}/logs.json"
+    tables, jobs = jobs_launched(
+        spark,
+        lambda: run_reference_etl(spark, songs_path, logs_path, out_dir=str(tmp_path)),
+    )
+    assert jobs >= len(tables) == 6
+
+
+def test_star_schema_sink_error_reaches_the_caller(spark, tmp_path):
+    ok = spark.range(3)
+    bad = spark.range(3).select(F.raise_error(F.lit("boom")).alias("x"))
+    with pytest.raises(Exception, match="boom"):
+        write_star_schema(str(tmp_path), ok=ok, bad=bad)
+    assert spark.read.parquet(str(tmp_path / "ok.parquet")).count() == 3
 
 
 def test_songplays_fanout_on_natural_keys(etl):

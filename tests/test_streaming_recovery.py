@@ -297,6 +297,36 @@ def test_staged_source_survives_symlink_cycles(tmp_path, spark):
     assert back.count() == 14  # 7 rows via each of the two staged links
 
 
+def test_directory_rewritten_with_new_file_names_streams_its_rows(tmp_path, spark):
+    """A directory source rewritten under the same path with new
+    part-file names is re-staged: the stage cached for the old listing
+    links deleted files and streamed zero rows without an error."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from big_data_projects_spark.streaming.core import (
+        documents_stream,
+        run_to_completion,
+    )
+
+    table = pq.read_table(f"{SF}/documents.parquet")
+    assert table.num_rows == 500
+    src = tmp_path / "documents.parquet"
+
+    def write(names):
+        shutil.rmtree(src, ignore_errors=True)
+        src.mkdir()
+        step = -(-table.num_rows // len(names))
+        for i, name in enumerate(names):
+            pq.write_table(table.slice(i * step, step), src / name)
+
+    write(["part-a-0.parquet", "part-a-1.parquet"])
+    assert run_to_completion(documents_stream(spark, str(tmp_path)), "append").count() == 500
+    write(["part-b-0.parquet", "part-b-1.parquet", "part-b-2.parquet"])
+    assert run_to_completion(documents_stream(spark, str(tmp_path)), "append").count() == 500
+
+
 def test_distributed_drain_handles_empty_stream(spark):
     """run_to_distributed_batch on a stream that emits zero rows must
     return an empty DataFrame with the stream's schema rather than
