@@ -27,7 +27,9 @@ from big_data_projects_spark.queries import REGISTRY  # noqa: E402
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on the sf0.001 test tables; expected to return rows>0."""
     from big_data_projects_spark.pipeline import songplays_pipeline
+    from big_data_projects_spark.session import ensure_runtime_conf
 
+    ensure_runtime_conf(spark)
     return songplays_pipeline(spark, "/root/testdata/sf0.001")
 
 

@@ -48,8 +48,9 @@ def epoch_ms(col: Column | str) -> Column:
 
     Accepts TIMESTAMP and TIMESTAMP_NTZ (parquet timestamps not marked
     UTC-adjusted arrive as NTZ); the cast interprets NTZ wall-clock in
-    the session timezone, which every query pins to UTC
-    (ensure_runtime_conf) — exactly the UTC-naive oracle convention.
+    the session timezone, which is pinned to UTC where a caller's
+    session enters the package (session.ensure_runtime_conf) — exactly
+    the UTC-naive oracle convention.
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.unix_millis(c.cast("timestamp"))

@@ -31,12 +31,10 @@ from big_data_projects_spark.operators.relational import (
     star_join,
     surrogate_key,
 )
-from big_data_projects_spark.session import ensure_runtime_conf
 
 
 def songplays_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events×customer×nation×region star rollup with surrogate keys."""
-    ensure_runtime_conf(spark)
     events = load_table(spark, sf_dir, "events")
     customer = load_table(spark, sf_dir, "customer")
     nation = load_table(spark, sf_dir, "nation")

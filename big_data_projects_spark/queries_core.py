@@ -8,12 +8,10 @@ behavior being re-derived in /root/reference/Song-Analytics-with-Spark/.
 from __future__ import annotations
 
 import os
-import tempfile
 
-from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from big_data_projects_spark.data import load_table
+from big_data_projects_spark.data import load_table as _t
 from big_data_projects_spark.functions.timestamps import (
     CALENDAR_COLS,
     epoch_ms,
@@ -32,12 +30,7 @@ from big_data_projects_spark.operators.relational import (
 )
 from big_data_projects_spark.operators.sessionize import sessionize
 from big_data_projects_spark.registry import register
-from big_data_projects_spark.session import ensure_runtime_conf
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    ensure_runtime_conf(spark)
-    return load_table(spark, sf_dir, name)
+from big_data_projects_spark.session import scratch_dir
 
 
 # ---------------------------------------------------------------------------
@@ -479,7 +472,7 @@ def q_sink_parquet_partitioned(spark, sf_dir):
     columns come back via directory layout, and partition pruning
     applies on re-read."""
     events = _t(spark, sf_dir, "events")
-    out = os.path.join(tempfile.mkdtemp(prefix="bdp_sink_"), "events_parquet")
+    out = os.path.join(scratch_dir("bdp_sink_"), "events_parquet")
     (
         events.withColumn("year", F.year("ts"))
         .withColumn("month", F.month("ts"))
@@ -507,7 +500,7 @@ def q_sink_csv_roundtrip(spark, sf_dir):
     CSV scan (transform-data.py:33-41) round trip. Java's double
     formatting is shortest-roundtrip, so values survive exactly."""
     customer = _t(spark, sf_dir, "customer")
-    out = os.path.join(tempfile.mkdtemp(prefix="bdp_csv_"), "customer_csv")
+    out = os.path.join(scratch_dir("bdp_csv_"), "customer_csv")
     customer.write.mode("overwrite").option("header", True).csv(out)
     back = spark.read.csv(out, header=True, schema=customer.schema)
     return back.groupBy("c_mktsegment").agg(
@@ -529,7 +522,7 @@ def q_sink_orc_roundtrip(spark, sf_dir):
     splittable columnar format a lake engine must speak; same
     predicate-pushdown/column-pruning machinery applies on scan."""
     orders = _t(spark, sf_dir, "orders")
-    out = os.path.join(tempfile.mkdtemp(prefix="bdp_orc_"), "orders_orc")
+    out = os.path.join(scratch_dir("bdp_orc_"), "orders_orc")
     orders.write.mode("overwrite").orc(out)
     back = spark.read.orc(out)
     return back.groupBy("o_orderpriority").agg(
@@ -598,7 +591,6 @@ def q_sql_entry_report(spark, sf_dir):
     classes) composed with the J2 dim join + DISTINCT report, and the
     F3 string concat. Identical Catalyst pipeline to the DataFrame API
     from the analyzer onward; SQL text is the only difference."""
-    ensure_runtime_conf(spark)
     from big_data_projects_spark.data import register_views
 
     register_views(spark, sf_dir, ("events", "customer"))
@@ -643,7 +635,6 @@ def q_ctas_insert(spark, sf_dir):
     to parallelize across jobs at scale."""
     import uuid
 
-    ensure_runtime_conf(spark)
     orders = _t(spark, sf_dir, "orders")
     orders.createOrReplaceTempView("orders_src")
     tbl = f"bdp_ctas_{uuid.uuid4().hex[:8]}"
@@ -688,7 +679,7 @@ def q_sink_json_roundtrip(spark, sf_dir):
     joined = customer.join(
         nation, customer.c_nationkey == nation.n_nationkey
     ).select("n_name", "c_acctbal")
-    out = os.path.join(tempfile.mkdtemp(prefix="bdp_json_"), "cust_json")
+    out = os.path.join(scratch_dir("bdp_json_"), "cust_json")
     joined.write.mode("overwrite").json(out)
     back = spark.read.schema(joined.schema).json(out)
     return back.groupBy("n_name").agg(

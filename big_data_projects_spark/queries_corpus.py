@@ -12,16 +12,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from big_data_projects_spark.data import load_table
+from big_data_projects_spark.data import load_table as _t
 from big_data_projects_spark.operators import dedup as D
 from big_data_projects_spark.operators import text as T
 from big_data_projects_spark.registry import register
-from big_data_projects_spark.session import ensure_runtime_conf
-
-
-def _t(spark, sf_dir, name):
-    ensure_runtime_conf(spark)
-    return load_table(spark, sf_dir, name)
 
 
 CHUNK = 32  # tokens per training chunk

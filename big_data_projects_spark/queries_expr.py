@@ -15,19 +15,13 @@ from typing import Iterator  # noqa: F401  (resolved by pandas_udf hints)
 
 import pandas as pd  # module-level so Iterator-UDF type hints resolve
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from big_data_projects_spark.data import load_table
+from big_data_projects_spark.data import load_table as _t
 from big_data_projects_spark.functions.timestamps import epoch_ms
 from big_data_projects_spark.operators.relational import dsum
 from big_data_projects_spark.registry import register
-from big_data_projects_spark.session import ensure_runtime_conf
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    ensure_runtime_conf(spark)
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -519,9 +513,8 @@ def q_lateral_topn(spark, sf_dir):
     two surfaces (LATERAL SQL and the Window DataFrame idiom) converge
     on one scalable physical shape rather than a per-row re-execution
     of the inner query."""
-    ensure_runtime_conf(spark)
     for t in ("nation", "customer"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
+        _t(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql(
         """
         SELECT n.n_name, t.c_name, t.c_acctbal
@@ -558,8 +551,10 @@ def q_udtf_spans(spark, sf_dir):
     function): a ``@udtf`` class invoked via SQL ``LATERAL`` splits each
     document into fixed 16-token spans, one output row per span — the
     one-row-in/N-rows-out shape (tokenizers, parsers, samplers) that
-    scalar UDFs can't express. Arrow-batched execution is enabled via
-    ``spark.sql.execution.pythonUDTF.arrow.enabled``; the identical
+    scalar UDFs can't express. Arrow-batched execution is asked for on
+    the UDTF itself (``useArrow=True``), so the session's
+    ``spark.sql.execution.pythonUDTF.arrow.enabled`` is left as the
+    caller set it; the identical
     relation is also expressible with built-in sequence+explode
     (q_doc_chunking) — that stays the hot path, this pins the API.
 
@@ -567,10 +562,7 @@ def q_udtf_spans(spark, sf_dir):
     parallel, no shuffle; Python cost is bounded by Arrow batching."""
     from pyspark.sql.functions import udtf
 
-    ensure_runtime_conf(spark)
-    spark.conf.set("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
-
-    @udtf(returnType="span_id int, span_text string, n_toks int")
+    @udtf(returnType="span_id int, span_text string, n_toks int", useArrow=True)
     class SpanUDTF:
         def eval(self, text: str):
             toks = text.strip().lower().split()

@@ -28,15 +28,14 @@ each expressed as a checkable query.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_projects_spark.data import load_table
+from big_data_projects_spark.data import load_table as _t
 from big_data_projects_spark.operators.relational import dsum, salted_join
 from big_data_projects_spark.registry import register
-from big_data_projects_spark.session import ensure_runtime_conf
+from big_data_projects_spark.session import scratch_dir
 
 # Power-sum accumulator type. Per-row products (x·x, x·y) are computed
 # in IEEE double — bit-identical on both engines for the same inputs —
@@ -44,11 +43,6 @@ from big_data_projects_spark.session import ensure_runtime_conf
 # (same pattern as dsum over revenue expressions). Pure decimal·decimal
 # products would overflow DuckDB's width-addition rule instead.
 _DEC = "decimal(38,6)"
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    ensure_runtime_conf(spark)
-    return load_table(spark, sf_dir, name)
 
 
 @register(
@@ -180,18 +174,11 @@ def q_bucketed_join(spark, sf_dir):
     with NO shuffle — tests/test_plans.py asserts the plan has no
     Exchange above the scans. The one-time bucketing write IS a shuffle;
     it's amortized across every downstream join/aggregate on the key."""
-    ensure_runtime_conf(spark)
-    base = tempfile.mkdtemp(prefix="bdp_bucketed_")
+    base = scratch_dir("bdp_bucketed_")
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice"
     )
     orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    # At test scale the dim side fits the broadcast threshold and AQE
-    # would hide the co-located-join shape this query exists to show
-    # (at 100 TB neither side broadcasts); pin the shuffle-join path.
-    # Set AFTER the _t() loads (each re-pins the defaults) — the next
-    # builder's ensure_runtime_conf restores it.
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     for df, name, key in (
         (li, "bdp_li_bucketed", "l_orderkey"),
         (orders, "bdp_orders_bucketed", "o_orderkey"),
@@ -205,7 +192,10 @@ def q_bucketed_join(spark, sf_dir):
             .saveAsTable(name)
         )
     li_b = spark.table("bdp_li_bucketed")
-    orders_b = spark.table("bdp_orders_bucketed")
+    # At test scale the orders side fits the broadcast threshold and
+    # AQE would hide the co-located-join shape this query exists to
+    # show (at 100 TB neither side broadcasts); ask for the merge join.
+    orders_b = spark.table("bdp_orders_bucketed").hint("shuffle_merge")
     return (
         li_b.join(orders_b, li_b.l_orderkey == orders_b.o_orderkey)
         .groupBy("o_orderpriority")
@@ -233,7 +223,7 @@ def q_scan_json_schema(spark, sf_dir):
     formatting), timestamps to millisecond precision (year-granularity
     output is unaffected)."""
     events = _t(spark, sf_dir, "events")
-    out = os.path.join(tempfile.mkdtemp(prefix="bdp_json_"), "events_json")
+    out = os.path.join(scratch_dir("bdp_json_"), "events_json")
     events.write.mode("overwrite").json(out)
     back = spark.read.schema(events.schema).json(out)
     return back.groupBy(
@@ -257,9 +247,8 @@ def q_compaction(spark, sf_dir):
     orders into 64 files, compacts to 4, verifies the file count
     dropped, and proves the data survived byte-for-byte by aggregating
     the compacted copy against the original's oracle."""
-    ensure_runtime_conf(spark)
     orders = _t(spark, sf_dir, "orders")
-    base = tempfile.mkdtemp(prefix="bdp_compact_")
+    base = scratch_dir("bdp_compact_")
     frag, compact = os.path.join(base, "frag"), os.path.join(base, "compact")
     orders.repartition(64).write.mode("overwrite").parquet(frag)
     spark.read.parquet(frag).repartition(4).write.mode("overwrite").parquet(
@@ -294,9 +283,8 @@ def q_scan_json_corrupt(spark, sf_dir):
     100 TB a single bad record must never kill a scan), and the query
     accounts for good vs corrupt rows. The oracle pins the invariant:
     all original rows parse, exactly the injected lines quarantine."""
-    ensure_runtime_conf(spark)
     events = _t(spark, sf_dir, "events")
-    out = os.path.join(tempfile.mkdtemp(prefix="bdp_json_bad_"), "events_json")
+    out = os.path.join(scratch_dir("bdp_json_bad_"), "events_json")
     events.write.mode("overwrite").json(out)
     bad = os.path.join(out, "zz_corrupt.json")
     with open(bad, "w") as fh:
@@ -471,7 +459,6 @@ def q_custom_source(spark, sf_dir):
     derives from md5(str(i))), so the driver's value-hash verifies the
     connector's output itself, not just a row count. ``sf_dir`` is
     unused: the source is its own data."""
-    ensure_runtime_conf(spark)
     _synth.register(spark)
     df = (
         spark.read.format("bdp_synth")
@@ -508,14 +495,11 @@ def q_custom_sink(spark, sf_dir):
     and return them. The oracle is the plain aggregate, so the
     round-trip through the custom writer must be value-exact (JSON
     shortest-repr doubles round-trip losslessly)."""
-    import tempfile
-
     from big_data_projects_spark.sources import jsonl_sink
 
-    ensure_runtime_conf(spark)
     jsonl_sink.register(spark)
     agg = (
-        load_table(spark, sf_dir, "orders")
+        _t(spark, sf_dir, "orders")
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
@@ -524,7 +508,7 @@ def q_custom_sink(spark, sf_dir):
             .alias("total_price"),
         )
     )
-    out = tempfile.mkdtemp(prefix="bdp_custom_sink_")
+    out = scratch_dir("bdp_custom_sink_")
     agg.write.format("bdp_jsonl").option("path", out).mode("append").save()
     return spark.read.schema(
         "o_orderpriority string, n_orders bigint, total_price double"
@@ -555,7 +539,7 @@ def q_scan_text_lines(spark, sf_dir):
     on a 10-value key. Synthetic text is \\t/\\n-free (word lists); the
     write asserts that precondition rather than assuming it."""
     docs = _t(spark, sf_dir, "documents")
-    out = os.path.join(tempfile.mkdtemp(prefix="bdp_text_"), "docs_txt")
+    out = os.path.join(scratch_dir("bdp_text_"), "docs_txt")
     dumped = docs.select(
         F.concat_ws("\t", F.col("doc_id").cast("string"), "text").alias(
             "value"
@@ -605,7 +589,7 @@ def q_scan_binaryfile(spark, sf_dir):
     shuffle. ASCII text == its UTF-8 bytes, so DuckDB's md5(varchar)
     matches Spark's md5(binary) over file bytes."""
     docs = _t(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="bdp_binfile_")
+    base = scratch_dir("bdp_binfile_")
     rows = (
         docs.filter(F.col("doc_id") < _BINFILE_DOCS)
         .select("doc_id", "text")
@@ -653,7 +637,7 @@ def q_zorder_layout(spark, sf_dir):
     from big_data_projects_spark.operators.layout import zordered
 
     li = _t(spark, sf_dir, "lineitem")
-    base = os.path.join(tempfile.mkdtemp(prefix="bdp_zorder_"), "li_z")
+    base = os.path.join(scratch_dir("bdp_zorder_"), "li_z")
     zordered(li, ["l_partkey", "l_suppkey"]).write.mode(
         "overwrite"
     ).parquet(base)
@@ -687,10 +671,11 @@ def q_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffling the whole fact table and shuffling only the ~20% that
     matches a selective dim predicate — the row-level complement of
     partition-level dynamic pruning. Local-scale thresholds are
-    overridden here; ensure_runtime_conf pins the defaults back for
-    every other builder, so the override cannot leak.
+    overridden here (a join hint does not get the bloom filter); the
+    registry wrapper pins the defaults back before the next build, so
+    the override lasts until a caller's session next enters the
+    package.
     """
-    ensure_runtime_conf(spark)
     # Local parquet is far below the 10G application-side / broadcast
     # thresholds; lower both so the plan exercises the same injection a
     # 100 TB fact scan would get by default.
@@ -700,8 +685,8 @@ def q_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
         "0",
     )
-    li = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders").filter(
+    li = _t(spark, sf_dir, "lineitem")
+    o = _t(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") == "1-URGENT"
     )
     return (
@@ -736,7 +721,7 @@ def q_range_sharded_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats relation (control-plane sized, a broadcast nested loop over
     dozens of rows even at 100 TB: file COUNT, not file content)."""
     docs = _t(spark, sf_dir, "documents")
-    base = os.path.join(tempfile.mkdtemp(prefix="bdp_range_"), "docs_sharded")
+    base = os.path.join(scratch_dir("bdp_range_"), "docs_sharded")
     (
         docs.repartitionByRange(8, "doc_id")
         .sortWithinPartitions("doc_id")
@@ -789,7 +774,7 @@ def q_scan_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     Footer-merge cost is bounded by file COUNT (control-plane), not
     data size."""
     docs = _t(spark, sf_dir, "documents")
-    base = os.path.join(tempfile.mkdtemp(prefix="bdp_drift_"), "feed")
+    base = os.path.join(scratch_dir("bdp_drift_"), "feed")
     docs.filter(F.col("doc_id") % 2 == 0).select(
         "doc_id", "source", "lang"
     ).write.mode("overwrite").parquet(base + "/batch=old")
@@ -824,7 +809,7 @@ def q_dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plans.py). At scale this is reading 2 of N partitions
     instead of the whole fact table."""
     ev = _t(spark, sf_dir, "events")
-    base = os.path.join(tempfile.mkdtemp(prefix="bdp_dpp_"), "events_part")
+    base = os.path.join(scratch_dir("bdp_dpp_"), "events_part")
     ev.select("event_id", "event_type", "value").write.mode(
         "overwrite"
     ).partitionBy("event_type").parquet(base)
@@ -858,9 +843,8 @@ def q_scan_csv_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
     them to _corrupt_record instead of failing the scan, and the query
     accounts good vs quarantined rows. The oracle pins the invariant:
     every original row parses, exactly the injected lines quarantine."""
-    ensure_runtime_conf(spark)
     customer = _t(spark, sf_dir, "customer")
-    out = os.path.join(tempfile.mkdtemp(prefix="bdp_csv_bad_"), "customer_csv")
+    out = os.path.join(scratch_dir("bdp_csv_bad_"), "customer_csv")
     customer.write.mode("overwrite").option("header", True).csv(out)
     bad = os.path.join(out, "zz_corrupt.csv")
     with open(bad, "w") as fh:
@@ -912,13 +896,11 @@ def q_scan_xml(spark, sf_dir):
     row-splittable like JSON-lines; at scale prefer columnar formats —
     this is the ingest-what-exists path for XML feeds."""
     import os
-    import tempfile
 
-    ensure_runtime_conf(spark)
-    ev = load_table(spark, sf_dir, "events").select(
+    ev = _t(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-    out = os.path.join(tempfile.mkdtemp(prefix="bdp_xml_"), "events_xml")
+    out = os.path.join(scratch_dir("bdp_xml_"), "events_xml")
     (
         ev.write.mode("overwrite")
         .option("rootTag", "events")
@@ -958,8 +940,7 @@ def q_observe_metrics(spark, sf_dir):
     the filtered aggregate, hash-checked as usual."""
     from pyspark.sql import Observation
 
-    ensure_runtime_conf(spark)
-    ev = load_table(spark, sf_dir, "events")
+    ev = _t(spark, sf_dir, "events")
     obs = Observation("ingest_audit")
     kept = ev.observe(
         obs,
@@ -989,8 +970,7 @@ def q_metadata_columns(spark, sf_dir):
     loaders and quarantine triage key on. Grouping by the hidden
     column proves it resolves through the scan; the oracle states the
     expected single-file layout of the testdata table."""
-    ensure_runtime_conf(spark)
-    ev = load_table(spark, sf_dir, "events")
+    ev = _t(spark, sf_dir, "events")
     return ev.groupBy(
         F.col("_metadata.file_name").alias("file_name")
     ).agg(
@@ -1027,13 +1007,12 @@ def q_codec_tradeoff(spark, sf_dir):
     collect) and the returned DataFrame is a local relation with no
     dependency on the scratch files — repeated sweeps leak no disk."""
     import shutil
-    import tempfile
 
     ev = _t(spark, sf_dir, "events")
     base = ev.repartition(4, "user_id").sortWithinPartitions(
         "user_id", "event_id"
     )
-    out = tempfile.mkdtemp(prefix="bdp_codec_")
+    out = scratch_dir("bdp_codec_")
     stats: dict[str, tuple[int, int]] = {}
     try:
         for codec in ("uncompressed", "snappy", "zstd"):

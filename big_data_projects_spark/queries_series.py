@@ -27,16 +27,10 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from big_data_projects_spark.data import load_table
+from big_data_projects_spark.data import load_table as _t
 from big_data_projects_spark.registry import register
-from big_data_projects_spark.session import ensure_runtime_conf
 
 _DEC = "decimal(38,6)"
-
-
-def _t(spark, sf_dir, name):
-    ensure_runtime_conf(spark)
-    return load_table(spark, sf_dir, name)
 
 
 @register(
@@ -988,8 +982,7 @@ def q_shard_assignment(spark, sf_dir):
     at oracle scale and exactly what the broadcast array avoids at
     100 TB. md5-based positions are engine-portable (the q_hash_split
     recipe)."""
-    ensure_runtime_conf(spark)
-    docs = load_table(spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents")
     n, r = _N_SHARDS, _N_REPLICAS
     vn = spark.range(n * r).select(
         (F.col("id") % n).alias("s"), (F.col("id") / n).cast("long").alias("r")

@@ -15,14 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from big_data_projects_spark.data import load_table
+from big_data_projects_spark.data import load_table as _t
 from big_data_projects_spark.registry import register
-from big_data_projects_spark.session import ensure_runtime_conf
-
-
-def _t(spark, sf_dir, name):
-    ensure_runtime_conf(spark)
-    return load_table(spark, sf_dir, name)
 
 
 @register(
@@ -82,7 +76,6 @@ def q_sql_variables(spark, sf_dir):
     the threshold double is bit-identical to the oracle's CTE twin."""
     ev = _t(spark, sf_dir, "events")
     ev.createOrReplaceTempView("events_var_v")
-    ensure_runtime_conf(spark)
     spark.sql(
         "DECLARE OR REPLACE VARIABLE bdp_avg_value DOUBLE DEFAULT 0.0"
     )
@@ -211,7 +204,6 @@ def q_sql_udf(spark, sf_dir):
     which is exactly what the optimizer sees."""
     docs = _t(spark, sf_dir, "documents")
     docs.createOrReplaceTempView("documents_udf_v")
-    ensure_runtime_conf(spark)
     spark.sql(
         """
         CREATE OR REPLACE TEMPORARY FUNCTION bdp_token_density(

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from big_data_projects_spark.registry import register
-from big_data_projects_spark.session import ensure_runtime_conf
+from big_data_projects_spark.session import scratch_dir
 from big_data_projects_spark.streaming.joins import (
     stream_static_enrich,
     stream_stream_click_purchase,
@@ -49,7 +49,6 @@ def q_stream_hourly_counts(spark, sf_dir):
     readStream→writeStream job (memory sink, complete mode, driven to
     completion). Decimal-accumulated sums keep streaming-state update
     order from affecting the result."""
-    ensure_runtime_conf(spark)
     return hourly_event_counts_stream(spark, sf_dir)
 
 
@@ -68,7 +67,6 @@ def q_stream_sliding_counts(spark, sf_dir):
     """Sliding 1-hour windows every 30 minutes (each event in exactly
     two windows), run as a real streaming job. Oracle replicates each
     event into its two window starts."""
-    ensure_runtime_conf(spark)
     return sliding_event_counts_stream(spark, sf_dir)
 
 
@@ -99,7 +97,6 @@ def q_stream_session_windows(spark, sf_dir):
     """Event-time session windows (30-min inactivity gap) as a real
     streaming query; final merged sessions equal batch gap-based
     sessionization (the oracle's lag/running-sum island detection)."""
-    ensure_runtime_conf(spark)
     return session_window_stream(spark, sf_dir)
 
 
@@ -110,7 +107,6 @@ def q_stream_session_windows(spark, sf_dir):
 def q_stream_dedup(spark, sf_dir):
     """Streaming dedup against the state store: first (user_id,
     event_type) occurrence passes, later duplicates are dropped."""
-    ensure_runtime_conf(spark)
     return stream_dedup(spark, sf_dir)
 
 
@@ -126,7 +122,6 @@ def q_stream_user_stats(spark, sf_dir):
     """Custom stateful operator (applyInPandasWithState): per-user
     running count + max, emitted per micro-batch in update mode; the
     bounded run's final state matches the batch aggregate."""
-    ensure_runtime_conf(spark)
     return user_running_stats_stream(spark, sf_dir)
 
 
@@ -145,7 +140,6 @@ def q_stream_static_join(spark, sf_dir):
     customer dim (no streaming state for the static side), then a daily
     tumbling-window aggregate per market segment. Run to completion over
     the bounded source; equals the batch join+group."""
-    ensure_runtime_conf(spark)
     return stream_static_enrich(spark, sf_dir)
 
 
@@ -166,7 +160,6 @@ def q_stream_stream_join(spark, sf_dir):
     keep the join state finite — the only stream-stream formulation
     that survives an unbounded source. Append mode; the bounded run
     emits exactly the batch join's pairs."""
-    ensure_runtime_conf(spark)
     return stream_stream_click_purchase(spark, sf_dir)
 
 
@@ -183,15 +176,12 @@ def q_stream_foreach_sink(spark, sf_dir):
     parquet by arbitrary batch logic (the production escape hatch for
     sinks Structured Streaming lacks), then the files are read back and
     aggregated — proving the sink persisted exactly the source rows."""
-    import tempfile
-
     from big_data_projects_spark.streaming.core import (
         events_stream,
         run_foreach_batch_to_parquet,
     )
 
-    ensure_runtime_conf(spark)
-    out = tempfile.mkdtemp(prefix="bdp_stream_sink_") + "/events_out"
+    out = scratch_dir("bdp_stream_sink_") + "/events_out"
     stream = events_stream(spark, sf_dir).select("event_id", "event_type", "value")
     run_foreach_batch_to_parquet(stream, out)
     back = spark.read.parquet(out)
@@ -228,7 +218,6 @@ def q_stream_custom_source(spark, sf_dir):
     from big_data_projects_spark.sources import synthetic
     from big_data_projects_spark.streaming.core import run_to_completion
 
-    ensure_runtime_conf(spark)
     synthetic.register(spark)
     stream = (
         spark.readStream.format("bdp_synth")
@@ -262,7 +251,6 @@ def q_stream_anti_dedup(spark, sf_dir):
         stream_static_anti_dedup,
     )
 
-    ensure_runtime_conf(spark)
     return stream_static_anti_dedup(spark, sf_dir)
 
 
@@ -279,7 +267,6 @@ def q_stream_dedup_watermarked(spark, sf_dir):
         stream_dedup_watermarked,
     )
 
-    ensure_runtime_conf(spark)
     return stream_dedup_watermarked(spark, sf_dir)
 
 
@@ -308,7 +295,6 @@ def q_stream_daily_topk(spark, sf_dir):
         daily_topk_types_stream,
     )
 
-    ensure_runtime_conf(spark)
     return daily_topk_types_stream(spark, sf_dir, k=3)
 
 
@@ -331,22 +317,19 @@ def q_stream_file_ingest(spark, sf_dir):
     limit). Each micro-batch lands via foreachBatch append; the
     read-back aggregate proves every staged row arrived exactly once.
     tests/test_streaming_recovery.py pins the batch split itself."""
-    import tempfile
-
     from big_data_projects_spark.data import load_table
     from big_data_projects_spark.streaming.core import (
         run_available_now_to_parquet,
     )
     from big_data_projects_spark.operators.relational import dsum
 
-    ensure_runtime_conf(spark)
-    stage = tempfile.mkdtemp(prefix="bdp_file_ingest_src_")
+    stage = scratch_dir("bdp_file_ingest_src_")
     base = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
     base.repartition(8).write.mode("overwrite").parquet(stage)
     stream = spark.readStream.schema(base.schema).option(
         "maxFilesPerTrigger", 2
     ).parquet(stage)
-    out = tempfile.mkdtemp(prefix="bdp_file_ingest_out_") + "/ingested"
+    out = scratch_dir("bdp_file_ingest_out_") + "/ingested"
     run_available_now_to_parquet(stream, out)
     back = spark.read.parquet(out)
     return back.groupBy(
@@ -421,7 +404,6 @@ def q_stream_drift_psi(spark, sf_dir):
         run_to_completion,
     )
 
-    ensure_runtime_conf(spark)
     from big_data_projects_spark.data import load_table
 
     # Control plane (batch): midpoint + reference-half bin edges.
@@ -609,7 +591,6 @@ def q_stream_fuzzy_dedup(spark, sf_dir):
         run_to_distributed_batch,
     )
 
-    ensure_runtime_conf(spark)
     from big_data_projects_spark.data import load_table
 
     M = D._MERSENNE31
@@ -853,7 +834,6 @@ def q_stream_ivf_gate(spark, sf_dir):
     Returns (in_vec, corpus_vec, sim) verified matches.  The oracle
     reconstructs the whole gate in SQL — frozen centroids, routing
     ranks, buckets, candidate set, verify — and hash-matches."""
-    ensure_runtime_conf(spark)
     return _ivf_gate_run(spark, sf_dir, bits=8)
 
 
@@ -1030,7 +1010,6 @@ def q_stream_bloom_dedup(spark, sf_dir):
         run_to_distributed_batch,
     )
 
-    ensure_runtime_conf(spark)
     B, K = 4096, 3
 
     def fp_col():
@@ -1138,7 +1117,6 @@ def q_stream_cdc_apply(spark, sf_dir):
         run_to_completion,
     )
 
-    ensure_runtime_conf(spark)
     stream = events_stream(spark, sf_dir).select(
         "user_id", "ts", "event_id", "value",
         F.when(F.col("event_type") == "error", "D")
@@ -1242,7 +1220,6 @@ def q_stream_dsir_gate(spark, sf_dir):
         run_to_distributed_batch,
     )
 
-    ensure_runtime_conf(spark)
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.where(F.col("doc_id") % 3 != 0)
     toks = corpus.select(
@@ -1380,7 +1357,6 @@ def q_stream_gopher_gate(spark, sf_dir):
         run_to_completion,
     )
 
-    ensure_runtime_conf(spark)
     stream = documents_stream(spark, sf_dir).where(F.col("doc_id") % 3 == 0)
     base = stream.select(
         "source", F.split(F.trim(F.lower("text")), r"\s+").alias("__t")

@@ -33,20 +33,13 @@ Scale notes (100 TB design, applied throughout):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_projects_spark.data import load_table
+from big_data_projects_spark.data import load_table as _t
 from big_data_projects_spark.operators.relational import davg, dsum
 from big_data_projects_spark.registry import register
-from big_data_projects_spark.session import ensure_runtime_conf
 
 _DEC = "decimal(38,6)"
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    ensure_runtime_conf(spark)
-    return load_table(spark, sf_dir, name)
 
 
 def _revenue():

@@ -16,15 +16,18 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from big_data_projects_spark.session import ensure_runtime_conf
+
 
 @dataclass(frozen=True)
 class Query:
     spark: Callable[[SparkSession, str], DataFrame]
     oracle: str | None = None  # None → rows-only check, no value hash
-    # The un-wrapped builder (no pre-build cache/GC hygiene): for
-    # callers that do their own session hygiene OUTSIDE a timed section
-    # (perfbench, tools/profile_query.py) so the wrapper's clearCache+gc
-    # never lands in a measured interval.
+    # The un-wrapped builder (no pre-build cache/GC hygiene, no conf
+    # pin either: it runs under the caller's conf): for callers that do
+    # their own session hygiene OUTSIDE a timed section (perfbench,
+    # tools/profile_query.py) so the wrapper's clearCache+gc never
+    # lands in a measured interval.
     raw: Callable[[SparkSession, str], DataFrame] | None = None
 
 
@@ -61,6 +64,9 @@ def register(name: str, oracle: str | None = None):
                 spark.sparkContext._jvm.System.gc()
             except Exception:
                 pass  # non-py4j backends (Connect): rely on the cleaner
+            # The caller's session enters the package here: pin the
+            # runtime conf once, for the builder and everything it calls.
+            ensure_runtime_conf(spark)
             return fn(spark, sf_dir)
 
         REGISTRY[name] = Query(build, oracle, raw=fn)

@@ -1,4 +1,5 @@
-"""SparkSession factory with scale-ready defaults.
+"""SparkSession factory with scale-ready defaults, and the state a
+session collects in this process.
 
 The reference (transform-data.py:11-26) defines create_spark_session()
 but never calls it (it relies on the Databricks `spark` global and would
@@ -9,17 +10,28 @@ reference's timestamp UDF was local-tz dependent — SURVEY.md §2.8 F1),
 Arrow for any pandas interchange, and shuffle parallelism taken from
 the session (one partition per core unless it set its own) rather
 than the 200 default.
+
+The runtime conf is pinned (ensure_runtime_conf) only where a caller's
+session enters the package: get_spark, the registry wrapper
+(``Query.spark``), ``__spark_entry__.entry`` and
+``reference_etl.run_reference_etl``. Builders, loaders and operators
+run under whatever conf the session has; ``Query.raw`` callers pin
+themselves. Scratch directories come from scratch_dir, under one root
+per process that is removed when the process exits.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 
 _REQUIRED_RUNTIME_CONF = {
-    # Pinned by ensure_runtime_conf at the top of every builder because
-    # the driver may hand us a session we didn't build.
+    # Pinned by ensure_runtime_conf where a caller's session enters the
+    # package: a caller may hand us a session we didn't build.
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -29,14 +41,13 @@ _REQUIRED_RUNTIME_CONF = {
     # a default-1g-heap driver session mid-sweep. 1M chars is plenty
     # for debugging and bounds the allocation to ~2 MB.
     "spark.sql.maxPlanStringLength": "1048576",
-    # q_bloom_filter_join / q_bucketed_join override these to force the
-    # runtime bloom filter / shuffle join to engage at test scale;
-    # pinning the defaults here means every OTHER builder restores
-    # them, so an override leaks no further than the next build in the
-    # same session (harnesses that care about the very last query call
-    # ensure_runtime_conf once more after materializing it —
-    # tools/profile_query.py does; perfbench calls it before every
-    # operation).  All three values are the Spark 4 defaults.
+    # q_bloom_filter_join overrides these to make the runtime bloom
+    # filter engage at test scale (the only override of a pinned key
+    # left in the package); pinning the defaults here means the next
+    # registry build restores them, so an override leaks no further
+    # than the next entry into the package (tools/profile_query.py
+    # pins again after materializing a query; perfbench pins before
+    # every operation).  All three values are the Spark 4 defaults.
     "spark.sql.autoBroadcastJoinThreshold": "10485760",
     "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
     "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "10GB",
@@ -81,10 +92,12 @@ def get_spark(
 def ensure_runtime_conf(spark: SparkSession) -> SparkSession:
     """Pin runtime-settable confs this engine's semantics depend on.
 
-    Called at the top of every query builder: the verification driver
-    passes in its own SparkSession, and timestamp semantics (calendar
-    extraction, epoch conversion) require a UTC session timezone to
-    match the UTC-naive oracle (SURVEY.md §7 hard-parts #2).
+    Called where a caller's session enters the package (get_spark, the
+    registry wrapper, ``__spark_entry__.entry``,
+    ``reference_etl.run_reference_etl``), not inside builders: a
+    verifier passes in its own SparkSession, and timestamp semantics
+    (calendar extraction, epoch conversion) require a UTC session
+    timezone to match the UTC-naive oracle (SURVEY.md §7 hard-parts #2).
 
     Shuffle parallelism is the session's: a value it set (get_spark's,
     a caller's ``conf.set``) is kept, and only a session that never set
@@ -100,3 +113,28 @@ def ensure_runtime_conf(spark: SparkSession) -> SparkSession:
     if not spark._jsparkSession.sessionState().conf().contains(_SHUFFLE_PARTITIONS):
         spark.conf.set(_SHUFFLE_PARTITIONS, str(spark.sparkContext.defaultParallelism))
     return spark
+
+
+# (pid, path) of this process's scratch root; a forked child that asks
+# for a directory gets a root of its own.  Two threads racing on the
+# first call may each make a root: both are registered, so both go.
+_SCRATCH_ROOT: tuple[int, str] | None = None
+
+
+def scratch_dir(prefix: str) -> str:
+    """A new directory for a builder's intermediate files.
+
+    Every one lives under a single ``bdp_*`` root per process, created
+    on first use and removed at exit by the process that created it.
+    Builders return lazy DataFrames over these files, so nothing is
+    removed before the process exits."""
+    global _SCRATCH_ROOT
+    if _SCRATCH_ROOT is None or _SCRATCH_ROOT[0] != os.getpid():
+        _SCRATCH_ROOT = (os.getpid(), tempfile.mkdtemp(prefix="bdp_"))
+        atexit.register(_remove_scratch_root, *_SCRATCH_ROOT)
+    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT[1])
+
+
+def _remove_scratch_root(pid: int, root: str) -> None:
+    if os.getpid() == pid:
+        shutil.rmtree(root, ignore_errors=True)

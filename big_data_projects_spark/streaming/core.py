@@ -12,15 +12,15 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
 from big_data_projects_spark.data import normalize_timestamps, table_schema
+from big_data_projects_spark.session import scratch_dir
 
 # One staging dir per source per process (reused across calls):
-# repeated sweeps/tests must not accumulate mkdtemp dirs — the staging
+# repeated sweeps/tests must not accumulate stage dirs — the staging
 # dir only holds symlinks to the read-only source files, so reuse is
 # safe while the source lists the same files.  Value: (stage dir, the
 # files it links).
@@ -73,7 +73,7 @@ def _staged_source(src: str, prefix: str) -> str:
         if staged == entries and os.path.isdir(stage):
             return stage
         shutil.rmtree(stage, ignore_errors=True)
-    stage = tempfile.mkdtemp(prefix=prefix)
+    stage = scratch_dir(prefix)
     for i, path in enumerate(entries):
         link = os.path.join(stage, f"{i:05d}_{os.path.basename(path)}")
         try:
@@ -89,9 +89,9 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The file-stream source requires an explicit schema: it is the
     batch table's (data.table_schema), and the timestamps are
-    normalized exactly as in data.load_table.
+    normalized exactly as in data.load_table (which sets nanos-as-long
+    too: the conf is part of the schema memo's key).
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     src = f"{sf_dir}/events.parquet"
@@ -135,12 +135,9 @@ def run_to_distributed_batch(df: DataFrame) -> DataFrame:
     production shape for candidate-scale streams — and return the sink
     contents as a DISTRIBUTED batch DataFrame (read back from parquet;
     nothing proportional to the stream's output ever touches the
-    driver). The scratch sink dir is removed at process exit."""
-    import atexit
-
+    driver). The sink dir is a scratch_dir, removed at process exit."""
     spark = df.sparkSession
-    out = tempfile.mkdtemp(prefix="bdp_stream_sink_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
+    out = scratch_dir("bdp_stream_sink_")
     run_foreach_batch_to_parquet(df, out)
     if not any(f.startswith("part-") for f in os.listdir(out)):
         return spark.createDataFrame([], df.schema)
@@ -193,7 +190,6 @@ def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     staging trick as events_stream. Documents carry no event time —
     callers run stateless transforms (append mode) or add an arrival
     timestamp if they need windows."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     src = f"{sf_dir}/documents.parquet"
     stage = _staged_source(src, "bdp_stream_docs_")
     return spark.readStream.schema(table_schema(spark, src)).parquet(stage)
@@ -204,7 +200,6 @@ def embeddings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     staging trick as documents_stream. No event time — vector-gate
     consumers run stateless in-row projections + stream-static joins
     in append mode."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     src = f"{sf_dir}/embeddings.parquet"
     stage = _staged_source(src, "bdp_stream_emb_")
     return spark.readStream.schema(table_schema(spark, src)).parquet(stage)

@@ -275,7 +275,7 @@ def test_bloom_filter_join_injects_runtime_filter(spark):
     # Row-level runtime filtering: the bloom filter built from the
     # selective orders side must reach the lineitem side BEFORE the
     # join, and the thresholds the builder overrides must be pinned
-    # back by the next builder's ensure_runtime_conf (no leak).
+    # back by the next registry build's ensure_runtime_conf (no leak).
     df = REGISTRY["q_bloom_filter_join"].spark(spark, SF)
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert "might_contain" in plan, "runtime bloom filter not injected"

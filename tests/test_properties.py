@@ -470,8 +470,8 @@ def test_aqe_toggle_invariance(spark):
     produce byte-identical results. Catches logic that accidentally
     depends on the runtime partition layout AQE produces (the exact
     failure mode of sharded prefix-sums and banded joins). AQE is
-    pinned on by ensure_runtime_conf at the top of every builder, so
-    the off-leg temporarily rewires that pin."""
+    pinned on by ensure_runtime_conf where a session enters the
+    package, so the off-leg temporarily rewires that pin."""
     from big_data_projects_spark import session as sess
     from big_data_projects_spark.queries import REGISTRY
 

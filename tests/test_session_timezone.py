@@ -1,6 +1,7 @@
-"""Results do not depend on the caller's session timezone: every builder
-pins UTC through ``ensure_runtime_conf``, so timestamp queries still
-match the UTC-naive DuckDB oracle on a session set to another zone."""
+"""Results do not depend on the caller's session timezone: the registry
+wrapper pins UTC through ``ensure_runtime_conf``, so timestamp queries
+still match the UTC-naive DuckDB oracle on a session set to another
+zone."""
 
 from __future__ import annotations
 
