@@ -129,10 +129,8 @@ def normalize_timestamps(df: DataFrame, schema: StructType) -> DataFrame:
     return df.withColumns(fixes) if fixes else df
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one testdata table as a DataFrame (lazy parquet scan over
-    the memoized schema; see normalize_timestamps for ``events.ts``
-    and the tz-naive columns).
+def _table_path(spark: SparkSession, sf_dir: str, name: str) -> str:
+    """Check ``name`` and return its path, under nanos-as-long.
 
     Every table is read under nanos-as-long, not only ``events``: the
     conf is part of the memo key, and setting it only for ``events``
@@ -140,10 +138,34 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     other value, to be inferred again once ``events`` had set it."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    path = os.path.join(sf_dir, f"{name}.parquet")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one testdata table as a DataFrame (lazy parquet scan over
+    the memoized schema; see normalize_timestamps for ``events.ts``
+    and the tz-naive columns)."""
+    path = _table_path(spark, sf_dir, name)
     schema = table_schema(spark, path)
     return normalize_timestamps(spark.read.schema(schema).parquet(path), schema)
+
+
+def load_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """readStream over one testdata table (a bounded backfill), with
+    load_table's schema and timestamps.
+
+    A directory table (part files, partitioned or not) is streamed from
+    the directory itself; partition columns keep their values.  A
+    single-file table is streamed from its parent directory filtered to
+    its file name: the file source rejects a plain file path."""
+    path = _table_path(spark, sf_dir, name)
+    schema = table_schema(spark, path)
+    reader = spark.readStream.schema(schema)
+    if os.path.isfile(path):
+        reader = reader.option("pathGlobFilter", os.path.basename(path))
+        path = os.path.dirname(path)
+    return normalize_timestamps(reader.parquet(path), schema)
 
 
 def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:

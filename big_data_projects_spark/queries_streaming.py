@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from big_data_projects_spark.data import load_stream
 from big_data_projects_spark.registry import register
 from big_data_projects_spark.session import scratch_dir
 from big_data_projects_spark.streaming.joins import (
@@ -176,13 +177,12 @@ def q_stream_foreach_sink(spark, sf_dir):
     parquet by arbitrary batch logic (the production escape hatch for
     sinks Structured Streaming lacks), then the files are read back and
     aggregated — proving the sink persisted exactly the source rows."""
-    from big_data_projects_spark.streaming.core import (
-        events_stream,
-        run_foreach_batch_to_parquet,
-    )
+    from big_data_projects_spark.streaming.core import run_foreach_batch_to_parquet
 
     out = scratch_dir("bdp_stream_sink_") + "/events_out"
-    stream = events_stream(spark, sf_dir).select("event_id", "event_type", "value")
+    stream = load_stream(spark, sf_dir, "events").select(
+        "event_id", "event_type", "value"
+    )
     run_foreach_batch_to_parquet(stream, out)
     back = spark.read.parquet(out)
     from big_data_projects_spark.operators.relational import dsum
@@ -399,10 +399,7 @@ def q_stream_drift_psi(spark, sf_dir):
     control-plane-sized state. Counts are additive, so micro-batch
     arrival order cannot change the result; the oracle is q_drift_psi's
     batch statement verbatim."""
-    from big_data_projects_spark.streaming.core import (
-        events_stream,
-        run_to_completion,
-    )
+    from big_data_projects_spark.streaming.core import run_to_completion
 
     from big_data_projects_spark.data import load_table
 
@@ -426,7 +423,7 @@ def q_stream_drift_psi(spark, sf_dir):
 
     # Stream: derive (half, bin) per event against the static edges,
     # keep running counts in state.
-    stream = events_stream(spark, sf_dir).select(
+    stream = load_stream(spark, sf_dir, "events").select(
         "event_type",
         F.unix_micros("ts").alias("us"),
         F.round(F.col("value") * 100).cast("long").alias("cents"),
@@ -586,10 +583,7 @@ def q_stream_fuzzy_dedup(spark, sf_dir):
     reconstructs the whole pipeline in SQL, so signatures, banding,
     the stream-side candidate set, and the verify all hash-match."""
     from big_data_projects_spark.operators import dedup as D
-    from big_data_projects_spark.streaming.core import (
-        documents_stream,
-        run_to_distributed_batch,
-    )
+    from big_data_projects_spark.streaming.core import run_to_distributed_batch
 
     from big_data_projects_spark.data import load_table
 
@@ -603,7 +597,7 @@ def q_stream_fuzzy_dedup(spark, sf_dir):
     ).select(F.col("doc_id").alias("corpus_doc"), "band", "bucket")
 
     # Stream side: in-row signature (no shuffle, no state).
-    stream = documents_stream(spark, sf_dir).where(
+    stream = load_stream(spark, sf_dir, "documents").where(
         F.col("doc_id") % 3 == 0
     )
     base = stream.select(
@@ -888,7 +882,6 @@ def _ivf_gate_match_stream(spark, sf_dir, bits: int = 8):
     width."""
     from big_data_projects_spark.data import load_table
     from big_data_projects_spark.operators import similarity as S
-    from big_data_projects_spark.streaming.core import embeddings_stream
 
     dim, n_bands, n_probe = 64, S.DEFAULT_LSH_BANDS, 2
 
@@ -928,7 +921,7 @@ def _ivf_gate_match_stream(spark, sf_dir, bits: int = 8):
     )
 
     # Stream side: in-row signatures + in-row routing (stateless).
-    stream = embeddings_stream(spark, sf_dir).where(F.col("vec_id") % 3 == 0)
+    stream = load_stream(spark, sf_dir, "embeddings").where(F.col("vec_id") % 3 == 0)
     vec = F.col("embedding")
     neg_inf = F.lit(float("-inf"))
     scored = F.transform(
@@ -1005,10 +998,7 @@ def q_stream_bloom_dedup(spark, sf_dir):
     drain through the distributed foreachBatch sink, never the
     driver."""
     from big_data_projects_spark.data import load_table
-    from big_data_projects_spark.streaming.core import (
-        documents_stream,
-        run_to_distributed_batch,
-    )
+    from big_data_projects_spark.streaming.core import run_to_distributed_batch
 
     B, K = 4096, 3
 
@@ -1044,7 +1034,7 @@ def q_stream_bloom_dedup(spark, sf_dir):
     words = [w - (1 << 64) if w >= (1 << 63) else w for w in words]
     mask = F.array(*[F.lit(w).cast("long") for w in words])
 
-    stream = documents_stream(spark, sf_dir).where(
+    stream = load_stream(spark, sf_dir, "documents").where(
         F.col("doc_id") % 3 == 0
     ).select("doc_id", fp_col().alias("fp"))
 
@@ -1112,12 +1102,9 @@ def q_stream_cdc_apply(spark, sf_dir):
     key-count-sized (aggregate-shaped memory sink), and the tombstone
     filter is applied to the materialized state exactly as a
     downstream reader would."""
-    from big_data_projects_spark.streaming.core import (
-        events_stream,
-        run_to_completion,
-    )
+    from big_data_projects_spark.streaming.core import run_to_completion
 
-    stream = events_stream(spark, sf_dir).select(
+    stream = load_stream(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "value",
         F.when(F.col("event_type") == "error", "D")
         .otherwise("U")
@@ -1215,10 +1202,7 @@ def q_stream_dsir_gate(spark, sf_dir):
     the scan task — the shape of a production streaming filter."""
     from big_data_projects_spark.data import load_table
     from big_data_projects_spark.queries_curation import DSIR_BUCKETS
-    from big_data_projects_spark.streaming.core import (
-        documents_stream,
-        run_to_distributed_batch,
-    )
+    from big_data_projects_spark.streaming.core import run_to_distributed_batch
 
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.where(F.col("doc_id") % 3 != 0)
@@ -1272,7 +1256,7 @@ def q_stream_dsir_gate(spark, sf_dir):
     )
 
     stream = (
-        documents_stream(spark, sf_dir)
+        load_stream(spark, sf_dir, "documents")
         .where(F.col("doc_id") % 3 == 0)
         .select(
             "doc_id",
@@ -1352,12 +1336,9 @@ def q_stream_gopher_gate(spark, sf_dir):
     the rules cost O(tokens) inside the scan task, the only state is
     |sources| running count pairs."""
     from big_data_projects_spark.queries_corpus import GOPHER_STOPWORDS
-    from big_data_projects_spark.streaming.core import (
-        documents_stream,
-        run_to_completion,
-    )
+    from big_data_projects_spark.streaming.core import run_to_completion
 
-    stream = documents_stream(spark, sf_dir).where(F.col("doc_id") % 3 == 0)
+    stream = load_stream(spark, sf_dir, "documents").where(F.col("doc_id") % 3 == 0)
     base = stream.select(
         "source", F.split(F.trim(F.lower("text")), r"\s+").alias("__t")
     )

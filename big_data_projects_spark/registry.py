@@ -7,6 +7,11 @@ sf0.01 and compares row-count + schema + order-insensitive value hash —
 so builders alias every computed column identically on both sides, and
 aggregates over doubles use order-independent decimal accumulation
 (see operators.relational.dsum).
+
+``Query.spark`` wraps the builder in two steps, clearCache and the
+runtime-conf pin; ``Query.raw`` is the builder alone.  Broadcast and
+shuffle residue of earlier queries is left to Spark's ContextCleaner,
+which runs after the JVM's own collections.
 """
 
 from __future__ import annotations
@@ -22,13 +27,11 @@ from big_data_projects_spark.session import ensure_runtime_conf
 @dataclass(frozen=True)
 class Query:
     spark: Callable[[SparkSession, str], DataFrame]
+    # The un-wrapped builder: no clearCache and no conf pin, so it runs
+    # under the caller's conf. For callers that do both themselves
+    # outside a timed section (perfbench, tools/profile_query.py).
+    raw: Callable[[SparkSession, str], DataFrame]
     oracle: str | None = None  # None → rows-only check, no value hash
-    # The un-wrapped builder (no pre-build cache/GC hygiene, no conf
-    # pin either: it runs under the caller's conf): for callers that do
-    # their own session hygiene OUTSIDE a timed section (perfbench,
-    # tools/profile_query.py) so the wrapper's clearCache+gc never
-    # lands in a measured interval.
-    raw: Callable[[SparkSession, str], DataFrame] | None = None
 
 
 REGISTRY: dict[str, Query] = {}
@@ -49,27 +52,12 @@ def register(name: str, oracle: str | None = None):
             # by the time the next builder runs, the previous query's
             # output has been materialized by the caller.
             spark.catalog.clearCache()
-            # Broadcast blocks from prior queries' joins are reclaimed
-            # only by ContextCleaner AFTER a JVM GC, and a back-to-back
-            # sweep never triggers one until allocation fails (the
-            # periodic-GC safety net defaults to 30 min — longer than
-            # the whole sweep). On a default-1g-heap session ~90
-            # queries of broadcast residue OOM'd the driver; an
-            # explicit collect per build keeps residency flat and costs
-            # ~10 ms with a small live set.
-            import gc
-
-            gc.collect()  # release py4j proxies so the JVM refs die
-            try:
-                spark.sparkContext._jvm.System.gc()
-            except Exception:
-                pass  # non-py4j backends (Connect): rely on the cleaner
             # The caller's session enters the package here: pin the
             # runtime conf once, for the builder and everything it calls.
             ensure_runtime_conf(spark)
             return fn(spark, sf_dir)
 
-        REGISTRY[name] = Query(build, oracle, raw=fn)
+        REGISTRY[name] = Query(build, fn, oracle)
         return fn  # composed queries call the raw builder, un-wrapped
 
     return deco

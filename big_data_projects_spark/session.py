@@ -106,10 +106,7 @@ def ensure_runtime_conf(spark: SparkSession) -> SparkSession:
     state-store tasks per micro-batch (AQE does not coalesce them).
     """
     for k, v in _REQUIRED_RUNTIME_CONF.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass
+        spark.conf.set(k, v)
     if not spark._jsparkSession.sessionState().conf().contains(_SHUFFLE_PARTITIONS):
         spark.conf.set(_SHUFFLE_PARTITIONS, str(spark.sparkContext.defaultParallelism))
     return spark

@@ -16,8 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_projects_spark.data import load_table
-from big_data_projects_spark.streaming.core import events_stream, run_to_completion
+from big_data_projects_spark.data import load_stream, load_table
+from big_data_projects_spark.streaming.core import run_to_completion
 
 
 def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -28,7 +28,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     so state-update order cannot affect the result. No broadcast hint:
     the static side's size decides the join strategy at plan time.
     """
-    stream = events_stream(spark, sf_dir)
+    stream = load_stream(spark, sf_dir, "events")
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
@@ -63,7 +63,7 @@ def stream_stream_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass the watermark; processAllAvailable on the bounded source
     flushes everything.
     """
-    ev = events_stream(spark, sf_dir)
+    ev = load_stream(spark, sf_dir, "events")
     clicks = (
         ev.filter(F.col("event_type") == "click")
         .select(
@@ -108,7 +108,7 @@ def stream_static_anti_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the ledger's size. At 100 TB the ledger is a bucketed/bloom-
     filtered table — the join shape is unchanged.
     """
-    stream = events_stream(spark, sf_dir)
+    stream = load_stream(spark, sf_dir, "events")
     seen = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("event_id") % 3 == 0)

@@ -24,7 +24,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from big_data_projects_spark.streaming.core import events_stream, run_to_completion
+from big_data_projects_spark.data import load_stream
+from big_data_projects_spark.streaming.core import run_to_completion
 
 _STATE_SCHEMA = StructType(
     [
@@ -68,7 +69,7 @@ def user_running_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     completion. State is partitioned by user_id (one shuffle), scales
     horizontally with keys.
     """
-    stream = events_stream(spark, sf_dir).select("user_id", "value")
+    stream = load_stream(spark, sf_dir, "events").select("user_id", "value")
     updated = stream.groupBy("user_id").applyInPandasWithState(
         _update_user_stats,
         outputStructType=_OUTPUT_SCHEMA,
@@ -87,7 +88,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exactly-once dedup: first occurrence of each
     (user_id, event_type) passes, duplicates are dropped against the
     dedup state store. Append mode — each kept row is emitted once."""
-    stream = events_stream(spark, sf_dir).select("user_id", "event_type")
+    stream = load_stream(spark, sf_dir, "events").select("user_id", "event_type")
     return run_to_completion(stream.dropDuplicates(["user_id", "event_type"]), "append")
 
 
@@ -101,7 +102,7 @@ def stream_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
     mid-run and the result provably equals global DISTINCT (the
     oracle); on a real feed the same plan runs with a horizon sized to
     the replay window."""
-    stream = events_stream(spark, sf_dir).select("user_id", "event_type", "ts")
+    stream = load_stream(spark, sf_dir, "events").select("user_id", "event_type", "ts")
     deduped = (
         stream.withWatermark("ts", "60 days")
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
@@ -116,7 +117,7 @@ def session_window_stream(
     """Event-time session windows (gap-merged) per user: sessions close
     after `gap` of inactivity. Complete mode over the bounded backfill
     → final merged sessions, identical to batch gap-sessionization."""
-    stream = events_stream(spark, sf_dir)
+    stream = load_stream(spark, sf_dir, "events")
     sess = (
         stream.withWatermark("ts", "2 hours")
         .groupBy(F.session_window("ts", gap), "user_id")

@@ -16,7 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_projects_spark.streaming.core import events_stream, run_to_completion
+from big_data_projects_spark.data import load_stream
+from big_data_projects_spark.streaming.core import run_to_completion
 
 
 def _windowed_counts(
@@ -28,7 +29,7 @@ def _windowed_counts(
     (append mode would withhold windows newer than the watermark — with
     a bounded backfill the last hours would be missing).
     """
-    stream = events_stream(spark, sf_dir)
+    stream = load_stream(spark, sf_dir, "events")
     agg = (
         stream.withWatermark("ts", watermark)
         .groupBy(F.window("ts", *window_args), "event_type")
@@ -76,12 +77,7 @@ def daily_topk_types_stream(
     serving layer, over data that is already day-local and tiny."""
     from pyspark.sql import Window
 
-    from big_data_projects_spark.streaming.core import (
-        events_stream,
-        run_to_completion,
-    )
-
-    stream = events_stream(spark, sf_dir)
+    stream = load_stream(spark, sf_dir, "events")
     counts = (
         stream.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 day"), F.col("event_type"))

@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 
 from big_data_projects_spark import data
 from big_data_projects_spark.measure import jobs_launched
-from big_data_projects_spark.streaming.core import documents_stream, events_stream
 
 from conftest import SF_SMALL
 
@@ -55,11 +54,11 @@ def test_warm_load_launches_no_job_and_plans_like_inference(spark, name):
 
 def test_table_rewritten_under_the_same_path_is_read_with_its_new_schema(spark, tmp_path):
     sf_dir = str(tmp_path)
-    for name, stream in (("events", events_stream), ("documents", documents_stream)):
+    for name in ("events", "documents"):
         path = os.path.join(sf_dir, f"{name}.parquet")
         shutil.copyfile(os.path.join(SF_SMALL, f"{name}.parquet"), path)
         before = data.load_table(spark, sf_dir, name).columns
-        assert stream(spark, sf_dir).columns == before
+        assert data.load_stream(spark, sf_dir, name).columns == before
 
         table = pq.read_table(path)
         extra = pa.array(range(table.num_rows), pa.int64())
@@ -70,7 +69,7 @@ def test_table_rewritten_under_the_same_path_is_read_with_its_new_schema(spark, 
         assert sorted(r.extra for r in after.select("extra").collect()) == list(
             range(table.num_rows)
         )
-        assert stream(spark, sf_dir).columns == before + ["extra"]
+        assert data.load_stream(spark, sf_dir, name).columns == before + ["extra"]
 
 
 def test_inference_confs_are_part_of_the_memo_key(spark, tmp_path):

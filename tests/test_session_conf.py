@@ -1,9 +1,14 @@
 """What a registry builder leaves in the caller's session: shuffle
 parallelism stays the session's own (``ensure_runtime_conf`` fills in
 one partition per core only where the session never set a value), and
-no streaming memory-sink view outlives the builder that drained it."""
+no streaming memory-sink view outlives the builder that drained it.
+A conf the session rejects fails ``ensure_runtime_conf`` loudly."""
 
 from __future__ import annotations
+
+from types import SimpleNamespace
+
+import pytest
 
 from big_data_projects_spark.queries import REGISTRY
 from big_data_projects_spark.session import ensure_runtime_conf
@@ -34,3 +39,11 @@ def test_stream_builder_drops_its_memory_sink_view(spark):
     REGISTRY["q_stream_dedup"].spark(spark, SF_SMALL)
     left = [t.name for t in spark.catalog.listTables() if t.name.startswith("bdp_stream_")]
     assert left == []
+
+
+def test_a_rejected_runtime_conf_raises():
+    def reject(key, value):
+        raise ValueError(f"cannot set {key}")
+
+    with pytest.raises(ValueError, match="cannot set spark.sql.session.timeZone"):
+        ensure_runtime_conf(SimpleNamespace(conf=SimpleNamespace(set=reject)))

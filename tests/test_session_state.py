@@ -22,13 +22,11 @@ def test_process_exit_leaves_no_scratch_dirs(tmp_path):
     script = textwrap.dedent(f"""
         from big_data_projects_spark.queries import REGISTRY
         from big_data_projects_spark.session import get_spark
-        from big_data_projects_spark.streaming.core import _staged_source
 
         spark = get_spark(app_name="bdp-scratch-test", cpus=2)
         for name in ("q_sink_parquet_partitioned", "q_bucketed_join",
                      "q_stream_fuzzy_dedup"):
             REGISTRY[name].spark(spark, {SF_SMALL!r}).collect()
-        _staged_source({SF_SMALL!r} + "/customer.parquet", "bdp_stage_test_")
     """)
     env = dict(os.environ, TMPDIR=str(tmp_path), SPARK_DRIVER_MEM="1g",
                PYTHONPATH=os.pathsep.join([str(REPO), os.environ.get("PYTHONPATH", "")]))

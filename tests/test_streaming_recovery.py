@@ -195,106 +195,31 @@ def test_available_now_honors_rate_limit(spark, tmp_path):
     assert back.select("event_id").distinct().count() == src.count()
 
 
-def test_staged_source_dir_is_reused_per_process():
-    """Repeated sweeps must not leak one mkdtemp per stream build: the
-    staging dir (a symlink to the read-only source parquet) is cached
-    per source path (the unbounded temp-dir leak class)."""
-    from big_data_projects_spark.streaming.core import _staged_source
+def _stream_rows(spark, sf_dir, cols):
+    from big_data_projects_spark.data import load_stream
+    from big_data_projects_spark.streaming.core import run_to_completion
 
-    a = _staged_source(f"{SF}/events.parquet", "bdp_test_stage_")
-    b = _staged_source(f"{SF}/events.parquet", "bdp_test_stage_")
-    assert a == b
-    import os
-
-    entries = [e for e in os.listdir(a) if "events.parquet" in e]
-    assert len(entries) == 1
-    link = os.path.join(a, entries[0])
-    assert os.path.islink(link) or os.path.isfile(link)
+    out = run_to_completion(load_stream(spark, sf_dir, "documents"), "append")
+    return sorted(tuple(r) for r in out.select(*cols).collect())
 
 
-def test_staged_source_flattens_directory_sources(tmp_path, spark):
-    """A Spark-written DIRECTORY source must be flattened into the stage
-    dir (one symlink per part file, metadata files skipped): the
-    file-stream source does not descend into a symlinked subdirectory
-    and silently read ZERO rows from the round-10 smoke corpora."""
-    import os
-
-    from big_data_projects_spark.streaming.core import _staged_source
-
-    src = str(tmp_path / "emb.parquet")
-    spark.range(10).repartition(2).write.parquet(src)
-    stage = _staged_source(src, "bdp_test_stage_dir_")
-    staged = os.listdir(stage)
-    # every entry is a data file (no _SUCCESS, no nested dir) — a real
-    # OR symlinked directory in the stage dir would be silently skipped
-    # by the file-stream source (the earlier guard passed
-    # real directories)
-    assert staged and all("part-" in e for e in staged)
-    assert all(not os.path.isdir(os.path.join(stage, e)) for e in staged)
-    assert len([e for e in staged if "part-" in e]) >= 2
-    back = spark.read.parquet(stage)
-    assert back.count() == 10
+def test_multi_part_directory_streams_every_row(tmp_path, spark):
+    """A Spark-written directory of part files streams every row."""
+    docs = load_table(spark, SF, "documents")
+    docs.repartition(3).write.parquet(str(tmp_path / "documents.parquet"))
+    assert len(list((tmp_path / "documents.parquet").glob("part-*"))) == 3
+    want = sorted(tuple(r) for r in docs.select("doc_id", "text").collect())
+    assert _stream_rows(spark, str(tmp_path), ("doc_id", "text")) == want
 
 
-def test_staged_source_flattens_hive_partitioned_sources(tmp_path, spark):
-    """A hive-PARTITIONED source (partitionBy) nests part files one
-    level down per partition value; a single-level flatten would stage
-    the partition DIRECTORIES, which the file-stream source silently
-    skips — the same zero-row failure one level deeper.
-    The walk must recurse so every leaf part file is staged flat.
-    (Partition-column values live only in the directory names, so the
-    flattened stage drops that column — callers staging partitioned
-    sources must carry their columns in the data files; asserted here
-    by reading back the data column only.)"""
-    import os
-
-    from big_data_projects_spark.streaming.core import _staged_source
-    from pyspark.sql import functions as F
-
-    src = str(tmp_path / "part_emb.parquet")
-    (
-        spark.range(12)
-        .withColumn("bucket", (F.col("id") % F.lit(3)).cast("int"))
-        .write.partitionBy("bucket")
-        .parquet(src)
-    )
-    stage = _staged_source(src, "bdp_test_stage_hive_")
-    staged = os.listdir(stage)
-    assert staged and all("part-" in e for e in staged)
-    assert all(not os.path.isdir(os.path.join(stage, e)) for e in staged)
-    # one leaf file per partition at minimum
-    assert len(staged) >= 3
-    back = spark.read.parquet(stage)
-    assert back.select("id").distinct().count() == 12
-
-
-def test_staged_source_survives_symlink_cycles(tmp_path, spark):
-    """A symlink loop inside a staged source directory
-    must not hang the flatten (os.walk followlinks=False — Spark
-    writes real nested directories, never symlinked ones).  Symlinked
-    FILES at any level are still staged; the directory symlink itself
-    is simply not descended into."""
-    import os
-
-    from big_data_projects_spark.streaming.core import _staged_source
-
-    src = str(tmp_path / "looped.parquet")
-    spark.range(7).coalesce(1).write.parquet(src)
-    # adversarial shapes: a self-loop, and a symlinked data file
-    os.symlink(src, os.path.join(src, "loop"))
-    real = [e for e in os.listdir(src) if e.startswith("part-")][0]
-    os.symlink(
-        os.path.join(src, real), os.path.join(src, "part-linked.parquet")
-    )
-    stage = _staged_source(src, "bdp_test_stage_loop_")
-    staged = os.listdir(stage)
-    assert staged and all(
-        not os.path.isdir(os.path.join(stage, e)) for e in staged
-    )
-    # the real part file AND the file symlink staged; the loop skipped
-    assert len([e for e in staged if "part-" in e]) == 2
-    back = spark.read.parquet(stage)
-    assert back.count() == 14  # 7 rows via each of the two staged links
+def test_partitioned_directory_streams_its_partition_values(tmp_path, spark):
+    """A partitionBy directory streams every row with the value of its
+    partition column, which lives only in the directory names."""
+    docs = load_table(spark, SF, "documents")
+    docs.write.partitionBy("lang").parquet(str(tmp_path / "documents.parquet"))
+    want = sorted(tuple(r) for r in docs.select("doc_id", "lang").collect())
+    assert len({lang for _, lang in want}) > 1
+    assert _stream_rows(spark, str(tmp_path), ("doc_id", "lang")) == want
 
 
 def test_directory_rewritten_with_new_file_names_streams_its_rows(tmp_path, spark):

@@ -4,7 +4,9 @@ factors. The pytest harness pins sf0.01 (the driver's scale); this tool
 answers the robustness question the driver can't: does every
 cross-engine hash-equality hold at OTHER scales too (rounding
 boundaries, percentile ties, sketch error bounds are all
-data-dependent)? Run: python tools/oracle_sweep.py [sf_dir ...]
+data-dependent)? The session runs on get_spark's default cores
+($SPARK_GRAFT_CPUS, else every core). Run:
+python tools/oracle_sweep.py [sf_dir ...]
 """
 
 from __future__ import annotations
@@ -26,7 +28,7 @@ def main() -> None:
     from big_data_projects_spark.session import get_spark
     from tests.oracle_utils import compare_query
 
-    spark = get_spark(app_name="oracle-sweep", cpus=16, shuffle_partitions=16)
+    spark = get_spark(app_name="oracle-sweep")
     spark.sparkContext.setLogLevel("ERROR")
 
     failures: list[tuple[str, str, str]] = []

@@ -79,7 +79,7 @@ def main() -> None:
     def plan_text(name: str) -> str:
         q = REGISTRY[name]
         spark.catalog.clearCache()
-        df = (q.raw or q.spark)(spark, sf_dir)
+        df = q.raw(spark, sf_dir)
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
@@ -124,12 +124,11 @@ def main() -> None:
         for _ in range(runs):
             spark.catalog.clearCache()
             spark.sparkContext._jvm.System.gc()
-            builder = q.raw or q.spark
 
             def build():
                 calls0 = round_trips
                 t0 = time.perf_counter()
-                df = builder(spark, sf_dir)
+                df = q.raw(spark, sf_dir)
                 return df, time.perf_counter() - t0, round_trips - calls0
 
             def force():
