@@ -16,6 +16,10 @@ and the session's values of the confs that change parquet inference
 session that infers differently, gets a fresh inference. Non-local
 (``scheme://``) paths are not memoized. Parquet scans get column
 pruning + predicate pushdown from Catalyst for free.
+
+Loaders set no session conf: the nanos-as-long read that a
+TIMESTAMP(NANOS) column needs is pinned where the session enters the
+package (session.ensure_runtime_conf).
 """
 
 from __future__ import annotations
@@ -108,7 +112,8 @@ def normalize_timestamps(df: DataFrame, schema: StructType) -> DataFrame:
     streaming DataFrames.
 
     - ``ts`` stored as parquet TIMESTAMP(NANOS), which Spark 4 reads
-      only via the legacy nanos-as-long conf, is converted with
+      only via the legacy nanos-as-long conf (pinned by
+      session.ensure_runtime_conf), is converted with
       *integer* division (ns→µs — double division would lose precision
       at int64-nanosecond scale).
     - Columns written tz-naive (isAdjustedToUTC=false: events.ts,
@@ -129,16 +134,10 @@ def normalize_timestamps(df: DataFrame, schema: StructType) -> DataFrame:
     return df.withColumns(fixes) if fixes else df
 
 
-def _table_path(spark: SparkSession, sf_dir: str, name: str) -> str:
-    """Check ``name`` and return its path, under nanos-as-long.
-
-    Every table is read under nanos-as-long, not only ``events``: the
-    conf is part of the memo key, and setting it only for ``events``
-    would leave a table loaded before ``events`` memoized under the
-    other value, to be inferred again once ``events`` had set it."""
+def _table_path(sf_dir: str, name: str) -> str:
+    """Check ``name`` and return its path."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
@@ -146,7 +145,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata table as a DataFrame (lazy parquet scan over
     the memoized schema; see normalize_timestamps for ``events.ts``
     and the tz-naive columns)."""
-    path = _table_path(spark, sf_dir, name)
+    path = _table_path(sf_dir, name)
     schema = table_schema(spark, path)
     return normalize_timestamps(spark.read.schema(schema).parquet(path), schema)
 
@@ -159,7 +158,7 @@ def load_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     the directory itself; partition columns keep their values.  A
     single-file table is streamed from its parent directory filtered to
     its file name: the file source rejects a plain file path."""
-    path = _table_path(spark, sf_dir, name)
+    path = _table_path(sf_dir, name)
     schema = table_schema(spark, path)
     reader = spark.readStream.schema(schema)
     if os.path.isfile(path):

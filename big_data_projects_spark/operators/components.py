@@ -70,7 +70,7 @@ def connected_components(
     # unchanged (persist materialized the same rows once).  On a
     # multi-node cluster use reliable checkpoint(dir) if executor-loss
     # tolerance of the round state matters (same trade as
-    # operators/graph.py pagerank).
+    # operators/graph.py pagerank_units).
     # Lazy: round 1's convergence aggregate is the first action over
     # sym and materializes the checkpoint inside that job — an eager
     # checkpoint here would serialize one extra job before the loop.

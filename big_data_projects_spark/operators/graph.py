@@ -1,5 +1,5 @@
-"""Graph analytics over an edge list: deterministic PageRank and
-triangle counting.
+"""Graph analytics over an edge list: exact-integer PageRank, triangle
+counting and label propagation.
 
 Companion to components.py (which turns similarity pairs into dedup
 clusters): PageRank ranks nodes *within* the similarity graph — e.g.
@@ -9,12 +9,12 @@ for choosing cluster representatives.
 
 Determinism discipline: each iteration's rank updates are sums of
 per-edge contributions, and double summation is order-dependent under
-parallelism — so contributions are cast to DECIMAL(38,18) before the
-aggregate (order-independent exact addition, same trick as
-relational.dsum), making ranks bit-stable across runs, partitionings,
-and cluster sizes. Per-round cost is one shuffle join (edges⋈ranks on
-the uniform node key) plus one keyed aggregate — the same shape as
-connected_components, and the only shape that holds at 100 TB.
+parallelism — so ranks are held in int64 units (order-free exact
+addition, see pagerank_units), making them bit-stable across runs,
+partitionings, and cluster sizes. Per-round cost is one shuffle join
+(edges⋈ranks on the uniform node key) plus one keyed aggregate — the
+same shape as connected_components, and the only shape that holds at
+100 TB.
 
 Beyond-reference capability (SURVEY.md §7 phase 3; the reference has
 no graph surface).
@@ -24,129 +24,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-_DEC = "decimal(38,18)"
-
-
-def pagerank(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    damping: float = 0.85,
-    iterations: int = 10,
-    directed: bool = False,
-) -> DataFrame:
-    """(node, rank) after a fixed number of power iterations.
-
-    Undirected by default (edges are symmetrized), so every node has
-    out-degree ≥ 1 and no dangling-mass correction is needed. In
-    directed mode the node set is the union of sources AND sinks, and
-    dangling nodes (out-degree 0 — e.g. pure sinks) redistribute their
-    rank mass uniformly each iteration, the standard correction —
-    ranks over the node set sum to 1 either way (up to the final
-    double cast). A fixed iteration count (not a convergence epsilon)
-    keeps the result a pure function of the input.
-    """
-    e = edges.select(
-        F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
-    )
-    if not directed:
-        e = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    e = e.distinct().persist()
-
-    out_deg = e.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
-    links = e.join(out_deg, "a").select("a", "b", "deg").persist()
-    links.count()
-
-    nodes = (
-        e.select(F.col("a").alias("node"))
-        .union(e.select(F.col("b").alias("node")))
-        .distinct()
-        .persist()
-    )
-    n_nodes = nodes.count()
-    e.unpersist()
-    base = (1.0 - damping) / n_nodes
-    # Dangling nodes: no outgoing edges (only possible in directed
-    # mode). Their rank mass would otherwise leak out of the system
-    # each iteration, deflating every rank.
-    dangling = nodes.join(
-        out_deg.select(F.col("a").alias("node")), "node", "left_anti"
-    ).persist()
-    has_dangling = directed and dangling.count() > 0
-
-    ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("rank"))
-    for _ in range(iterations):
-        contribs = links.join(ranks, links["a"] == ranks["node"]).select(
-            F.col("b").alias("node"),
-            (F.col("rank") / F.col("deg")).cast(_DEC).alias("contrib"),
-        )
-        summed = contribs.groupBy("node").agg(
-            F.sum("contrib").alias("mass")
-        )
-        if directed:
-            # Nodes with no in-links keep the teleport term only —
-            # the left join is load-bearing only on the directed path.
-            new_ranks = nodes.join(summed, "node", "left").select(
-                "node",
-                F.coalesce(F.col("mass"), F.lit(0).cast(_DEC)).alias(
-                    "mass"
-                ),
-            )
-        else:
-            # Symmetrized edges ⇒ every node is a target of at least
-            # one contribution, so summed's key set IS the node set —
-            # the nodes left-join would be a per-round no-op costing a
-            # join stage (A/B-measured ~2.4x on the whole loop,
-            # bit-identical ranks; BASELINE.md@be14222 round 6).
-            new_ranks = summed
-        if has_dangling:
-            # One-row decimal aggregate of dangling rank, broadcast to
-            # every node as a uniform share — no driver collect.
-            dmass = (
-                ranks.join(dangling, "node", "left_semi")
-                .agg(
-                    F.coalesce(
-                        F.sum(F.col("rank").cast(_DEC)), F.lit(0).cast(_DEC)
-                    ).alias("dmass")
-                )
-            )
-            new_ranks = new_ranks.crossJoin(F.broadcast(dmass)).select(
-                "node",
-                (F.col("mass") + (F.col("dmass") / F.lit(n_nodes)).cast(_DEC)).alias(
-                    "mass"
-                ),
-            )
-        new_ranks = new_ranks.select(
-            "node",
-            (F.lit(base) + F.lit(damping) * F.col("mass").cast("double")).alias(
-                "rank"
-            ),
-        )
-        # Iterative lineage MUST be truncated, not just cached: with
-        # persist() alone the logical plan (and per-round analysis
-        # cost) grows linearly with the iteration count. localCheckpoint
-        # cuts the plan to a leaf; on a multi-node cluster use reliable
-        # checkpoint(dir) for executor-loss tolerance.
-        # EVERY round, deliberately: these iteration relations are
-        # control-plane sized, so the wall is Catalyst analysis of the
-        # per-round plan, not job launch — an every-2nd-round cadence
-        # was A/B-measured SLOWER (the doubled plan depth costs more to
-        # optimize than the saved action; BASELINE.md@be14222 round 6).
-        # eager=False was tried and REJECTED in r13 (the
-        # pipelined-rounds idea): q_pagerank_sim_graph regressed
-        # 6.1 -> 9.0 s in a controlled same-session A/B.  Under AQE,
-        # localCheckpoint(eager=False) is not actually lazy — creating
-        # the LogicalRDD calls queryExecution.toRdd, and an adaptive
-        # plan's toRdd materializes every shuffle stage right there —
-        # so the "deferred" variant ran the same per-round shuffles at
-        # checkpoint() time PLUS re-ran each round's unpersisted result
-        # stage inside later rounds' planning and the final action.
-        ranks = new_ranks.localCheckpoint(eager=True)
-    links.unpersist()
-    nodes.unpersist()
-    dangling.unpersist()
-    return ranks
 
 
 def pagerank_units(
@@ -162,7 +39,7 @@ def pagerank_units(
     rank_units, rank) after a fixed number of power iterations, with
     every quantity held in int64 "units" of 1/scale.
 
-    Why integers instead of the decimal accumulation of pagerank():
+    Why integers instead of a decimal accumulation of double ranks:
     int64 sums are order-free AND restatable bit-for-bit in any SQL
     engine — double→decimal casts are not (Spark rounds the double's
     shortest decimal rendering, other engines round its exact binary
@@ -172,8 +49,8 @@ def pagerank_units(
     bounded by `scale` (1e15 << 2**63), so no overflow at any corpus
     size, and the whole fixpoint is a pure integer function of the edge
     set — hash-matchable by an unrolled CTE oracle. The per-round plan
-    is the same join+aggregate shape as pagerank(); lineage is
-    truncated per round with localCheckpoint for the same reason.
+    is one join plus one aggregate; lineage is truncated per round with
+    localCheckpoint.
 
     The floor at each hop leaks < 1 unit (1e-15) of mass per node per
     round — irrelevant for ranking, and identical on both engines.
@@ -221,14 +98,20 @@ def pagerank_units(
                 )
             ).cast("long").alias("r"),
         )
-        # Lineage truncated EVERY round, deliberately — see the
-        # comment in pagerank(): the A/B-measured every-2nd-round
-        # cadence was slower (plan-analysis cost dominates for these
-        # control-plane-sized relations).  eager=False measured and
-        # REJECTED in r13 (see pagerank()): AQE makes the "lazy"
-        # checkpoint execute its shuffles at toRdd time anyway, and the
-        # unpersisted result stages re-run per reference — controlled
-        # A/B read 6.1 -> 9.0 s on q_pagerank_sim_graph.
+        # Iterative lineage MUST be truncated, not just cached: with
+        # persist() alone the logical plan (and per-round analysis
+        # cost) grows linearly with the iteration count.
+        # localCheckpoint cuts the plan to a leaf; on a multi-node
+        # cluster use reliable checkpoint(dir) for executor-loss
+        # tolerance.  EVERY round, deliberately: the A/B-measured
+        # every-2nd-round cadence was slower (plan-analysis cost
+        # dominates for these control-plane-sized relations).
+        # eager=False measured and REJECTED in r13: under AQE,
+        # localCheckpoint(eager=False) is not lazy — creating the
+        # LogicalRDD calls queryExecution.toRdd, which materializes
+        # every shuffle stage right there — and the unpersisted result
+        # stages re-run per reference; controlled A/B read 6.1 -> 9.0 s
+        # on q_pagerank_sim_graph.
         ranks = ranks.localCheckpoint(eager=True)
     links.unpersist()
     nodes.unpersist()

@@ -1,10 +1,9 @@
 """Declarative data-quality expectations over a DataFrame.
 
 A rule is (name, boolean Column) where the column is TRUE when the row
-PASSES. `check_expectations` evaluates every rule in one pass (no
-per-rule scans): each rule becomes a 0/1 projection, violations
-aggregate map-side, and rows failing any rule can be split off for
-quarantine. This is the validation gate a training-data pipeline runs
+PASSES. `violations_summary` evaluates every rule in one pass (no
+per-rule scans): each rule becomes a conditional count, and the
+violations aggregate map-side. This is the validation gate a training-data pipeline runs
 between ingestion and publication; rules are plain Catalyst expressions
 so the whole check stays JVM-side and pushdown-friendly.
 """
@@ -38,23 +37,3 @@ def violations_summary(
     for p in pairs[1:]:
         out = out.unionByName(p)
     return out
-
-
-def split_quarantine(
-    df: DataFrame, rules: list[tuple[str, Column]]
-) -> tuple[DataFrame, DataFrame]:
-    """(clean, quarantined): a row is quarantined when it fails ANY
-    rule; the quarantine side carries a `failed_rules` array naming the
-    violated rules for triage."""
-    failed = F.array_compact(
-        F.array(
-            *[
-                F.when(~cond, F.lit(name)).otherwise(F.lit(None))
-                for name, cond in rules
-            ]
-        )
-    )
-    tagged = df.withColumn("failed_rules", failed)
-    clean = tagged.filter(F.size("failed_rules") == 0).drop("failed_rules")
-    quarantined = tagged.filter(F.size("failed_rules") > 0)
-    return clean, quarantined

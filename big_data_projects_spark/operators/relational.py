@@ -53,19 +53,16 @@ def grouped_count(df: DataFrame, keys: list[str], alias: str = "count") -> DataF
     return df.groupBy(*keys).agg(F.count(F.lit(1)).alias(alias))
 
 
-def star_join(
-    fact: DataFrame,
-    dims: list[tuple[DataFrame, Column]],
-    broadcast_dims: bool = True,
-) -> DataFrame:
-    """Chained inner equi-joins of one fact against small dims (J3,
-    transform-data.py:276-285). Dims are broadcast by default: at 100 TB
-    the fact never shuffles for a dim join, each task streams its fact
-    partition against an in-memory hash map of the dim."""
+def star_join(fact: DataFrame, dims: list[tuple[DataFrame, Column]]) -> DataFrame:
+    """Chained inner equi-joins of one fact against its dims (J3,
+    transform-data.py:276-285). The caller wraps a provably bounded dim
+    in ``F.broadcast`` (at 100 TB the fact then never shuffles for that
+    join: each task streams its fact partition against an in-memory
+    hash map of the dim); an unwrapped dim is left to AQE, which
+    broadcasts it at runtime when it fits."""
     out = fact
     for dim, cond in dims:
-        right = F.broadcast(dim) if broadcast_dims else dim
-        out = out.join(right, cond, "inner")
+        out = out.join(dim, cond, "inner")
     return out
 
 

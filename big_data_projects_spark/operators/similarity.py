@@ -22,20 +22,10 @@
                  O(k)) — builds the IVF partitioning when no natural
                  block key exists.
 
-No Python in the similarity hot loop by default: folds are Catalyst
-higher-order functions — the sequential fold is what makes signs/sims
-reproduce bit-for-bit in the DuckDB oracles (a matmul reorders
-additions, so a near-zero dot can flip sign cross-engine). The
-Arrow-batched matmul IS selectable where arithmetic density dominates:
-``band_signature_frame(..., mode="arrow")`` /
-``lsh_neardup_pairs(..., sig_mode="arrow")`` run the signature
-projection as one n×dim · dim×planes BLAS call per batch — measured
-head-to-head on the 48-plane projection at 200k×64-dim vectors
-(tools/scale_smoke.py x_lsh_sig_hof vs x_lsh_sig_arrow, 2026-08-16):
-0.64 s Arrow vs 5.68 s HOF, ~9×, and the gap widens with dim. The
-default stays "hof" (the hash-matched mode); at dim ≥ several hundred
-(real embedding widths) select "arrow" — banding/join/verify are
-mode-agnostic, and mode agreement on the testdata is unit-pinned.
+No Python in the similarity hot loop outside batch_topk_matmul: folds
+are Catalyst higher-order functions — the sequential fold is what makes
+signs/sims reproduce bit-for-bit in the DuckDB oracles (a matmul
+reorders additions, so a near-zero dot can flip sign cross-engine).
 """
 
 from __future__ import annotations
@@ -44,6 +34,8 @@ import random
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from big_data_projects_spark.data import spread_small_scan
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -381,8 +373,6 @@ def ivf_merge_ingest(
     # stage — single-threaded on a one-row-group testdata scan; spread
     # the rows across cores first (no-op at real scale — see
     # data.spread_small_scan; r12 optimization).
-    from big_data_projects_spark.data import spread_small_scan
-
     corpus_bands = (
         spread_small_scan(corpus.select(id_col, part_col, vec_col))
         .select(id_col, part_col, *sigs)
@@ -544,86 +534,6 @@ def band_signature_cols(
     ]
 
 
-def band_signature_frame(
-    emb: DataFrame,
-    dim: int,
-    bits_per_band: int,
-    n_bands: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    mode: str = "hof",
-) -> DataFrame:
-    """(id, vec, b0..b{n_bands-1}) — the banded sign-signature relation
-    every LSH consumer joins on, under a selectable physical mode:
-
-    - ``mode="hof"`` (default): the JVM higher-order-function fold of
-      band_signature_cols — zero serialization, deterministic
-      SEQUENTIAL adds, so buckets reproduce bit-for-bit in the DuckDB
-      oracles. The hash-matched mode; stays the default.
-    - ``mode="arrow"``: Arrow-batched mapInPandas matmul — ONE
-      n×dim · dim×(bits·bands) BLAS call per batch instead of
-      bits·bands interpreted fold-dots per row. Measured 9× faster at
-      200k×64-dim (tools/scale_smoke.py x_lsh_sig_hof vs
-      x_lsh_sig_arrow, 5.68 s vs 0.64 s); the gap widens with dim —
-      the production mode for real embedding widths (dim ≥ several
-      hundred). The matmul reorders float additions, so a plane dot
-      within reassociation distance of 0 could flip sign vs the fold;
-      on the driver testdata the two modes produce IDENTICAL
-      signatures (pinned by tests/test_operators_unit.py).
-
-    Both modes emit the same schema and the same deterministic planes
-    (seeded rng), so downstream banding/join/verify is mode-agnostic.
-    """
-    if mode == "hof":
-        bands = band_signature_cols(dim, bits_per_band, n_bands, vec_col)
-        return emb.select(F.col(id_col), F.col(vec_col), *bands)
-    if mode != "arrow":
-        raise ValueError(f"unknown signature mode: {mode!r}")
-
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    planes = _hyperplanes(dim, bits_per_band * n_bands)
-    in_fields = {f.name: f for f in emb.schema.fields}
-    out_schema = StructType(
-        [in_fields[id_col], in_fields[vec_col]]
-        + [StructField(f"b{j}", LongType(), False) for j in range(n_bands)]
-    )
-
-    def project(batches):
-        import numpy as np
-        import pandas as pd
-
-        p = np.asarray(planes, dtype=np.float64).T  # dim × (bits·bands)
-        weights = 1 << np.arange(bits_per_band, dtype=np.int64)
-        for pdf in batches:
-            cols = {id_col: pdf[id_col], vec_col: pdf[vec_col]}
-            if len(pdf):
-                vec_series = pdf[vec_col]
-                if vec_series.isna().any():
-                    # Mode parity on NULL vectors: the
-                    # HOF fold's `when(dot > 0, ...)` buckets a NULL
-                    # embedding as all-zero bits, while np.stack would
-                    # raise — a crash-vs-silent asymmetry in a pure
-                    # physical-strategy knob.  Zero-fill for the
-                    # projection only (dot = 0 → same all-zero bits);
-                    # the output row keeps its original NULL vector.
-                    zero = [0.0] * dim
-                    vec_series = vec_series.apply(
-                        lambda x: zero if x is None else x
-                    )
-                v = np.stack(vec_series.to_numpy()).astype(np.float64)
-                signs = v @ p > 0
-                for j in range(n_bands):
-                    block = signs[:, j * bits_per_band : (j + 1) * bits_per_band]
-                    cols[f"b{j}"] = (block * weights).sum(axis=1)
-            else:
-                for j in range(n_bands):
-                    cols[f"b{j}"] = pd.Series([], dtype="int64")
-            yield pd.DataFrame(cols)
-
-    return emb.select(id_col, vec_col).mapInPandas(project, schema=out_schema)
-
-
 def lsh_neardup_pairs(
     emb: DataFrame,
     dim: int,
@@ -632,10 +542,13 @@ def lsh_neardup_pairs(
     vec_col: str = "embedding",
     bits_per_band: int | None = None,
     n_bands: int = DEFAULT_LSH_BANDS,
-    sig_mode: str = "hof",
 ) -> DataFrame:
     """Random-hyperplane LSH near-dup pairs: per-band sign signatures →
     bucket equi-joins for candidates → exact cosine verification.
+
+    The signatures are band_signature_cols selected next to (id, vec),
+    as in ivf_merge_ingest and hard_negatives_ann: the sequential JVM
+    fold, so buckets reproduce bit-for-bit in the DuckDB oracle.
 
     Scale contract: within-bucket pair work grows with (bucket size)²,
     so the signature width must grow with the corpus — ``bits_per_band``
@@ -687,10 +600,11 @@ def lsh_neardup_pairs(
     # Every band contributes two join-side consumers of sig, and the
     # verify re-reads the (id, vec) projection; without persist the
     # signature projection (bits_per_band × n_bands plane dots per
-    # row, HOF fold or Arrow matmul per sig_mode) recomputes once per
-    # consumer.
-    sig = band_signature_frame(
-        emb, dim, bits_per_band, n_bands, id_col, vec_col, mode=sig_mode
+    # row) recomputes once per consumer.
+    sig = emb.select(
+        F.col(id_col),
+        F.col(vec_col),
+        *band_signature_cols(dim, bits_per_band, n_bands, vec_col),
     ).persist()
     cands = None
     for band in range(n_bands):
@@ -719,6 +633,17 @@ def lsh_neardup_pairs(
     )
 
 
+def _sq_dist(a: str, b: str) -> str:
+    """SQL text of the squared L2 distance between two array<double>
+    expressions: the sequential zip_with/aggregate double fold every
+    k-means distance uses, so ties and argmins are bit-stable."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> "
+        "(CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), "
+        "0.0D, (acc, x) -> acc + x)"
+    )
+
+
 def kmeans_assign(
     emb: DataFrame,
     k: int = 8,
@@ -742,13 +667,14 @@ def kmeans_assign(
       anywhere (hash buckets + deterministic argmax with id tiebreak) —
       retried stages reproduce identical seeds, and the seed phase is
       O(1) full-corpus scans where farthest-first traversal was O(k).
-    - distances are computed IN-ROW against the candidate/centroid set
-      embedded as an array<struct> literal (the set is driver-small and
-      bounded by construction: ≤ 8k+1 candidates, exactly ≤ k
-      centroids): ``array_min(transform(lit_set, c → struct(d, id)))``
-      — the per-row argmin never leaves the scan task, so there is NO
-      corpus×k crossJoin, no groupBy keyed on the vector column, and
-      no per-id window shuffle anywhere in the operator. Lexicographic
+    - distances are computed IN-ROW against the candidate/centroid set,
+      attached to every row as a broadcast one-row frame (the set is
+      driver-small and bounded by construction: ≤ 8k+1 candidates,
+      exactly ≤ k centroids): ``array_min(zip_with(set, ids, (c, i) →
+      struct(d, i)))`` — the per-row argmin never leaves the scan
+      task, so there is NO corpus×k crossJoin, no groupBy keyed on the
+      vector column, and no per-id window shuffle anywhere in the
+      operator. Lexicographic
       struct ordering reproduces the old (distance, id) tie-break
       exactly, and the same zip_with/aggregate double fold keeps the
       arithmetic bit-identical.
@@ -764,16 +690,6 @@ def kmeans_assign(
 
     Returns (id, cluster) assignments.
     """
-    def _sq_dist(a: Column, b: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(
-                a, b, lambda x, y: (x.cast("double") - y.cast("double"))
-                * (x.cast("double") - y.cast("double"))
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
     # The distance argmin is a higher-order-function fold — interpreted,
     # not codegen'd — so its wall scales with rows-per-task. A small
     # single-file scan (the sf0.1 bench: one parquet row-group, ONE
@@ -787,10 +703,7 @@ def kmeans_assign(
     # doubles instead of the stored 4-byte floats (2× the bytes).
     # Element order within each vector is untouched, so every
     # downstream fold is bit-identical.
-    narrow = emb.select(F.col(id_col).alias("__id"), F.col(vec_col))
-    target = emb.sparkSession.sparkContext.defaultParallelism
-    if narrow.rdd.getNumPartitions() < target:
-        narrow = narrow.repartition(target)
+    narrow = spread_small_scan(emb.select(F.col(id_col).alias("__id"), F.col(vec_col)))
     vecs = narrow.select(
         "__id",
         F.expr(f"transform({vec_col}, x -> cast(x as double))").alias("__v"),
@@ -827,17 +740,23 @@ def kmeans_assign(
         )
         return df.crossJoin(F.broadcast(one))
 
+    def _nearest_id(field: str) -> Column:
+        # Per-row argmin over the attached set: lexicographic array_min
+        # on struct(d, id) = min distance, smallest id on ties.
+        return F.expr(
+            f"array_min(zip_with(__cv, __cids, (c, i) -> "
+            f"struct({_sq_dist('__v', 'c')} AS d, i AS {field}))).{field}"
+        )
+
     # Oversampling rounds: per hash-bucket farthest point from the
     # current candidate set — one scan per round, candidates stay
     # driver-small (≤ n_buckets per round) by construction. The
-    # per-row min-distance is in-row (array_min over the candidate
-    # literal); the bucket argmax is a map-side-combined max_by on
+    # per-row min-distance is in-row (array_min over the attached
+    # candidate set); the bucket argmax is a map-side-combined max_by on
     # (dmin, -id) — max distance, smallest id on ties, identical to
     # the former row_number(dmin DESC, id) window without its shuffle.
     for rnd in range(1, seed_rounds + 1):
-        dmin_col = F.array_min(
-            F.transform(F.col("__cv"), lambda c: _sq_dist(F.col("__v"), c))
-        )
+        dmin_col = F.expr(f"array_min(transform(__cv, c -> {_sq_dist('__v', 'c')}))")
         picked = (
             _with_set(
                 vecs, [r["__v"] for r in cands], [r["__id"] for r in cands]
@@ -867,22 +786,13 @@ def kmeans_assign(
     # — the former per-point window's exact ordering) — then reduce to
     # k seeds with a driver-side weighted greedy k-center pass over
     # the tiny candidate table.
-    nearest = F.array_min(
-        F.zip_with(
-            F.col("__cv"),
-            F.col("__cids"),
-            lambda c, i: F.struct(
-                _sq_dist(F.col("__v"), c).alias("d"), i.alias("cid")
-            ),
-        )
-    )
     weights = {
         r["__cid"]: r["w"]
         for r in (
             _with_set(
                 vecs, [r["__v"] for r in cands], [r["__id"] for r in cands]
             )
-            .select(nearest["cid"].alias("__cid"))
+            .select(_nearest_id("cid").alias("__cid"))
             .groupBy("__cid")
             .agg(F.count(F.lit(1)).alias("w"))
             .collect()
@@ -929,33 +839,22 @@ def kmeans_assign(
         # computed entirely inside the scan task (no shuffle). The int
         # ids_type keeps the cluster column's former createDataFrame
         # schema (`cluster int`) for every downstream consumer.
-        best = F.array_min(
-            F.zip_with(
-                F.col("__cv"),
-                F.col("__cids"),
-                lambda c, i: F.struct(
-                    _sq_dist(F.col("__v"), c).alias("d"),
-                    i.alias("cluster"),
-                ),
-            )
-        )
         return _with_set(
             df, [v for _, v in cent_rows], [c for c, _ in cent_rows], "int"
-        ).select("__id", "__v", best["cluster"].alias("cluster"))
+        ).select("__id", "__v", _nearest_id("cluster").alias("cluster"))
 
     # Lloyd: assign in-row, update as dim map-side-combined decimal
     # means (same sum(decimal)/count arithmetic as the former
     # posexplode shape — decimal accumulation is order-independent, so
     # the collected centroids are bit-identical), collect the ≤k×dim
     # table, iterate. Empty clusters drop out of the groupBy exactly
-    # as they dropped out of the posexplode version.
+    # as they dropped out of the posexplode version. One SQL-text
+    # aggregate per position (README builder idiom).
     mean_aggs = [
-        (
-            F.sum(
-                F.element_at(F.col("__v"), i + 1).cast("decimal(38,10)")
-            ).cast("double")
-            / F.count(F.lit(1))
-        ).alias(f"m{i}")
+        F.expr(
+            f"CAST(sum(CAST(element_at(__v, {i + 1}) AS DECIMAL(38,10))) AS DOUBLE)"
+            f" / count(1) AS m{i}"
+        )
         for i in range(dim)
     ]
     for _ in range(n_iter):
@@ -1006,16 +905,6 @@ def hierarchical_kmeans_assign(
     """
     import math
 
-    def _sq(a: Column, b: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(
-                a, b, lambda x, y: (x.cast("double") - y.cast("double"))
-                * (x.cast("double") - y.cast("double"))
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
     depth = max(1, math.ceil(math.log(max(k, 2)) / math.log(branch)))
     assign = emb.select(
         F.col(id_col).alias("__id"),
@@ -1044,7 +933,7 @@ def hierarchical_kmeans_assign(
         for _ in range(n_iter):
             scored = assign.join(seeds, "__c").select(
                 "__id", "__v", "__c", "__s",
-                _sq(F.col("__v"), F.col("__cv")).alias("__d"),
+                F.expr(f"{_sq_dist('__v', '__cv')} AS __d"),
             )
             wa = Window.partitionBy("__id").orderBy("__d", "__s")
             newa = (
@@ -1541,8 +1430,6 @@ def pq_topk(
     IS the index: 32x smaller scans than raw float32 vectors.
     """
     import math
-
-    from big_data_projects_spark.data import spread_small_scan
 
     spark = emb.sparkSession
     # The quantize fold and every per-round codebook-distance fold are

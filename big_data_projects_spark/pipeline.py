@@ -53,7 +53,6 @@ def songplays_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey")),
             (F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey")),
         ],
-        broadcast_dims=False,
     )
 
     rollup = joined.groupBy("r_name", "n_name", "c_mktsegment", "year", "month").agg(

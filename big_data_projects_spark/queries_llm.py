@@ -1645,8 +1645,7 @@ def q_data_quality(spark, sf_dir):
     """Declarative expectation gate over the corpus: not-null, range,
     set-membership, and cross-column consistency rules evaluated as
     conditional aggregates in ONE scan (never a job per rule). The
-    violation counts are the publish/block signal a pipeline acts on;
-    operators.quality.split_quarantine peels the failing rows."""
+    violation counts are the publish/block signal a pipeline acts on."""
     from big_data_projects_spark.operators.quality import violations_summary
 
     docs = _t(spark, sf_dir, "documents")

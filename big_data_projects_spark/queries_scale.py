@@ -671,32 +671,43 @@ def q_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffling the whole fact table and shuffling only the ~20% that
     matches a selective dim predicate — the row-level complement of
     partition-level dynamic pruning. Local-scale thresholds are
-    overridden here (a join hint does not get the bloom filter); the
-    registry wrapper pins the defaults back before the next build, so
-    the override lasts until a caller's session next enters the
-    package.
+    lowered only while this builder plans (a join hint does not get
+    the bloom filter): the returned frame keeps the plan made under
+    them, and the session's own values are restored before it returns.
     """
     # Local parquet is far below the 10G application-side / broadcast
     # thresholds; lower both so the plan exercises the same injection a
     # 100 TB fact scan would get by default.
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-    spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-        "0",
-    )
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").filter(
-        F.col("o_orderpriority") == "1-URGENT"
-    )
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy(F.date_format("o_orderdate", "yyyy-MM").alias("order_month"))
-        .agg(
-            F.count(F.lit(1)).alias("n_items"),
-            dsum("l_extendedprice", "revenue"),
+    overrides = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
+    }
+    saved = {k: spark.conf.get(k, None) for k in overrides}  # None: unset
+    try:
+        for k, v in overrides.items():
+            spark.conf.set(k, v)
+        li = _t(spark, sf_dir, "lineitem")
+        o = _t(spark, sf_dir, "orders").filter(
+            F.col("o_orderpriority") == "1-URGENT"
         )
-    )
+        df = (
+            li.join(o, li.l_orderkey == o.o_orderkey)
+            .groupBy(F.date_format("o_orderdate", "yyyy-MM").alias("order_month"))
+            .agg(
+                F.count(F.lit(1)).alias("n_items"),
+                dsum("l_extendedprice", "revenue"),
+            )
+        )
+        # Plan now: the frame's query execution keeps this plan.
+        df._jdf.queryExecution().executedPlan()
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    return df
 
 
 @register(

@@ -14,10 +14,13 @@ than the 200 default.
 The runtime conf is pinned (ensure_runtime_conf) only where a caller's
 session enters the package: get_spark, the registry wrapper
 (``Query.spark``), ``__spark_entry__.entry`` and
-``reference_etl.run_reference_etl``. Builders, loaders and operators
-run under whatever conf the session has; ``Query.raw`` callers pin
-themselves. Scratch directories come from scratch_dir, under one root
-per process that is removed when the process exits.
+``reference_etl.run_reference_etl``. It also puts the package on the
+path of Spark's Python workers. Builders, loaders and operators run
+under whatever conf the session has and leave it as they found it
+(``q_bloom_filter_join`` restores the thresholds it lowers for its own
+planning); ``Query.raw`` callers pin themselves. Scratch directories
+come from scratch_dir, under one root per process that is removed when
+the process exits.
 """
 
 from __future__ import annotations
@@ -41,27 +44,24 @@ _REQUIRED_RUNTIME_CONF = {
     # a default-1g-heap driver session mid-sweep. 1M chars is plenty
     # for debugging and bounds the allocation to ~2 MB.
     "spark.sql.maxPlanStringLength": "1048576",
-    # q_bloom_filter_join overrides these to make the runtime bloom
-    # filter engage at test scale (the only override of a pinned key
-    # left in the package); pinning the defaults here means the next
-    # registry build restores them, so an override leaks no further
-    # than the next entry into the package (tools/profile_query.py
-    # pins again after materializing a query; perfbench pins before
-    # every operation).  All three values are the Spark 4 defaults.
-    "spark.sql.autoBroadcastJoinThreshold": "10485760",
-    "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
-    "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "10GB",
+    # A parquet TIMESTAMP(NANOS) column is readable only as a long
+    # (data.normalize_timestamps turns it into TIMESTAMP). Every table
+    # is read under this value, not only the one with such a column:
+    # the conf is part of data.table_schema's memo key.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 
 # Not pinned: the session owns its shuffle parallelism (see
 # ensure_runtime_conf).
 _SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 
+# The directory holding big_data_projects_spark, for the workers' path.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "big-data-projects-spark",
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a local SparkSession tuned for this engine."""
@@ -78,8 +78,6 @@ def get_spark(
         .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC")
         .config("spark.executor.extraJavaOptions", "-Duser.timezone=UTC")
     )
-    if shuffle_partitions is not None:
-        builder = builder.config(_SHUFFLE_PARTITIONS, str(shuffle_partitions))
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
@@ -99,16 +97,25 @@ def ensure_runtime_conf(spark: SparkSession) -> SparkSession:
     (calendar extraction, epoch conversion) require a UTC session
     timezone to match the UTC-naive oracle (SURVEY.md §7 hard-parts #2).
 
-    Shuffle parallelism is the session's: a value it set (get_spark's,
-    a caller's ``conf.set``) is kept, and only a session that never set
+    Shuffle parallelism is the session's: a value it set (a caller's
+    ``conf.set`` or SparkConf) is kept, and only a session that never set
     one gets ``defaultParallelism`` (one partition per core) instead of
     Spark's 200, which streaming aggregations would run as 200
     state-store tasks per micro-batch (AQE does not coalesce them).
+
+    Spark's Python workers (UDFs, Python data sources) import this
+    package themselves, so its root is added to the PYTHONPATH they are
+    started with: a caller may have put it only on the driver's
+    ``sys.path``.
     """
     for k, v in _REQUIRED_RUNTIME_CONF.items():
         spark.conf.set(k, v)
     if not spark._jsparkSession.sessionState().conf().contains(_SHUFFLE_PARTITIONS):
         spark.conf.set(_SHUFFLE_PARTITIONS, str(spark.sparkContext.defaultParallelism))
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PACKAGE_ROOT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([*paths, _PACKAGE_ROOT])
     return spark
 
 

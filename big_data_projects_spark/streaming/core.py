@@ -12,9 +12,8 @@ from __future__ import annotations
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
-from big_data_projects_spark.data import load_stream
 from big_data_projects_spark.session import scratch_dir
 
 
@@ -102,7 +101,3 @@ def run_available_now_to_parquet(
     )
     query.awaitTermination()
 
-
-def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``load_stream(spark, sf_dir, "documents")``, by its older name."""
-    return load_stream(spark, sf_dir, "documents")

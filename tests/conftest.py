@@ -17,5 +17,12 @@ SF_ORACLE = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="bdp-tests", cpus=8, shuffle_partitions=8)
+    # The broadcast threshold is set to its 10 MB default explicitly:
+    # Spark reads an unset byte-size conf back as "10485760b", and
+    # tests compare the value a builder leaves behind as a string.
+    s = get_spark(
+        app_name="bdp-tests",
+        cpus=8,
+        extra_conf={"spark.sql.autoBroadcastJoinThreshold": "10485760"},
+    )
     yield s

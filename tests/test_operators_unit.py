@@ -462,25 +462,6 @@ def test_merge_upsert_semantics(spark):
     }
 
 
-def test_quality_split_quarantine(spark):
-    from pyspark.sql import functions as F
-
-    from big_data_projects_spark.operators.quality import split_quarantine
-
-    df = spark.createDataFrame(
-        [(1, "ok", 5), (2, None, 5), (3, "bad", -1)],
-        "id long, txt string, n long",
-    )
-    rules = [
-        ("txt_not_null", F.col("txt").isNotNull()),
-        ("n_positive", F.col("n") > 0),
-    ]
-    clean, quarantined = split_quarantine(df, rules)
-    assert [r["id"] for r in clean.collect()] == [1]
-    got = {r["id"]: sorted(r["failed_rules"]) for r in quarantined.collect()}
-    assert got == {2: ["txt_not_null"], 3: ["n_positive"]}
-
-
 def test_kmeans_recovers_separable_clusters(spark):
     from big_data_projects_spark.operators.similarity import kmeans_assign
 
@@ -701,47 +682,6 @@ def test_pagerank_sim_graph_5_rounds_preserves_converged_ordering(spark):
     )
 
 
-def test_pagerank_star_graph(spark):
-    """Star graph: the hub must outrank every leaf; undirected ranks
-    sum to 1; structurally symmetric leaves get bit-identical ranks
-    (the decimal accumulation makes this exact, not approximate)."""
-    from big_data_projects_spark.operators.graph import pagerank
-
-    edges = spark.createDataFrame(
-        [(0, i) for i in range(1, 6)], ["src", "dst"]
-    )
-    ranks = {r["node"]: r["rank"] for r in pagerank(edges).collect()}
-    assert set(ranks) == set(range(6))
-    hub, leaves = ranks[0], [ranks[i] for i in range(1, 6)]
-    assert all(hub > lv for lv in leaves)
-    assert len(set(leaves)) == 1, "symmetric leaves must rank identically"
-    assert abs(sum(ranks.values()) - 1.0) < 1e-9
-
-
-def test_pagerank_is_deterministic_across_runs(spark):
-    from big_data_projects_spark.operators.graph import pagerank
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 1), (1, 3)], ["src", "dst"]
-    )
-    r1 = sorted(map(tuple, pagerank(edges, iterations=5).collect()))
-    r2 = sorted(map(tuple, pagerank(edges, iterations=5).collect()))
-    assert r1 == r2, "ranks must be bit-identical across runs"
-
-
-def test_pagerank_directed_dangling_source(spark):
-    """Directed chain 1→2→3: node 1 has no in-links so it keeps only
-    the teleport term; ranks increase down the chain."""
-    from big_data_projects_spark.operators.graph import pagerank
-
-    edges = spark.createDataFrame([(1, 2), (2, 3), (3, 3)], ["src", "dst"])
-    ranks = {
-        r["node"]: r["rank"]
-        for r in pagerank(edges, directed=True, iterations=20).collect()
-    }
-    assert ranks[1] < ranks[2] < ranks[3]
-
-
 def test_custom_source_partitions_cover_range_exactly(spark):
     """The Python DataSource must emit each row id exactly once across
     partitions, including when n_rows doesn't divide by n_partitions,
@@ -846,29 +786,11 @@ def test_triangle_count_known_graphs(spark):
     assert (row["n_nodes"], row["n_edges"], row["n_triangles"]) == (4, 4, 0)
 
 
-def test_pagerank_directed_pure_sink(spark):
-    """Directed chain 1→2→3 with NO self-loop: node 3 is a pure sink.
-    It must still appear in the output (node set = src ∪ dst), its
-    dangling mass must be redistributed (ranks sum to 1, not decay),
-    and it must outrank its upstream nodes."""
-    from big_data_projects_spark.operators.graph import pagerank
-
-    edges = spark.createDataFrame([(1, 2), (2, 3)], ["src", "dst"])
-    ranks = {
-        r["node"]: r["rank"]
-        for r in pagerank(edges, directed=True, iterations=20).collect()
-    }
-    assert set(ranks) == {1, 2, 3}
-    assert ranks[1] < ranks[2] < ranks[3]
-    assert abs(sum(ranks.values()) - 1.0) < 1e-9
-
-
 def test_observe_metrics_single_pass(spark):
     """df.observe(): pipeline health metrics (row count, null count,
     value sum) accumulate DURING the main action — no second scan.
     At 100 TB a separate metrics pass doubles the read; Observation
-    is the built-in single-pass accounting the data-quality gate's
-    quarantine split complements."""
+    is the built-in single-pass accounting."""
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
@@ -1659,74 +1581,6 @@ def test_cosine_consumers_total_on_zero_norm_vectors(spark):
     pq = pq_topk(emb, query_id=1, k=4, rerank_candidates=10).collect()
     assert [r["vec_id"] for r in pq][:2] == [2, 4]
     assert pq[-1]["vec_id"] == 6 and pq[-1]["sim"] is None
-
-
-def test_band_signature_modes_agree_on_null_vectors(spark):
-    """sig_mode is documented as a pure physical-
-    strategy knob, so the two modes must agree on DEGENERATE input
-    too: a NULL embedding buckets as all-zero bits in the HOF fold
-    (NULL dot > 0 is NULL -> otherwise(0)), and the arrow projector
-    must produce the same row instead of crashing in np.stack —
-    with the output row keeping its original NULL vector."""
-    from big_data_projects_spark.operators.similarity import (
-        band_signature_frame,
-    )
-
-    rows = [(1, [1.0, -0.5]), (2, None), (3, [-0.3, 0.9])]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = {}
-    for mode in ("hof", "arrow"):
-        got = band_signature_frame(
-            emb, dim=2, bits_per_band=4, n_bands=2, mode=mode
-        ).collect()
-        out[mode] = sorted(
-            (r["vec_id"], r["embedding"] is None, r["b0"], r["b1"])
-            for r in got
-        )
-    assert out["hof"] == out["arrow"]
-    null_row = [t for t in out["hof"] if t[0] == 2][0]
-    assert null_row[1:] == (True, 0, 0)
-
-
-def test_band_signature_modes_agree_on_testdata(spark):
-    """The Arrow matmul signature projection
-    (band_signature_frame mode="arrow" — the production mode for wide
-    embeddings, measured 9× faster than the HOF fold at 200k×64-dim)
-    must produce the SAME band buckets as the shipped hash-matched HOF
-    mode on the driver testdata.  The only way they can diverge is a
-    plane dot within float-reassociation distance of 0 flipping sign;
-    this pins that the testdata sits nowhere near that edge, so
-    sig_mode is a pure physical-strategy knob (candidate sets, and
-    hence lsh_neardup_pairs output, are mode-identical)."""
-    from big_data_projects_spark.operators.similarity import (
-        DEFAULT_LSH_BANDS,
-        band_signature_frame,
-        lsh_neardup_pairs,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    kw = dict(dim=64, bits_per_band=8, n_bands=DEFAULT_LSH_BANDS)
-    bcols = [f"b{j}" for j in range(DEFAULT_LSH_BANDS)]
-    hof = {
-        r["vec_id"]: tuple(r[b] for b in bcols)
-        for r in band_signature_frame(emb, mode="hof", **kw).collect()
-    }
-    arrow = {
-        r["vec_id"]: tuple(r[b] for b in bcols)
-        for r in band_signature_frame(emb, mode="arrow", **kw).collect()
-    }
-    assert hof == arrow and len(hof) == emb.count()
-
-    # End-to-end: the full LSH near-dup operator is mode-identical.
-    def pairs(mode):
-        return {
-            (r["id_a"], r["id_b"], round(r["sim"], 9))
-            for r in lsh_neardup_pairs(
-                emb, dim=64, threshold=0.3, bits_per_band=8, sig_mode=mode
-            ).collect()
-        }
-
-    assert pairs("hof") == pairs("arrow")
 
 
 def test_ivf_merge_frozen_index_recall_vs_full_rebuild(spark):

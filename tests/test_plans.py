@@ -274,8 +274,8 @@ def test_zorder_bounds_both_dimensions_per_file(spark, tmp_path):
 def test_bloom_filter_join_injects_runtime_filter(spark):
     # Row-level runtime filtering: the bloom filter built from the
     # selective orders side must reach the lineitem side BEFORE the
-    # join, and the thresholds the builder overrides must be pinned
-    # back by the next registry build's ensure_runtime_conf (no leak).
+    # join, and the thresholds the builder lowers for its own planning
+    # must not outlive it (no leak into the next build).
     df = REGISTRY["q_bloom_filter_join"].spark(spark, SF)
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert "might_contain" in plan, "runtime bloom filter not injected"

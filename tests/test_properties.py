@@ -161,25 +161,6 @@ def test_connected_components_matches_union_find(spark, edges):
     assert got == expected
 
 
-@given(edges=edges_strategy)
-@settings(max_examples=6, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-def test_pagerank_directed_mass_conserved(spark, edges):
-    """Directed PageRank with dangling-mass correction: ranks cover
-    src ∪ dst and sum to 1 for arbitrary graphs (sinks included)."""
-    from big_data_projects_spark.operators.graph import pagerank
-
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    ranks = {
-        r["node"]: r["rank"]
-        for r in pagerank(df, directed=True, iterations=5).collect()
-    }
-    expected_nodes = {n for e in edges for n in e}
-    assert set(ranks) == expected_nodes
-    assert abs(sum(ranks.values()) - 1.0) < 1e-9
-    assert all(v > 0 for v in ranks.values())
-
-
 @given(
     st.lists(st.integers(min_value=1, max_value=40), min_size=1, max_size=60),
     st.integers(min_value=8, max_value=64),

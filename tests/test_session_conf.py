@@ -29,7 +29,7 @@ def test_builder_keeps_the_sessions_shuffle_partitions(spark):
 
 def test_unset_shuffle_partitions_become_one_per_core(spark):
     fresh = spark.newSession()
-    fresh.conf.unset(KEY)  # the fixture's get_spark value reaches it via SparkConf
+    fresh.conf.unset(KEY)  # no-op: the fixture's value is session-local, not in SparkConf
     assert fresh.conf.get(KEY) == "200"
     ensure_runtime_conf(fresh)
     assert fresh.conf.get(KEY) == str(spark.sparkContext.defaultParallelism)

@@ -1,8 +1,8 @@
 """What the package leaves in a caller's session and process: scratch
 directories live under one per-process root that is gone once the
 process exits, a raw builder runs under the caller's conf (only entry
-points pin it), and a builder does not flip session confs to get the
-plan it wants."""
+points pin it), and builders and loaders leave the session's conf as
+they found it."""
 
 from __future__ import annotations
 
@@ -11,25 +11,37 @@ import subprocess
 import sys
 import textwrap
 
+from big_data_projects_spark.data import load_table
 from big_data_projects_spark.queries import REGISTRY
 from conftest import REPO, SF_SMALL
 
 UDTF_ARROW = "spark.sql.execution.pythonUDTF.arrow.enabled"
 BROADCAST = "spark.sql.autoBroadcastJoinThreshold"
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+BLOOM_KEYS = (
+    BROADCAST,
+    "spark.sql.optimizer.runtime.bloomFilter.enabled",
+    "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
+)
 
 
 def test_process_exit_leaves_no_scratch_dirs(tmp_path):
+    # The repo is on the driver's sys.path only: q_custom_source's
+    # Python data source runs in workers that get it from the pin.
     script = textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {str(REPO)!r})
+
         from big_data_projects_spark.queries import REGISTRY
         from big_data_projects_spark.session import get_spark
 
         spark = get_spark(app_name="bdp-scratch-test", cpus=2)
         for name in ("q_sink_parquet_partitioned", "q_bucketed_join",
-                     "q_stream_fuzzy_dedup"):
+                     "q_stream_fuzzy_dedup", "q_custom_source"):
             REGISTRY[name].spark(spark, {SF_SMALL!r}).collect()
     """)
-    env = dict(os.environ, TMPDIR=str(tmp_path), SPARK_DRIVER_MEM="1g",
-               PYTHONPATH=os.pathsep.join([str(REPO), os.environ.get("PYTHONPATH", "")]))
+    env = dict(os.environ, TMPDIR=str(tmp_path), SPARK_DRIVER_MEM="1g")
+    env.pop("PYTHONPATH", None)
     done = subprocess.run([sys.executable, "-c", script], cwd=tmp_path, env=env,
                           capture_output=True, text=True, timeout=600)
     assert done.returncode == 0, done.stderr[-3000:]
@@ -56,3 +68,17 @@ def test_udtf_runs_on_arrow_without_setting_the_session_conf(spark):
         assert df.count() > 0
     finally:
         spark.conf.set(UDTF_ARROW, before)
+
+
+def test_builder_and_loader_leave_the_conf_as_they_found_it(spark):
+    before = {k: spark.conf.get(k) for k in (*BLOOM_KEYS, NANOS_AS_LONG)}
+    try:
+        df = REGISTRY["q_bloom_filter_join"].raw(spark, SF_SMALL)
+        assert {k: spark.conf.get(k) for k in before} == before
+        assert "might_contain" in df._jdf.queryExecution().optimizedPlan().toString()
+        spark.conf.set(NANOS_AS_LONG, "false")
+        load_table(spark, SF_SMALL, "events")
+        assert spark.conf.get(NANOS_AS_LONG) == "false"
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)

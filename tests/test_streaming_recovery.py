@@ -13,7 +13,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from big_data_projects_spark.data import load_table
+from big_data_projects_spark.data import load_stream, load_table
 
 SF = "/root/testdata/sf0.001"
 
@@ -196,7 +196,6 @@ def test_available_now_honors_rate_limit(spark, tmp_path):
 
 
 def _stream_rows(spark, sf_dir, cols):
-    from big_data_projects_spark.data import load_stream
     from big_data_projects_spark.streaming.core import run_to_completion
 
     out = run_to_completion(load_stream(spark, sf_dir, "documents"), "append")
@@ -230,10 +229,7 @@ def test_directory_rewritten_with_new_file_names_streams_its_rows(tmp_path, spar
 
     import pyarrow.parquet as pq
 
-    from big_data_projects_spark.streaming.core import (
-        documents_stream,
-        run_to_completion,
-    )
+    from big_data_projects_spark.streaming.core import run_to_completion
 
     table = pq.read_table(f"{SF}/documents.parquet")
     assert table.num_rows == 500
@@ -247,22 +243,19 @@ def test_directory_rewritten_with_new_file_names_streams_its_rows(tmp_path, spar
             pq.write_table(table.slice(i * step, step), src / name)
 
     write(["part-a-0.parquet", "part-a-1.parquet"])
-    assert run_to_completion(documents_stream(spark, str(tmp_path)), "append").count() == 500
+    assert run_to_completion(load_stream(spark, str(tmp_path), "documents"), "append").count() == 500
     write(["part-b-0.parquet", "part-b-1.parquet", "part-b-2.parquet"])
-    assert run_to_completion(documents_stream(spark, str(tmp_path)), "append").count() == 500
+    assert run_to_completion(load_stream(spark, str(tmp_path), "documents"), "append").count() == 500
 
 
 def test_distributed_drain_handles_empty_stream(spark):
     """run_to_distributed_batch on a stream that emits zero rows must
     return an empty DataFrame with the stream's schema rather than
     failing on an empty parquet sink dir."""
-    from big_data_projects_spark.streaming.core import (
-        documents_stream,
-        run_to_distributed_batch,
-    )
+    from big_data_projects_spark.streaming.core import run_to_distributed_batch
     from pyspark.sql import functions as F
 
-    stream = documents_stream(spark, SF).where(F.col("doc_id") < 0).select(
+    stream = load_stream(spark, SF, "documents").where(F.col("doc_id") < 0).select(
         "doc_id", "text"
     )
     out = run_to_distributed_batch(stream)
@@ -274,12 +267,9 @@ def test_distributed_drain_never_collects_candidates(spark):
     """The drained candidate relation must be backed by files (a scan),
     not a driver-side LocalTableScan — the no-driver-collect contract
     for candidate-scale streams."""
-    from big_data_projects_spark.streaming.core import (
-        documents_stream,
-        run_to_distributed_batch,
-    )
+    from big_data_projects_spark.streaming.core import run_to_distributed_batch
 
-    stream = documents_stream(spark, SF).select("doc_id")
+    stream = load_stream(spark, SF, "documents").select("doc_id")
     out = run_to_distributed_batch(stream)
     assert out.count() > 0
     plan = out._jdf.queryExecution().executedPlan().toString()

@@ -55,13 +55,12 @@ def main() -> None:
             i += 1
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or (os.cpu_count() or 4)
 
     from big_data_projects_spark.measure import force_count, jobs_launched
     from big_data_projects_spark.session import ensure_runtime_conf, get_spark
     from big_data_projects_spark.queries import REGISTRY
 
-    spark = get_spark(app_name="bdp-profile", cpus=cpus, shuffle_partitions=cpus)
+    spark = get_spark(app_name="bdp-profile")
     print(
         f"spark.sql.shuffle.partitions={spark.conf.get('spark.sql.shuffle.partitions')} "
         f"defaultParallelism={spark.sparkContext.defaultParallelism}",

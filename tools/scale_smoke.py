@@ -336,59 +336,10 @@ def _stream_ivf_gate_scaled(spark, sf_dir):
     return _ivf_gate_run(spark, sf_dir, bits=S.lsh_bits_for(n))
 
 
-#   x_embed_lsh_neardup_arrow — the scaled-width operator END-TO-END
-#   under sig_mode="arrow" (r11's selectable mode): how much of
-#   lsh_neardup_pairs' wall the signature projection actually is once
-#   banding/join/verify (mode-agnostic) are included.  Contrast with
-#   the x_lsh_sig_* head-to-head, which isolates the projection.
-def _embed_lsh_arrow(spark, sf_dir):
-    from big_data_projects_spark.data import load_table
-    from big_data_projects_spark.operators import similarity as S
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return S.lsh_neardup_pairs(emb, dim=64, threshold=0.3, sig_mode="arrow")
-
-
-#   x_lsh_sig_hof / x_lsh_sig_arrow — the two candidate physical
-#   strategies for the hyperplane signature projection (48 plane dots
-#   per row), HEAD-TO-HEAD: the shipped JVM-side higher-order-function
-#   fold (zero serialization, deterministic sequential fold — the
-#   oracle-hash-matchable path) vs an Arrow-batched pandas_udf matmul
-#   (one n×dim · dim×48 BLAS call per batch, float64 — the documented
-#   production choice for WIDE embeddings where 48 interpreted
-#   HOF dots per row stop being cheap).  Measurement-only: the matmul
-#   reorders float additions, so its signs can differ near zero and it
-#   is NOT oracle-comparable; the shipped path stays HOF at dim=64.
-def _lsh_sig_hof(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from big_data_projects_spark.data import load_table
-    from big_data_projects_spark.operators import similarity as S
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    sigs = S.band_signature_cols(64, 8, S.DEFAULT_LSH_BANDS)
-    return emb.select(F.col("vec_id"), *sigs)
-
-
-def _lsh_sig_arrow(spark, sf_dir):
-    # Measures the SHIPPED selectable mode (promoted from an inline
-    # smoke sketch in r11): band_signature_frame(..., mode="arrow").
-    from big_data_projects_spark.data import load_table
-    from big_data_projects_spark.operators import similarity as S
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return S.band_signature_frame(
-        emb, 64, 8, S.DEFAULT_LSH_BANDS, mode="arrow"
-    ).drop("embedding")
-
-
 EXTRA_BUILDERS = {
     "x_embed_lsh_neardup_scaled": _embed_lsh_scaled,
-    "x_embed_lsh_neardup_arrow": _embed_lsh_arrow,
     "x_ivf_merge_scaled": _ivf_merge_scaled,
     "x_stream_ivf_gate_scaled": _stream_ivf_gate_scaled,
-    "x_lsh_sig_hof": _lsh_sig_hof,
-    "x_lsh_sig_arrow": _lsh_sig_arrow,
 }
 # Near-linear tolerance: shuffles and within-bucket verify grow a bit
 # superlinearly even in healthy plans; 3x headroom over proportional
@@ -420,11 +371,6 @@ OUTPUT_SUPERLINEAR_ALLOWLIST = {
     # scaled signature width bounds the CANDIDATE mass (verify work),
     # not the true near-dup pair count the corpus actually contains.
     "x_embed_lsh_neardup_scaled",
-    # END-TO-END arrow-mode twin of the scaled variant: identical
-    # banding/join/verify (and hence identical legitimate
-    # pair-emission growth); only the signature projection's physical
-    # strategy differs.
-    "x_embed_lsh_neardup_arrow",
     # Scaled-width ANN MERGE: near-dup verdicts are batch-sized output,
     # but the smoke corpus multiplies true near-dup mass with M; same
     # legitimacy argument as the LSH twins above.
@@ -576,12 +522,7 @@ def main() -> None:
     replicas = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     from big_data_projects_spark.session import get_spark
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or (
-        os.cpu_count() or 4
-    )
-    spark = get_spark(
-        app_name="scale-smoke", cpus=cpus, shuffle_partitions=cpus
-    )
+    spark = get_spark(app_name="scale-smoke")
     spark.sparkContext.setLogLevel("ERROR")
 
     x1_dir = WORK / "x1"
