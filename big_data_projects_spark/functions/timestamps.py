@@ -19,28 +19,30 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# name -> builder; all cast to long so schemas line up with the
-# (int64-producing) DuckDB oracle regardless of Spark's int32 returns.
+# name -> SQL template over ``{c}``; all cast to long so schemas line
+# up with the (int64-producing) DuckDB oracle regardless of Spark's
+# int32 returns.  SQL text, not Column chains: each Column call is a
+# py4j round trip, and these are built per query.
 CALENDAR_COLS = {
-    "year": lambda c: F.year(c).cast("long"),
-    "month": lambda c: F.month(c).cast("long"),
-    "day": lambda c: F.dayofmonth(c).cast("long"),
-    "hour": lambda c: F.hour(c).cast("long"),
-    "minute": lambda c: F.minute(c).cast("long"),
-    "second": lambda c: F.second(c).cast("long"),
-    "week": lambda c: F.weekofyear(c).cast("long"),
-    "weekday": lambda c: F.dayofweek(c).cast("long"),
+    "year": "CAST(year({c}) AS BIGINT)",
+    "month": "CAST(month({c}) AS BIGINT)",
+    "day": "CAST(dayofmonth({c}) AS BIGINT)",
+    "hour": "CAST(hour({c}) AS BIGINT)",
+    "minute": "CAST(minute({c}) AS BIGINT)",
+    "second": "CAST(second({c}) AS BIGINT)",
+    "week": "CAST(weekofyear({c}) AS BIGINT)",
+    "weekday": "CAST(dayofweek({c}) AS BIGINT)",
 }
 
 
-def ts_from_epoch_ms(col: Column | str) -> Column:
-    """ms-epoch (string or numeric) → TimestampType, JVM-side.
+def ts_from_epoch_ms(col: str) -> str:
+    """SQL text: ms-epoch (string or numeric) column ``col`` →
+    TimestampType, JVM-side.
 
     Replaces the reference's Python UDF (transform-data.py:128): same
     intent, no Python boundary, explicit UTC semantics.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.timestamp_millis(c.cast("long"))
+    return f"timestamp_millis(CAST(`{col}` AS BIGINT))"
 
 
 def epoch_ms(col: Column | str) -> Column:
@@ -56,9 +58,13 @@ def epoch_ms(col: Column | str) -> Column:
     return F.unix_millis(c.cast("timestamp"))
 
 
-def with_calendar_cols(df: DataFrame, ts_col: str, prefix: str = "") -> DataFrame:
-    """Append the reference's full calendar breakdown of ``ts_col``."""
-    out = df
-    for name, fn in CALENDAR_COLS.items():
-        out = out.withColumn(prefix + name, fn(F.col(ts_col)))
-    return out
+def with_calendar_cols(df: DataFrame, ts_col: str) -> DataFrame:
+    """Append the reference's full calendar breakdown of ``ts_col`` (one
+    projection; the appended names must be new to ``df``)."""
+    return df.selectExpr(
+        "*",
+        *(
+            f"{sql.format(c=f'`{ts_col}`')} AS `{name}`"
+            for name, sql in CALENDAR_COLS.items()
+        ),
+    )

@@ -21,13 +21,18 @@ so the measurement stays a measurement of the query.
 
 ``jobs_launched`` counts the Spark jobs a call launches — for a
 builder, the jobs it runs before the caller asks for any result.
+``round_trips`` counts the py4j commands a call sends to the JVM: every
+PySpark ``Column`` call is one, so thousands of them while building
+mean a Column chain that belongs in SQL text.
 """
 
 from __future__ import annotations
 
+import threading
 import uuid
 from typing import Callable, TypeVar
 
+from py4j.clientserver import ClientServerConnection
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -66,3 +71,27 @@ def jobs_launched(spark: SparkSession, fn: Callable[[], T]) -> tuple[T, int]:
     # The status store learns of jobs from the listener bus.
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def round_trips(fn: Callable[[], T]) -> tuple[T, int]:
+    """Run ``fn()`` and return its result with the number of commands
+    the calling thread sent to the JVM meanwhile.
+
+    py4j's finalizer thread releases garbage-collected JavaObjects on
+    its own schedule; those commands are not the call's, so only the
+    calling thread's are counted."""
+    send = ClientServerConnection.send_command
+    me = threading.get_ident()
+    calls = 0
+
+    def counting(self, command):
+        nonlocal calls
+        calls += threading.get_ident() == me
+        return send(self, command)
+
+    ClientServerConnection.send_command = counting
+    try:
+        result = fn()
+    finally:
+        ClientServerConnection.send_command = send
+    return result, calls

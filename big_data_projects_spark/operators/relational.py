@@ -18,16 +18,21 @@ from pyspark.sql import functions as F
 _DEC = "decimal(38,6)"
 
 
-def dsum(col: Column | str, alias: str) -> Column:
-    """Order-independent SUM over doubles: sum(cast decimal) → double."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast(_DEC)).cast("double").alias(alias)
+def dsum(expr: str, alias: str) -> Column:
+    """Order-independent SUM over doubles: sum(cast decimal) → double.
+
+    ``expr`` is SQL text (a plain column name is SQL text): the whole
+    aggregate reaches Catalyst as one ``F.expr``, not a Column chain of
+    a py4j round trip per call."""
+    return F.expr(f"CAST(sum(CAST(({expr}) AS {_DEC})) AS DOUBLE) AS `{alias}`")
 
 
-def davg(col: Column | str, alias: str) -> Column:
-    """Order-independent AVG: exact decimal sum / count, as double."""
-    c = F.col(col) if isinstance(col, str) else col
-    return (F.sum(c.cast(_DEC)).cast("double") / F.count(c)).alias(alias)
+def davg(expr: str, alias: str) -> Column:
+    """Order-independent AVG: exact decimal sum / count, as double.
+    ``expr`` is SQL text, as for ``dsum``."""
+    return F.expr(
+        f"CAST(sum(CAST(({expr}) AS {_DEC})) AS DOUBLE) / count({expr}) AS `{alias}`"
+    )
 
 
 def project_rename(df: DataFrame, mapping: dict[str, str]) -> DataFrame:

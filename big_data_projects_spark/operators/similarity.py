@@ -967,7 +967,6 @@ def batch_topk_matmul(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    exact_int: bool = False,
 ) -> DataFrame:
     """Cosine top-k for MANY queries at once: the query block (q×d,
     collected once — queries are a control-plane-sized set) broadcasts
@@ -978,14 +977,8 @@ def batch_topk_matmul(
     past ~dozens of queries the matmul's arithmetic density wins —
     this is that path.
 
-    exact_int=False (production): float64 matmul, returns (query_id,
-    id, sim). Fast, but the reduction order of a float matmul is
-    BLAS-internal — not restatable in SQL, so results are rows-only
-    checkable.
-
-    exact_int=True (oracle-checkable): each vector is L2-normalized
-    and quantized to int64 micro-units BEFORE the matmul — the norm's
-    squared-sum runs through np.add.accumulate, which is the same
+    Oracle-checkable: each vector is L2-normalized and quantized to
+    int64 micro-units BEFORE the matmul — the norm's squared-sum runs through np.add.accumulate, which is the same
     left-to-right sequential fold Spark's aggregate() and DuckDB's
     list_dot_product use, so the quantized integers match both engines
     bit-for-bit — and the matmul runs in int64 (exact, order-free).
@@ -1013,24 +1006,14 @@ def batch_topk_matmul(
         norm = np.maximum(norm, 1e-300)
         return np.floor(mat / norm[:, None] * 1e6 + 0.5).astype(np.int64)
 
-    if exact_int:
-        qmat_i = _quant(qmat)
-        score_col, score_type = "dot_q", "long"
-    else:
-        qnorm = np.linalg.norm(qmat, axis=1)
-        score_col, score_type = "sim", "double"
+    qmat_i = _quant(qmat)
 
     def score(batches):
         for pdf in batches:
             ids = pdf[id_col].to_numpy(dtype=np.int64)
             mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            if exact_int:
-                sims = qmat_i @ _quant(mat).T  # int64 GEMM — exact
-            else:
-                sims = (qmat @ mat.T) / (
-                    qnorm[:, None] * np.linalg.norm(mat, axis=1)[None, :]
-                )
-            out = {"query_id": [], id_col: [], score_col: []}
+            sims = qmat_i @ _quant(mat).T  # int64 GEMM — exact
+            out = {"query_id": [], id_col: [], "dot_q": []}
             for qi, qid in enumerate(qids):
                 row = sims[qi]
                 mask = ids != qid
@@ -1043,15 +1026,13 @@ def batch_topk_matmul(
                 cids, csims = ids[mask][cand_idx], row[mask][cand_idx]
                 out["query_id"].extend([qid] * len(cids))
                 out[id_col].extend(cids.tolist())
-                out[score_col].extend(csims.tolist())
+                out["dot_q"].extend(csims.tolist())
             yield pd.DataFrame(out)
 
     chunk_topk = emb.select(id_col, vec_col).mapInPandas(
-        score, schema=f"query_id long, {id_col} long, {score_col} {score_type}"
+        score, schema=f"query_id long, {id_col} long, dot_q long"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col(score_col).desc(), F.col(id_col)
-    )
+    w = Window.partitionBy("query_id").orderBy(F.col("dot_q").desc(), F.col(id_col))
     return (
         chunk_topk.withColumn("__rk", F.row_number().over(w))
         .filter(F.col("__rk") <= k)

@@ -186,7 +186,7 @@ def q_tpch_q1(spark, sf_dir):
     return li.groupBy("l_returnflag", "l_linestatus").agg(
         dsum("l_quantity", "sum_qty"),
         dsum("l_extendedprice", "sum_base_price"),
-        dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "sum_disc_price"),
+        dsum("l_extendedprice * (1 - l_discount)", "sum_disc_price"),
         davg("l_quantity", "avg_qty"),
         davg("l_discount", "avg_disc"),
         F.count(F.lit(1)).alias("count_order"),
@@ -295,7 +295,7 @@ def q_join_multiway(spark, sf_dir):
     )
     return joined.groupBy("n_name", "r_name").agg(
         F.count(F.lit(1)).alias("n_items"),
-        dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "revenue"),
+        dsum("l_extendedprice * (1 - l_discount)", "revenue"),
     )
 
 
@@ -321,10 +321,10 @@ def q_time_dim(spark, sf_dir):
     weekofyear is ISO-8601 = DuckDB week; Spark dayofweek is 1=Sunday =
     DuckDB dayofweek+1."""
     events = _t(spark, sf_dir, "events")
-    cols = [epoch_ms("ts").alias("start_ms")] + [
-        fn(F.col("ts")).alias(name) for name, fn in CALENDAR_COLS.items()
+    calendar = [
+        F.expr(f"{sql.format(c='ts')} AS `{name}`") for name, sql in CALENDAR_COLS.items()
     ]
-    return events.select(*cols).distinct()
+    return events.select(epoch_ms("ts").alias("start_ms"), *calendar).distinct()
 
 
 @register(

@@ -1760,17 +1760,13 @@ def q_knn_batch(spark, sf_dir):
     merged by a partitioned window. The many-queries fast path
     complementing the JVM-fold single-query q_knn_cosine.
 
-    Formerly rows-only; now runs the exact-integer mode: vectors are
-    L2-normalized (np.add.accumulate == both engines' sequential fold)
-    and micro-quantized, the matmul runs in int64 (exact, order-free),
-    so the Arrow Python stage hash-matches the SQL restatement — dots
-    of integer-valued doubles below 2**53 are exact on the oracle side
-    too. The float-matmul production mode remains the default of
-    batch_topk_matmul."""
+    Vectors are L2-normalized (np.add.accumulate == both engines'
+    sequential fold) and micro-quantized, the matmul runs in int64
+    (exact, order-free), so the Arrow Python stage hash-matches the SQL
+    restatement — dots of integer-valued doubles below 2**53 are exact
+    on the oracle side too."""
     emb = _t(spark, sf_dir, "embeddings")
-    return S.batch_topk_matmul(
-        emb, query_ids=list(range(8)), k=5, exact_int=True
-    )
+    return S.batch_topk_matmul(emb, query_ids=list(range(8)), k=5)
 
 
 @register(

@@ -30,8 +30,7 @@ from big_data_projects_spark.operators.relational import davg, dsum
 from big_data_projects_spark.registry import register
 
 
-def _revenue():
-    return F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
+_REVENUE = "l_extendedprice * (1.0D - l_discount)"
 
 
 @register(
@@ -61,7 +60,7 @@ def q_tpch_q6(spark, sf_dir):
             & (F.col("l_quantity") < 24)
         )
         .agg(
-            dsum(F.col("l_extendedprice") * F.col("l_discount"), "revenue"),
+            dsum("l_extendedprice * l_discount", "revenue"),
             F.count(F.lit(1)).alias("n"),
         )
     )
@@ -104,7 +103,7 @@ def q_tpch_q3(spark, sf_dir):
         )
         .join(cust, orders.o_custkey == cust.c_custkey)
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(dsum(_revenue(), "revenue"))
+        .agg(dsum(_REVENUE, "revenue"))
         .select(
             "l_orderkey",
             "revenue",
@@ -204,7 +203,7 @@ def q_tpch_q5(spark, sf_dir):
             & (customer.c_nationkey == asia_supp.s_nationkey),
         )
         .groupBy("n_name")
-        .agg(dsum(_revenue(), "revenue"))
+        .agg(dsum(_REVENUE, "revenue"))
     )
 
 

@@ -42,8 +42,7 @@ from big_data_projects_spark.registry import register
 _DEC = "decimal(38,6)"
 
 
-def _revenue():
-    return F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
+_REVENUE = "l_extendedprice * (1.0D - l_discount)"
 
 
 def _ts(s: str):
@@ -181,7 +180,7 @@ def q_tpch_q7(spark, sf_dir):
             "cust_nation",
             F.year("l_shipdate").cast("long").alias("l_year"),
         )
-        .agg(dsum(_revenue(), "revenue"))
+        .agg(dsum(_REVENUE, "revenue"))
     )
 
 
@@ -243,7 +242,7 @@ def q_tpch_q8(spark, sf_dir):
     )
     li = _t(spark, sf_dir, "lineitem")
 
-    rev = _revenue().cast(_DEC)
+    rev = F.expr(f"CAST({_REVENUE} AS {_DEC})")
     nation_rev = F.when(F.col("supp_nation") == "NATION_3", rev).otherwise(
         F.lit(0).cast(_DEC)
     )
@@ -294,9 +293,7 @@ def q_tpch_q9(spark, sf_dir):
     )
     orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     li = _t(spark, sf_dir, "lineitem")
-    profit = _revenue() - (
-        F.lit(0.1) * F.col("p_retailprice") * F.col("l_quantity")
-    )
+    profit = f"({_REVENUE}) - 0.1D * p_retailprice * l_quantity"
     return (
         li.join(
             part.select("p_partkey", "p_retailprice"),
@@ -350,7 +347,7 @@ def q_tpch_q10(spark, sf_dir):
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(dsum(_revenue(), "revenue"))
+        .agg(dsum(_REVENUE, "revenue"))
         .select("c_custkey", "c_name", "revenue", "c_acctbal", "n_name")
         .orderBy(F.col("revenue").desc(), "c_custkey")
         .limit(20)
@@ -507,7 +504,7 @@ def q_tpch_q15(spark, sf_dir):
         & (F.col("l_shipdate") < _ts("1996-04-01"))
     )
     revenue = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        dsum(_revenue(), "total_revenue")
+        dsum(_REVENUE, "total_revenue")
     )
     mx = revenue.agg(F.max("total_revenue").alias("mx"))
     supplier = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
@@ -650,7 +647,7 @@ def q_tpch_q19(spark, sf_dir):
     return (
         li.join(part, li.l_partkey == part.p_partkey)
         .filter(cond)
-        .agg(dsum(_revenue(), "revenue"), F.count(F.lit(1)).alias("n"))
+        .agg(dsum(_REVENUE, "revenue"), F.count(F.lit(1)).alias("n"))
     )
 
 

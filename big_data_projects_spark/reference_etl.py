@@ -21,6 +21,21 @@ users, time, songplays, user_level_listen), the same sink layout
   job → all six submitted together, one thread per table, each
   carrying the caller's job group and local properties
   (``write_star_schema``).
+- songplays re-derives the time dim (transform-data.py:281-284): the
+  join to ``time`` costs a dedup shuffle and a join only to read
+  ``year``/``month``, which are functions of the listen's own
+  timestamp → ``songplays_fact`` keeps the listens that have one and
+  computes both from it.
+- user_level_listen re-derives the users dim (transform-data.py:
+  152-165): a dedup of ``users`` joined back to the per-user counts,
+  only for the names on each user's listens → both counts as windows
+  over the listens, one pass, no join.
+- songs_info's year partitions written by one task: its dedup shuffle,
+  hashed on all five columns, is tiny, so AQE coalesced it into one
+  partition and one task wrote every year's file → songs_info is
+  hash-partitioned on ``year`` itself (the dedup's one exchange), so
+  the year directories are spread over the session's shuffle
+  partitions.
 
 Faithfully preserved semantics (deliberate, documented):
 - `users` dim dedups on (user_id, first_name, last_name, gender,
@@ -44,6 +59,7 @@ from pyspark.sql import types as T
 from pyspark.util import inheritable_thread_target
 
 from big_data_projects_spark.functions.timestamps import (
+    CALENDAR_COLS,
     ts_from_epoch_ms,
     with_calendar_cols,
 )
@@ -96,17 +112,25 @@ def read_json(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame
 
 
 def process_songs(songs: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """songs_info + artists dims (transform-data.py:85-108)."""
-    songs = songs.fillna({"artist_latitude": 0.0, "artist_longitude": 0.0})
-    songs_info = songs.select(
-        "song_id", "title", "artist_id", "year", "duration"
-    ).dropDuplicates()
-    artists = songs.select(
-        F.col("artist_id"),
-        F.col("artist_name").alias("name"),
-        F.col("artist_location").alias("location"),
-        F.col("artist_latitude").alias("latitude"),
-        F.col("artist_longitude").alias("longitude"),
+    """songs_info + artists dims (transform-data.py:85-108).
+
+    songs_info is hash-partitioned on ``year`` into the session's
+    shuffle partitions before the dedup: that hash already clusters
+    every duplicate, so it stays the plan's one exchange, and an
+    explicit count is one AQE does not coalesce into a single task."""
+    n = int(songs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    songs_info = (
+        songs.selectExpr("song_id", "title", "artist_id", "year", "duration")
+        .repartition(n, "year")
+        .dropDuplicates()
+    )
+    # fillna's rendering: a NaN coordinate becomes 0 as well.
+    artists = songs.selectExpr(
+        "artist_id",
+        "artist_name AS name",
+        "artist_location AS location",
+        "coalesce(nanvl(artist_latitude, NULL), CAST(0.0D AS FLOAT)) AS latitude",
+        "coalesce(nanvl(artist_longitude, NULL), CAST(0.0D AS FLOAT)) AS longitude",
     ).dropDuplicates()
     return songs_info, artists
 
@@ -132,19 +156,20 @@ def process_logs(logs: DataFrame) -> DataFrame:
     """Filter to listen events + convert timestamps
     (transform-data.py:112-132): page='NextSong', ms-epoch-string ts →
     timestamp (built-in, UTC), registration double → long."""
-    listens = logs.filter(F.col("page") == "NextSong")
-    return listens.withColumn(
-        "ts_converted", ts_from_epoch_ms("ts")
-    ).withColumn("registration", F.col("registration").cast("long"))
+    cast = {"registration": "CAST(registration AS BIGINT) AS registration"}
+    cols = [cast.get(c, f"`{c}`") for c in logs.columns]
+    return logs.where("page = 'NextSong'").selectExpr(
+        *cols, f"{ts_from_epoch_ms('ts')} AS ts_converted"
+    )
 
 
 def users_dim(listens: DataFrame) -> DataFrame:
     """users (transform-data.py:135-138): dedup INCLUDING level — a
     level-switching user appears once per level (reference semantics)."""
-    return listens.select(
-        F.col("userId").alias("user_id"),
-        F.col("firstName").alias("first_name"),
-        F.col("lastName").alias("last_name"),
+    return listens.selectExpr(
+        "userId AS user_id",
+        "firstName AS first_name",
+        "lastName AS last_name",
         "gender",
         "level",
     ).dropDuplicates()
@@ -152,7 +177,7 @@ def users_dim(listens: DataFrame) -> DataFrame:
 
 def time_dim(listens: DataFrame) -> DataFrame:
     """time (transform-data.py:168-177): calendar breakdown, deduped."""
-    t = listens.select(F.col("ts_converted").alias("start_time"))
+    t = listens.selectExpr("ts_converted AS start_time")
     return with_calendar_cols(t, "start_time").dropDuplicates()
 
 
@@ -160,25 +185,20 @@ def user_level_listen(listens: DataFrame) -> DataFrame:
     """Per-user paid×free listen counts (transform-data.py:144-165):
     users with BOTH levels only, empty userId dropped, full_name
     concat, DISTINCT.  The reference inner-joins two filtered
-    aggregates; one aggregate with both counts keeps the same rows in
-    one shuffle (a null userId fails ``!= ''`` as it failed the join)."""
-    both = (
-        listens.filter(F.col("userId") != "")
-        .groupBy("userId")
-        .agg(
-            F.count_if(F.col("level") == "paid").alias("paid_use_count"),
-            F.count_if(F.col("level") == "free").alias("free_use_count"),
-        )
-        .filter((F.col("paid_use_count") > 0) & (F.col("free_use_count") > 0))
-    )
-    users = users_dim(listens)
+    aggregates and joins the ``users`` dim back for the names.  Here
+    both counts are windows over the user's own listens, so every
+    listen row carries its name and its user's counts: one pass, no
+    dedup of ``users`` and no join, the same rows (a user's names in
+    ``users`` are exactly the names on its listens; a null userId
+    fails ``!= ''`` as it failed the join)."""
     return (
-        users.join(both, users.user_id == both.userId)
-        .select(
-            F.concat_ws(" ", "first_name", "last_name").alias("full_name"),
-            "paid_use_count",
-            "free_use_count",
+        listens.where("userId != ''")
+        .selectExpr(
+            "concat_ws(' ', firstName, lastName) AS full_name",
+            "count_if(level = 'paid') OVER (PARTITION BY userId) AS paid_use_count",
+            "count_if(level = 'free') OVER (PARTITION BY userId) AS free_use_count",
         )
+        .where("paid_use_count > 0 AND free_use_count > 0")
         .distinct()
     )
 
@@ -186,31 +206,36 @@ def user_level_listen(listens: DataFrame) -> DataFrame:
 def songplays_fact(
     listens: DataFrame, time: DataFrame, artists: DataFrame, songs_info: DataFrame
 ) -> DataFrame:
-    """songplays (transform-data.py:276-298): 4-way star join on the
-    reference's natural keys (ts, artist name, song title), then a
-    scale-safe surrogate key (monotonically_increasing_id, not the
-    reference's order-by-constant global row_number)."""
+    """songplays (transform-data.py:276-298): the reference's star join
+    on natural keys (ts, artist name, song title), then a scale-safe
+    surrogate key (monotonically_increasing_id, not the reference's
+    order-by-constant global row_number).
+
+    ``time`` is unused: the join to it is a functional dependency
+    (one ``time`` row per distinct non-null ``start_time``, every
+    calendar column a function of it), so a listen with a timestamp
+    keeps its row and takes ``year``/``month`` from that timestamp;
+    one without one is dropped, as the join dropped it.  The two
+    natural-key joins stay, fan-out included."""
     # artists and songs_info share lineage (both derive from the songs
     # scan), so qualify everything through explicit aliases.
-    l, t = listens.alias("l"), time.alias("t")
-    a, s = artists.alias("a"), songs_info.alias("s")
-    joined = (
-        l.join(t, F.col("l.ts_converted") == F.col("t.start_time"))
-        .join(F.broadcast(a), F.col("l.artist") == F.col("a.name"))
-        .join(F.broadcast(s), F.col("l.song") == F.col("s.title"))
-    )
-    return joined.select(
-        F.monotonically_increasing_id().alias("num"),
-        F.col("t.start_time"),
-        F.col("l.userId").alias("user_id"),
-        F.col("l.level").alias("level"),
-        F.col("s.song_id"),
-        F.col("s.artist_id"),  # the songs-side id, as in the reference output
-        F.col("l.sessionId").alias("session_id"),
-        F.col("l.location"),  # the log event's location, not the artist's
-        F.col("l.userAgent").alias("user_agent"),
-        F.col("t.year"),
-        F.col("t.month"),
+    l = listens.where("ts_converted IS NOT NULL").alias("l")
+    joined = l.join(
+        F.broadcast(artists.alias("a")), F.expr("l.artist = a.name")
+    ).join(F.broadcast(songs_info.alias("s")), F.expr("l.song = s.title"))
+    ts = "l.ts_converted"
+    return joined.selectExpr(
+        "monotonically_increasing_id() AS num",
+        f"{ts} AS start_time",
+        "l.userId AS user_id",
+        "l.level AS level",
+        "s.song_id",
+        "s.artist_id",  # the songs-side id, as in the reference output
+        "l.sessionId AS session_id",
+        "l.location",  # the log event's location, not the artist's
+        "l.userAgent AS user_agent",
+        f"{CALENDAR_COLS['year'].format(c=ts)} AS year",
+        f"{CALENDAR_COLS['month'].format(c=ts)} AS month",
     )
 
 

@@ -66,7 +66,7 @@ def test_join_fanout_duplicate_keys(spark):
 def test_epoch_ms_string_conversion_utc(spark):
     # Reference F1: ts arrives as *string* milliseconds
     df = spark.createDataFrame([Row(ts="1542241826796")])
-    out = df.select(ts_from_epoch_ms("ts").alias("t")).collect()[0].t
+    out = df.selectExpr(f"{ts_from_epoch_ms('ts')} AS t").collect()[0].t
     assert out.replace(tzinfo=None) == ts("2018-11-15 00:30:26.796000")
 
 
@@ -535,29 +535,6 @@ def test_lsh_neardup_recall_floor(spark):
     assert lsh_bits_for(55) == 8
     assert lsh_bits_for(1 << 20) == 14
     assert lsh_bits_for(1 << 40) == 24  # clamped
-
-
-def test_batch_matmul_topk_agrees_with_fold_topk(spark):
-    """The numpy-matmul batch path must return the same neighbor ids
-    (same ranking) as the JVM-fold single-query path."""
-    from big_data_projects_spark.data import load_table
-    from big_data_projects_spark.operators.similarity import (
-        batch_topk_matmul,
-        topk_cosine,
-    )
-
-    emb = load_table(spark, "/root/testdata/sf0.01", "embeddings")
-    rows = batch_topk_matmul(emb, query_ids=[0, 1, 2], k=5).collect()
-    for qid in [0, 1, 2]:
-        batch_ids = [
-            r["vec_id"]
-            for r in sorted(
-                (r for r in rows if r["query_id"] == qid),
-                key=lambda r: (-r["sim"], r["vec_id"]),
-            )
-        ]
-        fold_ids = [r["vec_id"] for r in topk_cosine(emb, qid, k=5).collect()]
-        assert batch_ids == fold_ids, qid
 
 
 def test_ivf_recall_floor(spark):
@@ -1100,9 +1077,7 @@ def test_batch_matmul_exact_int_agrees_with_fold_topk(spark):
     )
 
     emb = load_table(spark, "/root/testdata/sf0.01", "embeddings")
-    rows = batch_topk_matmul(
-        emb, query_ids=[0, 1, 2], k=5, exact_int=True
-    ).collect()
+    rows = batch_topk_matmul(emb, query_ids=[0, 1, 2], k=5).collect()
     for qid in [0, 1, 2]:
         batch_ids = [
             r["vec_id"]

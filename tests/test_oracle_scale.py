@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from big_data_projects_spark.queries import REGISTRY
 from tests.oracle_utils import compare_query, suite_queries
+from conftest import restored_conf
 
 NAMES = suite_queries("scale")
 
@@ -27,16 +28,14 @@ def test_bucketed_join_has_no_shuffle(spark):
     fact⋈fact join would take), the bucket-aligned join must read both
     sides without an Exchange: the only exchange in the plan belongs to
     the final aggregation, not the join."""
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    with restored_conf(spark, key):
+        spark.conf.set(key, "-1")
         df = REGISTRY["q_bucketed_join"].spark(spark, "/root/testdata/sf0.01")
         plan = df._jdf.queryExecution().executedPlan().toString()
         join_part = plan.split("HashAggregate")[-1]
         assert "SortMergeJoin" in plan
         assert "Exchange" not in join_part, "join inputs were shuffled"
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
 def test_salted_join_matches_plain_join_exactly(spark):

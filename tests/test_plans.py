@@ -13,6 +13,7 @@ import contextlib
 import io
 
 from big_data_projects_spark.queries import REGISTRY
+from conftest import conf_bytes
 
 SF = "/root/testdata/sf0.01"
 
@@ -276,13 +277,16 @@ def test_bloom_filter_join_injects_runtime_filter(spark):
     # selective orders side must reach the lineitem side BEFORE the
     # join, and the thresholds the builder lowers for its own planning
     # must not outlive it (no leak into the next build).
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key, None)  # None: unset
     df = REGISTRY["q_bloom_filter_join"].spark(spark, SF)
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert "might_contain" in plan, "runtime bloom filter not injected"
     assert "bloom_filter_agg" in plan
     # Another builder runs → defaults restored.
     REGISTRY["q_tpch_q6"].spark(spark, SF)
-    assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == "10485760"
+    assert spark.conf.get(key, None) == before
+    assert conf_bytes(spark.conf.get(key)) == 10 * 1024 * 1024
 
 
 def test_interval_overlap_is_equi_join_not_nested_loop(spark):

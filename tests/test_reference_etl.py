@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import json
 import os
+import re
+from datetime import datetime, timezone
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,11 +15,16 @@ from pyspark.sql import functions as F
 from big_data_projects_spark.measure import jobs_launched
 from big_data_projects_spark.reference_etl import (
     LOGS_SCHEMA,
+    SONGS_SCHEMA,
     process_logs,
+    process_songs,
     run_reference_etl,
+    songplays_fact,
+    time_dim,
     user_level_listen,
     write_star_schema,
 )
+from conftest import restored_conf
 
 SONGS = [
     # artist Alpha has two songs; song "Shared Title" exists under TWO
@@ -223,3 +230,99 @@ def test_storage_level_introspection_api(spark):
     assert info["useDisk"] is True  # cache() default MEMORY_AND_DISK
     listens.unpersist(blocking=True)
     assert storage_info(listens)["useMemory"] is False
+
+
+def song(song_id, title, artist_id, artist_name, year=2010):
+    return dict(num_songs=1, artist_id=artist_id, artist_latitude=None,
+                artist_longitude=None, artist_location="", artist_name=artist_name,
+                song_id=song_id, title=title, duration=100.0, year=year)
+
+
+def expected_songplays(songs, logs):
+    """songplays as plain nested-loop joins over the input rows: a
+    listen with an epoch-ms ts × every distinct artist row of its
+    artist name × every distinct songs_info row of its title."""
+    artists = {(s["artist_id"], s["artist_name"], s["artist_location"],
+                s["artist_latitude"] or 0.0, s["artist_longitude"] or 0.0)
+               for s in songs}
+    infos = {(s["song_id"], s["title"], s["artist_id"], s["year"], s["duration"])
+             for s in songs}
+    out = []
+    for r in logs:
+        if r["page"] != "NextSong" or not (r["ts"] or "").isdigit():
+            continue
+        ms = int(r["ts"])
+        t = datetime.fromtimestamp(ms / 1000, timezone.utc)
+        for a in artists:
+            for i in infos:
+                if a[1] == r["artist"] and i[1] == r["song"]:
+                    out.append((ms, r["userId"], r["level"], i[0], i[2], r["sessionId"],
+                                r["location"], r["userAgent"], t.year, t.month))
+    return sorted(out)
+
+
+def songplays_rows(spark, songs, logs):
+    songs_info, artists = process_songs(spark.createDataFrame(songs, SONGS_SCHEMA))
+    listens = process_logs(spark.createDataFrame(logs, LOGS_SCHEMA))
+    sp = songplays_fact(listens, time_dim(listens), artists, songs_info)
+    assert sp.columns == ["num", "start_time", "user_id", "level", "song_id", "artist_id",
+                          "session_id", "location", "user_agent", "year", "month"]
+    rows = sp.selectExpr("unix_millis(start_time)", *sp.columns[2:]).collect()
+    return sorted(tuple(r) for r in rows)
+
+
+# Two songs share a title, two artist rows share a name (Gamma), and a
+# December listen checks year/month against its own timestamp.
+FANOUT_SONGS = [
+    song("SO1", "Twin", "AR1", "Alpha"),
+    song("SO2", "Twin", "AR2", "Beta"),
+    song("SO3", "Solo", "AR3", "Gamma"),
+    song("SO4", "Other", "AR4", "Gamma"),
+]
+FANOUT_LOGS = [
+    log(0, "1", "Ann", "Lee", "paid", "Twin", "Gamma"),  # 2 songs × 2 artists
+    log(60, "1", "Ann", "Lee", "free", "Solo", "Gamma"),  # 1 song × 2 artists
+    dict(log(0, "2", "Bob", "Kim", "free", "Solo", "Gamma"), ts="1546300799000"),
+    dict(log(120, "2", "Bob", "Kim", "free", "Solo", "Gamma"), ts=None),  # dropped
+    log(180, "2", "Bob", "Kim", "free", "Nowhere", "Gamma"),  # no song: dropped
+]
+
+
+def test_songplays_matches_plain_joins_with_fanout_and_null_ts(spark):
+    got = songplays_rows(spark, FANOUT_SONGS, FANOUT_LOGS)
+    assert got == expected_songplays(FANOUT_SONGS, FANOUT_LOGS)
+    assert len(got) == 4 + 2 + 2
+    assert {(r[-2], r[-1]) for r in got} == {(2018, 11), (2018, 12)}
+
+
+def test_songplays_drops_a_non_numeric_ts_without_ansi(spark):
+    # Under ANSI casts (the default) a non-numeric ts fails the ETL,
+    # as it fails DuckDB's cast; without them it casts to NULL, and
+    # the listen has no start time to keep.
+    logs = [*FANOUT_LOGS, dict(log(240, "2", "Bob", "Kim", "free", "Solo", "Gamma"), ts="abc")]
+    with restored_conf(spark, "spark.sql.ansi.enabled"):
+        spark.conf.set("spark.sql.ansi.enabled", "false")
+        got = songplays_rows(spark, FANOUT_SONGS, logs)
+    assert got == expected_songplays(FANOUT_SONGS, logs)
+    assert len(got) == 4 + 2 + 2
+
+
+def test_user_level_listen_keeps_every_name_a_user_listened_under(spark):
+    rows = [
+        log(0, "5", "Eve", "Old", "paid", "Song A", "Alpha"),
+        log(60, "5", "Eve", "New", "free", "Song A", "Alpha"),
+        log(120, "5", "Eve", "New", "free", "Song A", "Alpha"),
+    ]
+    listens = process_logs(spark.createDataFrame(rows, LOGS_SCHEMA))
+    got = sorted(tuple(r) for r in user_level_listen(listens).collect())
+    assert got == [("Eve New", 1, 2), ("Eve Old", 1, 2)]
+
+
+def test_songs_info_shuffles_once_on_year(spark):
+    songs_info, _ = process_songs(spark.createDataFrame(FANOUT_SONGS, SONGS_SCHEMA))
+    plan = songs_info._jdf.queryExecution().executedPlan().toString()
+    exchanges = re.findall(r"Exchange (\w+)\(([^)]*)\)", plan)
+    assert len(exchanges) == 1, plan
+    kind, keys = exchanges[0]
+    assert kind == "hashpartitioning"
+    assert re.fullmatch(r"year#\d+, \d+", keys), plan

@@ -13,7 +13,7 @@ import textwrap
 
 from big_data_projects_spark.data import load_table
 from big_data_projects_spark.queries import REGISTRY
-from conftest import REPO, SF_SMALL
+from conftest import REPO, SF_SMALL, conf_bytes, restored_conf
 
 UDTF_ARROW = "spark.sql.execution.pythonUDTF.arrow.enabled"
 BROADCAST = "spark.sql.autoBroadcastJoinThreshold"
@@ -49,36 +49,28 @@ def test_process_exit_leaves_no_scratch_dirs(tmp_path):
 
 
 def test_raw_builder_runs_under_the_callers_conf(spark):
-    before = spark.conf.get(BROADCAST)
-    try:
+    with restored_conf(spark, BROADCAST):
         spark.conf.set(BROADCAST, "-1")
         REGISTRY["q_tpch_q1"].raw(spark, SF_SMALL)
-        assert spark.conf.get(BROADCAST) == "-1"
-    finally:
-        spark.conf.set(BROADCAST, before)
+        assert conf_bytes(spark.conf.get(BROADCAST)) == -1
 
 
 def test_udtf_runs_on_arrow_without_setting_the_session_conf(spark):
-    before = spark.conf.get(UDTF_ARROW)
-    try:
+    with restored_conf(spark, UDTF_ARROW):
         spark.conf.set(UDTF_ARROW, "false")
         df = REGISTRY["q_udtf_spans"].spark(spark, SF_SMALL)
         assert spark.conf.get(UDTF_ARROW) == "false"
         assert "ArrowEvalPythonUDTF" in df._jdf.queryExecution().executedPlan().toString()
         assert df.count() > 0
-    finally:
-        spark.conf.set(UDTF_ARROW, before)
 
 
 def test_builder_and_loader_leave_the_conf_as_they_found_it(spark):
-    before = {k: spark.conf.get(k) for k in (*BLOOM_KEYS, NANOS_AS_LONG)}
-    try:
+    # Read with a None default: an unset key reads None, so a builder
+    # that restored it by setting its default would fail here.
+    with restored_conf(spark, *BLOOM_KEYS, NANOS_AS_LONG) as before:
         df = REGISTRY["q_bloom_filter_join"].raw(spark, SF_SMALL)
-        assert {k: spark.conf.get(k) for k in before} == before
+        assert {k: spark.conf.get(k, None) for k in before} == before
         assert "might_contain" in df._jdf.queryExecution().optimizedPlan().toString()
         spark.conf.set(NANOS_AS_LONG, "false")
         load_table(spark, SF_SMALL, "events")
         assert spark.conf.get(NANOS_AS_LONG) == "false"
-    finally:
-        for k, v in before.items():
-            spark.conf.set(k, v)

@@ -15,9 +15,8 @@ Timing methodology: the un-wrapped ``Query.raw`` builder, clearCache +
 JVM gc outside the timed region, force_count inside, ensure_runtime_conf
 after — the same hygiene perfbench does around its own operations.
 Round trips are the commands the builder's thread sends to the JVM
-(``ClientServerConnection.send_command`` calls; py4j's finalizer thread
-is not counted); thousands of them mean a Column chain that belongs in
-SQL text.
+(``measure.round_trips``); thousands of them mean a Column chain that
+belongs in SQL text.
 """
 
 from __future__ import annotations
@@ -27,7 +26,6 @@ import io
 import json
 import os
 import sys
-import threading
 import time
 from pathlib import Path
 
@@ -56,7 +54,7 @@ def main() -> None:
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from big_data_projects_spark.measure import force_count, jobs_launched
+    from big_data_projects_spark.measure import force_count, jobs_launched, round_trips
     from big_data_projects_spark.session import ensure_runtime_conf, get_spark
     from big_data_projects_spark.queries import REGISTRY
 
@@ -102,18 +100,6 @@ def main() -> None:
         # --runs 0 used to NameError on the unbound
         # sample count below; fail loudly with the reason instead.
         raise SystemExit(f"--runs must be >= 1 (got {runs})")
-    from py4j.clientserver import ClientServerConnection
-
-    round_trips = 0
-    send_command = ClientServerConnection.send_command
-    main_thread = threading.get_ident()
-
-    def counting_send(self, command):
-        nonlocal round_trips
-        round_trips += threading.get_ident() == main_thread
-        return send_command(self, command)
-
-    ClientServerConnection.send_command = counting_send
 
     out: dict[str, dict] = {}
     for name in names:
@@ -125,10 +111,9 @@ def main() -> None:
             spark.sparkContext._jvm.System.gc()
 
             def build():
-                calls0 = round_trips
                 t0 = time.perf_counter()
-                df = q.raw(spark, sf_dir)
-                return df, time.perf_counter() - t0, round_trips - calls0
+                df, calls = round_trips(lambda: q.raw(spark, sf_dir))
+                return df, time.perf_counter() - t0, calls
 
             def force():
                 t0 = time.perf_counter()
