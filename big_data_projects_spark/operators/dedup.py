@@ -13,9 +13,11 @@ Four tiers, each a standard large-scale training-data technique:
                  candidates come from equi-joins on (band, bucket),
                  never from a cross join.
 - simhash      : 60-bit SimHash per doc from md5-derived token hashes —
-                 bit-vote aggregation, engine-portable (the oracle
-                 reproduces it in pure SQL); near-pairs via pigeonhole
-                 blocking over 15-bit segments.
+                 one exchange on the doc id, then two narrow aggregates
+                 (votes per (doc, bit), set bits per doc) instead of one
+                 60-wide one, which the planner is slow to handle;
+                 engine-portable (the oracle reproduces it in pure SQL);
+                 near-pairs via pigeonhole blocking over 15-bit segments.
 
 All hashing is md5/xxhash64-based and deterministic; no Python UDFs.
 
@@ -519,41 +521,37 @@ def simhash(
     """``bits``-wide SimHash per doc (bits ≤ 60, multiple of 4).
 
     Token hash = first bits/4 hex chars of md5 (portable across
-    engines); per-bit votes (+1/−1, weighted by token multiplicity)
-    aggregated in one groupBy with ``bits`` conditional sums — a single
-    shuffle keyed on the doc id, map-side partial aggregation keeps it
-    narrow; bit set iff vote > 0.
-    """
-    from big_data_projects_spark.data import spread_small_scan
+    engines); per-bit votes (+1/−1, weighted by token multiplicity);
+    bit set iff vote > 0.
 
+    The raw (id, text) rows are hash-partitioned on the id into the
+    session's shuffle partitions, the plan's only exchange: an explicit
+    count is one AQE does not coalesce into a single task, so the
+    tokenizing and hashing run on every core even over a one-row-group
+    scan. Each token hash then fans out to one row per bit, and the
+    votes are two aggregates local to that partitioning: a sum per
+    (id, bit), then the set bits per id. One aggregate with ``bits``
+    conditional sums gives the same hashes, but the driver spends about
+    0.4 s planning it before its first job, and its partial aggregate
+    is the query's slowest stage (sf0.001, 4 cores).
+    """
     _check_simhash_bits(bits)
-    toks = tokens(text_col)
-    # Tokenize + explode + one md5 per token + ``bits`` partial sums
-    # all run in the scan stage — single-threaded on a one-row-group
-    # testdata scan; spread the raw (id, text) rows across cores first
-    # (no-op at real scale — see spread_small_scan; r12 optimization).
-    exploded = (
-        spread_small_scan(df.select(F.col(id_col), F.col(text_col)))
-        .select(F.col(id_col), F.explode(toks).alias("__tok"))
-        .select(
-            F.col(id_col),
-            F.conv(F.substring(F.md5("__tok"), 1, bits // 4), 16, 10)
-            .cast("long")
-            .alias("h"),
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return (
+        df.select(F.col(id_col), F.col(text_col))
+        .repartition(n, id_col)
+        .select(F.col(id_col), F.explode(tokens(text_col)).alias("__tok"))
+        .selectExpr(
+            f"`{id_col}`",
+            f"CAST(conv(substring(md5(__tok), 1, {bits // 4}), 16, 10) AS BIGINT) AS __h",
         )
-    )
-    # Votes and the bit accumulator go in as SQL text (see
-    # minhash_signatures): as Column chains they cost ~9,000 py4j calls.
-    votes = [
-        F.expr(f"sum(CASE WHEN shiftright(h, {i}) & 1 = 1 THEN 1 ELSE -1 END) AS v{i}")
-        for i in range(bits)
-    ]
-    acc = "CAST(0 AS BIGINT)" + "".join(
-        f" + CAST(CASE WHEN v{i} > 0 THEN {1 << i} ELSE 0 END AS BIGINT)"
-        for i in range(bits)
-    )
-    return exploded.groupBy(id_col).agg(*votes).select(
-        F.col(id_col), F.expr(f"{acc} AS simhash")
+        .selectExpr(f"`{id_col}`", "__h", f"explode(sequence(0, {bits - 1})) AS __i")
+        .groupBy(id_col, "__i")
+        .agg(F.expr("sum(IF(shiftright(__h, __i) & 1 = 1, 1, -1)) AS __v"))
+        .groupBy(id_col)
+        # A sum is nullable to the planner, though no group here is
+        # empty; the coalesce keeps the column NOT NULL.
+        .agg(F.expr("coalesce(sum(IF(__v > 0, shiftleft(1L, __i), 0L)), 0L) AS simhash"))
     )
 
 

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from big_data_projects_spark.data import load_table as _t
 from big_data_projects_spark.functions.timestamps import (
@@ -636,24 +636,31 @@ def q_ctas_insert(spark, sf_dir):
     import uuid
 
     orders = _t(spark, sf_dir, "orders")
-    orders.createOrReplaceTempView("orders_src")
     tbl = f"bdp_ctas_{uuid.uuid4().hex[:8]}"
     spark.sql(
         f"""CREATE TABLE {tbl} USING parquet AS
-            SELECT o_orderpriority, o_totalprice FROM orders_src
-            WHERE o_orderstatus = 'F'"""
+            SELECT o_orderpriority, o_totalprice FROM {{src}}
+            WHERE o_orderstatus = 'F'""",
+        src=orders,
     )
     spark.sql(
         f"""INSERT INTO {tbl}
-            SELECT o_orderpriority, o_totalprice FROM orders_src
-            WHERE o_orderstatus = 'O'"""
+            SELECT o_orderpriority, o_totalprice FROM {{src}}
+            WHERE o_orderstatus = 'O'""",
+        src=orders,
     )
     out = spark.table(tbl).groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n"), dsum("o_totalprice", "sum_price")
     )
     # Materialize the result before the table would go stale; keep the
     # builder side-effect-contained (drop the catalog entry + files).
-    result = spark.createDataFrame(out.collect(), schema=out.schema)
+    # The rows are collected and rebuilt in the JVM: a Python round
+    # trip would pickle them into a Python RDD.
+    jout = out._jdf
+    result = DataFrame(
+        spark._jsparkSession.createDataFrame(jout.collectAsList(), jout.schema()),
+        spark,
+    )
     spark.sql(f"DROP TABLE {tbl}")
     return result
 

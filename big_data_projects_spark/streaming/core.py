@@ -19,15 +19,18 @@ from big_data_projects_spark.session import scratch_dir
 
 def run_to_completion(df: DataFrame, output_mode: str) -> DataFrame:
     """Start df as a memory-sink streaming query, drain the source, and
-    return the sink contents as a (materialized) batch DataFrame.
+    return the sink contents as a batch DataFrame.
 
-    HARNESS-ONLY, for aggregate-shaped streams: the memory sink plus
-    the final collect are bounded by the aggregate's group count (tens
-    to thousands of rows). Streams whose output scales with the data —
-    candidate pairs, per-row gates — must drain through
-    run_to_distributed_batch (foreachBatch → parquet, no driver
-    collect) instead. The sink's named view (and the rows it holds in
-    the driver) is dropped once its rows are collected."""
+    HARNESS-ONLY, for aggregate-shaped streams: the memory sink holds
+    the whole result in the driver, bounded by the aggregate's group
+    count (tens to thousands of rows). Streams whose output scales with
+    the data — candidate pairs, per-row gates — must drain through
+    run_to_distributed_batch (foreachBatch → parquet) instead.
+
+    Nothing is collected: the returned frame's analyzed plan is bound
+    to the stopped sink's rows, so it plans as a ``LocalTableScan`` in
+    the JVM and stays readable after the sink's named view is dropped.
+    The rows live as long as the frame does."""
     spark = df.sparkSession
     name = f"bdp_stream_{uuid.uuid4().hex[:8]}"
     query = (
@@ -41,8 +44,7 @@ def run_to_completion(df: DataFrame, output_mode: str) -> DataFrame:
             query.processAllAvailable()
         finally:
             query.stop()
-        result = spark.table(name)
-        return spark.createDataFrame(result.collect(), schema=result.schema)
+        return spark.table(name)
     finally:
         spark.catalog.dropTempView(name)
 

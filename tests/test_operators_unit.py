@@ -199,6 +199,50 @@ def test_simhash_rejects_bits_that_are_not_whole_md5_hex_chars(spark, bits):
         simhash_oracle_sql(bits=bits)
 
 
+@pytest.mark.parametrize("bits", [32, SIMHASH_BITS])
+def test_simhash_edge_inputs_match_duckdb_oracle(spark, bits):
+    # Two rows sharing a doc_id pool their tokens' votes; empty and
+    # whitespace-only text hash the one empty token; null text gives
+    # no row.  The oracle is simhash_oracle_sql run in DuckDB.
+    import duckdb
+
+    rows = [
+        (1, "alpha beta gamma"),
+        (1, "Beta  delta\tepsilon "),
+        (2, ""),
+        (3, "   "),
+        (4, None),
+        (5, "alpha beta gamma"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = sorted(tuple(r) for r in simhash(df, bits=bits).collect())
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    want = sorted(con.sql(simhash_oracle_sql(bits=bits)).fetchall())
+    assert got == want
+    assert [d for d, _ in got] == [1, 2, 3, 5]
+    assert dict(got)[1] != dict(got)[5]
+
+
+def test_simhash_shuffles_once_on_the_doc_id(spark):
+    # The raw rows are hash-partitioned on the id alone, and both vote
+    # aggregates reuse that partitioning: no round-robin spread, no
+    # second exchange.
+    import re
+
+    from big_data_projects_spark.data import load_table
+
+    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
+    plan = simhash(docs)._jdf.queryExecution().executedPlan().toString()
+    exchanges = re.findall(r"Exchange (\w+)\(([^)]*)\)", plan)
+    assert len(exchanges) == 1, plan
+    kind, keys = exchanges[0]
+    assert kind == "hashpartitioning"
+    assert re.fullmatch(r"doc_id#\d+L?, \d+", keys), plan
+    assert "RoundRobinPartitioning" not in plan
+
+
 def test_simhash_near_pairs_matches_brute_force(spark):
     # Pigeonhole blocking must find EXACTLY the pairs within hamming ≤3
     # — verified against an all-pairs brute force on controlled hashes.

@@ -248,6 +248,25 @@ def test_directory_rewritten_with_new_file_names_streams_its_rows(tmp_path, spar
     assert run_to_completion(load_stream(spark, str(tmp_path), "documents"), "append").count() == 500
 
 
+def test_run_to_completion_hands_back_the_sink_in_the_jvm(spark):
+    """The memory sink's rows come back as a JVM-side local relation,
+    not collected and re-pickled into a Python RDD, and the frame stays
+    readable once its view is gone and the cache is cleared."""
+    from big_data_projects_spark.streaming.core import run_to_completion
+
+    stream = load_stream(spark, SF, "events").groupBy("event_type").count()
+    out = run_to_completion(stream, "complete")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan, plan
+    assert "ExistingRDD" not in plan, plan
+    assert not [t.name for t in spark.catalog.listTables() if t.name.startswith("bdp_stream_")]
+    spark.catalog.clearCache()
+    want = sorted(
+        tuple(r) for r in load_table(spark, SF, "events").groupBy("event_type").count().collect()
+    )
+    assert sorted(tuple(r) for r in out.collect()) == want
+
+
 def test_distributed_drain_handles_empty_stream(spark):
     """run_to_distributed_batch on a stream that emits zero rows must
     return an empty DataFrame with the stream's schema rather than
