@@ -20,7 +20,8 @@ one 64-bit hash per OUTPUT row (output ≪ input for everything timed),
 so the measurement stays a measurement of the query.
 
 ``jobs_launched`` counts the Spark jobs a call launches — for a
-builder, the jobs it runs before the caller asks for any result.
+builder, the jobs it runs before the caller asks for any result,
+a drained stream's micro-batches included.
 ``round_trips`` counts the py4j commands a call sends to the JVM: every
 PySpark ``Column`` call is one, so thousands of them while building
 mean a Column chain that belongs in SQL text.
@@ -58,19 +59,24 @@ def force_count(df: DataFrame) -> int:
 
 
 def jobs_launched(spark: SparkSession, fn: Callable[[], T]) -> tuple[T, int]:
-    """Run ``fn()`` under a fresh job group and return its result with
-    the number of Spark jobs it launched from the calling thread.  The
-    thread leaves with no job group set."""
+    """Run ``fn()`` under a fresh job tag and return its result with
+    the number of Spark jobs it launched.
+
+    A tag, not a job group: a streaming query's thread sets its own
+    job group (its run id) but keeps the tags of the thread that
+    started it, so a tag also counts the micro-batch jobs of a stream
+    ``fn`` drains."""
     sc = spark.sparkContext
-    group = f"bdp_jobs_{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(group, group)
+    tag = f"bdp_jobs_{uuid.uuid4().hex[:8]}"
+    sc.addJobTag(tag)
     try:
         result = fn()
     finally:
-        sc._jsc.clearJobGroup()
+        sc.removeJobTag(tag)
     # The status store learns of jobs from the listener bus.
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    return result, len(jsc.statusTracker().getJobIdsForTag(tag))
 
 
 def round_trips(fn: Callable[[], T]) -> tuple[T, int]:

@@ -1,9 +1,10 @@
 """Similarity search over an embedding column (array<float>).
 
-- cosine_sim   : JVM-side higher-order-function fold — sequential
+- cosine_sim_total : JVM-side higher-order-function fold — sequential
                  double accumulation, bit-identical to DuckDB's
                  list_dot_product/list_cosine_similarity on DOUBLE[]
-                 (verified empirically), so results hash-match oracles.
+                 (verified empirically), so results hash-match oracles;
+                 NULL, not an error, for a zero-norm vector.
 - topk_cosine  : brute-force top-k against one query vector. The
                  baseline; a broadcast of the query side + one pass.
 - blocked_neardup_pairs : all pairs above a cosine threshold *within a
@@ -56,20 +57,20 @@ def _norm(a: Column) -> Column:
     )
 
 
-def cosine_sim(a: Column, b: Column) -> Column:
-    """Raw cosine kernel: partial division — a zero-norm vector is an
-    ANSI-mode runtime abort.  Kept for callers that PROVE finite input
-    (unit fixtures); every production ranking/threshold consumer in
-    this package uses cosine_sim_total instead."""
-    return _dot(a, b) / (_norm(a) * _norm(b))
+def _idot(a: Column, b: Column) -> Column:
+    """Exact int64 dot product of two integer arrays."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x * y).cast("long")),
+        F.lit(0).cast("long"),
+        lambda acc, v: acc + v,
+    )
 
 
 def cosine_sim_total(a: Column, b: Column) -> Column:
-    """cosine_sim with a TOTAL division: NULL (not an ANSI-mode abort,
-    not NaN) when either vector has zero norm — bit-identical to
-    cosine_sim on finite input.  Consumers that rank or threshold
-    similarities use this so degenerate vectors compare as
-    nothing-is-near rather than erroring: NULL fails
+    """Cosine similarity with a TOTAL division: NULL (not an ANSI-mode
+    abort, not NaN) when either vector has zero norm. Consumers that
+    rank or threshold similarities use this so degenerate vectors
+    compare as nothing-is-near rather than erroring: NULL fails
     every `>= threshold` filter, and Spark's DESC ordering puts NULL
     last so it falls out of any top-k."""
     return F.try_divide(_dot(a, b), _norm(a) * _norm(b))
@@ -409,7 +410,7 @@ def ivf_merge_ingest(
     # The verify division is total for the same reason as the routing:
     # a candidate pair involving a zero-norm vector yields NULL (not an
     # ANSI abort), and NULL >= threshold filters it out — a zero-norm
-    # vector matches nothing.  Identical to cosine_sim on finite input.
+    # vector matches nothing.
     verified = (
         cand.join(b_vecs, "__b_id")
         .join(o_vecs, "__o_id")
@@ -494,6 +495,24 @@ def lsh_bits_for(n_rows: int) -> int:
     return b
 
 
+def _plane_dot(vec_col: str, p: list[float]) -> str:
+    """SQL text of the dot product of ``vec_col`` with the literal
+    plane ``p``: the zip_with/aggregate sequential double fold.
+
+    One parsed SQL expression, not nested Column ops: the Column route
+    pushed one F.lit() per weight through py4j (~8k driver round
+    trips, ~6 s of plan construction, for the 64×8×16 LSH default).
+    Weights render as CAST('<repr>' AS DOUBLE) — the string-parse the
+    DuckDB oracle twins use for these planes ('<repr>'::DOUBLE) — so
+    the parsed doubles are bit-identical to py4j literals."""
+    vals = ", ".join(f"CAST('{w!r}' AS DOUBLE)" for w in p)
+    return (
+        f"aggregate(zip_with({vec_col}, array({vals}), "
+        "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+        "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
+    )
+
+
 def band_signature_cols(
     dim: int, bits_per_band: int, n_bands: int, vec_col: str = "embedding"
 ) -> list[Column]:
@@ -502,32 +521,15 @@ def band_signature_cols(
     packed into an int bucket key. Deterministic planes (seeded rng),
     so retried tasks and the DuckDB oracle reproduce identical buckets."""
     planes = _hyperplanes(dim, bits_per_band * n_bands)
-    # Built as ONE parsed SQL expression per band, not nested Column
-    # ops (r12 optimization): the Column route pushed dim × bits ×
-    # n_bands F.lit() calls through py4j (~8k driver round-trips for
-    # the 64×8×16 default — measured ~6 s of pure plan CONSTRUCTION
-    # per consumer, before any data moved).  The SQL text parses in
-    # one shot to the IDENTICAL expression tree: plane weights render
-    # as CAST('<repr>' AS DOUBLE) — the same exact string-parse trick
-    # every DuckDB oracle twin already uses for these planes ('<repr>'
-    # ::DOUBLE), so the parsed doubles are bit-identical to the former
-    # py4j literals — and the dot is the same zip_with/aggregate
-    # sequential fold, the sign test the same CASE WHEN > 0, the bit
-    # packing the same integer weighted sum.
-    def _plane_dot(p: list[float]) -> str:
-        vals = ", ".join(f"CAST('{w!r}' AS DOUBLE)" for w in p)
-        return (
-            f"aggregate(zip_with({vec_col}, array({vals}), "
-            "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-            "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-        )
-
+    # ONE parsed SQL expression per band (see _plane_dot); the sign
+    # test is CASE WHEN > 0, the bit packing an integer weighted sum.
     return [
         F.expr(
             " + ".join(
-                f"(CASE WHEN {_plane_dot(planes[band * bits_per_band + i])}"
-                f" > 0 THEN {1 << i} ELSE 0 END)"
-                for i in range(bits_per_band)
+                f"(CASE WHEN {_plane_dot(vec_col, p)} > 0 THEN {1 << i} ELSE 0 END)"
+                for i, p in enumerate(
+                    planes[band * bits_per_band : (band + 1) * bits_per_band]
+                )
             )
         ).alias(f"b{band}")
         for band in range(n_bands)
@@ -1091,14 +1093,6 @@ def quantized_topk_cosine(
     original vectors never load at query time). Same
     TakeOrderedAndProject shape as the exact path."""
     qemb = quantize_int8(emb, id_col, vec_col)
-
-    def idot(a: Column, b: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x * y).cast("long")),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-
     q = qemb.filter(F.col(id_col) == query_id).select(
         F.col("q_vec").alias("__qv"), F.col("q_scale").alias("__qs")
     )
@@ -1108,12 +1102,12 @@ def quantized_topk_cosine(
         .select(
             F.col(id_col),
             (
-                (idot(F.col("q_vec"), F.col("__qv")).cast("double")
+                (_idot(F.col("q_vec"), F.col("__qv")).cast("double")
                  * F.col("q_scale") * F.col("__qs"))
                 / (
-                    F.sqrt(idot(F.col("q_vec"), F.col("q_vec")).cast("double"))
+                    F.sqrt(_idot(F.col("q_vec"), F.col("q_vec")).cast("double"))
                     * F.col("q_scale")
-                    * F.sqrt(idot(F.col("__qv"), F.col("__qv")).cast("double"))
+                    * F.sqrt(_idot(F.col("__qv"), F.col("__qv")).cast("double"))
                     * F.col("__qs")
                 )
             ).alias("sim_q"),
@@ -1320,22 +1314,12 @@ def random_project(
     verify) ~dim/out_dim cheaper while approximately preserving
     distances (ε ≈ sqrt(ln n / out_dim))."""
     planes = projection_planes(dim, out_dim)
-
-    # One parsed SQL expression per plane instead of dim F.lit() py4j
-    # calls each — same construction-cost fix as band_signature_cols
-    # (r12): CAST('<repr>' AS DOUBLE) parses to the bit-identical
-    # double, and the fold is the same zip_with/aggregate chain.
-    def _plane_dot(p: list[float]) -> str:
-        vals = ", ".join(f"CAST('{w!r}' AS DOUBLE)" for w in p)
-        return (
-            f"aggregate(zip_with({vec_col}, array({vals}), "
-            "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-            "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-        )
-
     return emb.select(
         F.col(id_col),
-        *[F.expr(_plane_dot(p)).alias(f"p{i}") for i, p in enumerate(planes)],
+        *[
+            F.expr(_plane_dot(vec_col, p)).alias(f"p{i}")
+            for i, p in enumerate(planes)
+        ],
     )
 
 

@@ -108,6 +108,38 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+# Gopher heuristic quality rules (Rae et al. 2021, arXiv:2112.11446
+# Table A1, bounds adapted to this corpus' short synthetic docs): 25–500
+# words, mean word length 3–10, at least 2 distinct stopwords present.
+GOPHER_STOPWORDS = ["the", "a", "of", "to", "and", "in", "is", "on", "that", "it"]
+GOPHER_STOPWORDS_SQL = ", ".join(f"'{w}'" for w in GOPHER_STOPWORDS)
+
+
+def gopher(t: str) -> dict[str, str]:
+    """The Gopher gate over a token-array column, as SQL text.
+
+    ``t`` is the SQL of the token array (a column name or an
+    expression). Returns the SQL of ``n_words`` (bigint),
+    ``mean_word_len`` (double), ``n_stopwords`` (distinct stopwords
+    present, bigint) and ``keep`` (the gate), in that order. Word
+    lengths sum exactly in int64 and divide once, so the mean is the
+    same double on any engine. Per-row arithmetic over the array: no
+    explode, no shuffle, all in codegen."""
+    n_words = f"CAST(size({t}) AS BIGINT)"
+    mean = f"aggregate({t}, 0L, (acc, w) -> acc + length(w)) / size({t})"
+    n_stop = (
+        f"CAST(size(array_intersect({t}, array({GOPHER_STOPWORDS_SQL})))"
+        " AS BIGINT)"
+    )
+    return {
+        "n_words": n_words,
+        "mean_word_len": mean,
+        "n_stopwords": n_stop,
+        "keep": f"({n_words} BETWEEN 25 AND 500 AND {mean} BETWEEN 3 AND 10"
+        f" AND {n_stop} >= 2)",
+    }
+
+
 def fingerprint(col: Column | str) -> Column:
     """Full-text md5 hex fingerprint (engine-portable)."""
     c = F.col(col) if isinstance(col, str) else col
@@ -116,8 +148,13 @@ def fingerprint(col: Column | str) -> Column:
 
 def fingerprint32(col: Column | str) -> Column:
     """First 32 bits of the md5 as a bigint — compact dedup key."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long")
+    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
+
+
+def fingerprint32_sql(e: str) -> str:
+    """fingerprint32 of the SQL expression ``e``, as SQL text (for
+    use inside a SQL lambda)."""
+    return f"CAST(conv(substring(md5({e}), 1, 8), 16, 10) AS BIGINT)"
 
 
 # GPT-2-style pre-tokenizer over lowercased text: contraction suffixes,

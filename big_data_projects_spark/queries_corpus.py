@@ -220,11 +220,7 @@ def q_stratified_sample(spark, sf_dir):
     (same md5-prefix scheme). Row-level output so the oracle checks
     exact membership, not just rates."""
     docs = _t(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        % 100
-    )
+    bucket = T.fingerprint32(F.col("doc_id").cast("string")) % 100
     pct = (
         F.when(F.col("source").isin("src0", "src1"), 60)
         .when(F.col("source") == "src2", 0)
@@ -709,10 +705,6 @@ def q_zscore_per_group(spark, sf_dir):
     )
 
 
-GOPHER_STOPWORDS = ["the", "a", "of", "to", "and", "in", "is", "on", "that", "it"]
-_STOP_SQL = ", ".join(f"'{w}'" for w in GOPHER_STOPWORDS)
-
-
 @register(
     "q_gopher_rules",
     oracle=rf"""
@@ -725,7 +717,7 @@ _STOP_SQL = ", ".join(f"'{w}'" for w in GOPHER_STOPWORDS)
                CAST(len(t) AS BIGINT) AS n_words,
                list_sum(list_transform(t, w -> len(w)))
                    / CAST(len(t) AS DOUBLE) AS mean_word_len,
-               CAST(len(list_intersect(list_distinct(t), [{_STOP_SQL}]))
+               CAST(len(list_intersect(list_distinct(t), [{T.GOPHER_STOPWORDS_SQL}]))
                     AS BIGINT) AS n_stopwords
         FROM s
     )
@@ -741,29 +733,12 @@ def q_gopher_rules(spark, sf_dir):
     synthetic docs): word-count window, mean word length window, and a
     minimum count of distinct stopwords present — the standard cheap
     pre-filter a trillion-token pipeline runs before any model-based
-    scoring. Per-row arithmetic over the token array, all in codegen
-    (no explode, no shuffle, no UDF) — embarrassingly parallel at any
-    scale. Exact-int sums divided once keep doubles engine-identical."""
+    scoring. The rule and its statistics are ``text.gopher``; per-row,
+    so embarrassingly parallel at any scale."""
     docs = _t(spark, sf_dir, "documents")
     base = docs.select("doc_id", T.tokens("text").alias("__t"))
-    n_words = F.size("__t").cast("long")
-    total_len = F.aggregate(
-        F.transform(F.col("__t"), lambda w: F.length(w).cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    mean_len = total_len / n_words
-    stop_arr = F.array(*[F.lit(w) for w in GOPHER_STOPWORDS])
-    n_stop = F.size(F.array_intersect(F.col("__t"), stop_arr)).cast("long")
-    keep = (
-        n_words.between(25, 500) & mean_len.between(3, 10) & (n_stop >= 2)
-    )
-    return base.select(
-        "doc_id",
-        n_words.alias("n_words"),
-        mean_len.alias("mean_word_len"),
-        n_stop.alias("n_stopwords"),
-        keep.alias("keep"),
+    return base.selectExpr(
+        "doc_id", *(f"{e} AS {k}" for k, e in T.gopher("__t").items())
     )
 
 
@@ -962,7 +937,7 @@ PPL_KEEP_BELOW = 30.0  # corpus median — splits this synthetic corpus
                len(t) BETWEEN 25 AND 500
                  AND list_sum(list_transform(t, w -> len(w)))
                      / CAST(len(t) AS DOUBLE) BETWEEN 3 AND 10
-                 AND len(list_intersect(list_distinct(t), [{_STOP_SQL}])) >= 2
+                 AND len(list_intersect(list_distinct(t), [{T.GOPHER_STOPWORDS_SQL}])) >= 2
                    AS s_rules,
                score > 0 AS s_model
         FROM sig
@@ -987,23 +962,11 @@ def q_quality_ensemble(spark, sf_dir):
     from big_data_projects_spark.queries import REGISTRY
 
     docs = _t(spark, sf_dir, "documents")
-    t = T.tokens("text")
-    n_words = F.size(t).cast("long")
-    total_len = F.aggregate(
-        F.transform(t, lambda w: F.length(w).cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    mean_len = total_len / n_words
-    stop_arr = F.array(*[F.lit(w) for w in GOPHER_STOPWORDS])
-    s_rules = (
-        n_words.between(25, 500)
-        & mean_len.between(3, 10)
-        & (F.size(F.array_intersect(t, stop_arr)) >= 2)
-    )
     s_model = T.hashed_linear_score(F.col("text")) > 0
     sig = docs.select(
-        "doc_id", s_rules.alias("s_rules"), s_model.alias("s_model")
+        "doc_id", T.tokens("text").alias("__t"), s_model.alias("s_model")
+    ).selectExpr(
+        "doc_id", f"{T.gopher('__t')['keep']} AS s_rules", "s_model"
     )
     ppl = REGISTRY["q_unigram_ppl"].raw(spark, sf_dir).select(
         "doc_id", (F.col("ppl") < PPL_KEEP_BELOW).alias("s_ppl")
@@ -1210,7 +1173,7 @@ def q_oov_rate(spark, sf_dir):
                      BETWEEN 3 AND 10
                  AND len(list_intersect(
                          list_distinct(regexp_split_to_array(text, ' ')),
-                         [{_STOP_SQL}])) >= 2 AS rule_keep
+                         [{T.GOPHER_STOPWORDS_SQL}])) >= 2 AS rule_keep
         FROM clean
     ),
     deduped AS (
@@ -1261,24 +1224,10 @@ def q_pipeline_web_corpus(spark, sf_dir):
         F.lit("&gt;"), F.lit(">"),
     )
     clean = F.trim(F.regexp_replace(decoded, " +", " "))
-    t = F.split(clean, " ")
-    n_tokens = F.size(t).cast("long")
-    total_len = F.aggregate(
-        F.transform(t, lambda w: F.length(w).cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    stop_arr = F.array(*[F.lit(w) for w in GOPHER_STOPWORDS])
-    rule_keep = (
-        n_tokens.between(25, 500)
-        & (total_len / n_tokens).between(3, 10)
-        & (F.size(F.array_intersect(t, stop_arr)) >= 2)
-    )
-    judged = docs.select(
-        "doc_id", "source",
-        F.md5(clean).alias("fp"),
-        n_tokens.alias("n_tokens"),
-        rule_keep.alias("rule_keep"),
+    g = T.gopher("split(__c, ' ')")
+    judged = docs.select("doc_id", "source", clean.alias("__c")).selectExpr(
+        "doc_id", "source", "md5(__c) AS fp",
+        f"{g['n_words']} AS n_tokens", f"{g['keep']} AS rule_keep",
     )
     w = Window.partitionBy("fp")
     keep_id = F.min(F.when(F.col("rule_keep"), F.col("doc_id"))).over(w)

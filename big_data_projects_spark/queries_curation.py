@@ -96,10 +96,10 @@ def q_dsir_weights(spark, sf_dir):
     the in-row sequential fold is bit-identical to the former
     shuffle-ordered SUM.  No driver collect, no window."""
     docs = _t(spark, sf_dir, "documents")
-    bkt_sql = (
-        f"CAST(conv(substring(md5({{t}}), 1, 8), 16, 10) AS BIGINT) "
-        f"% {DSIR_BUCKETS}"
-    )
+
+    def bkt_sql(t):
+        return f"{T.fingerprint32_sql(t)} % {DSIR_BUCKETS}"
+
     tgt = F.col("source").isin("src0", "src1")
     # ONE counting pass (was: tc, rc, nt, nr — four aggregates over four
     # re-tokenizations of the corpus; guide §2.4): per-bucket raw count
@@ -109,7 +109,7 @@ def q_dsir_weights(spark, sf_dir):
     # former left-join coalesce did).
     counts = (
         docs.select("source", F.explode(T.tokens("text")).alias("term"))
-        .select("source", F.expr(bkt_sql.format(t="term")).alias("bkt"))
+        .select("source", F.expr(bkt_sql("term")).alias("bkt"))
         .groupBy("bkt")
         .agg(
             F.count(F.lit(1)).alias("cr"),
@@ -160,7 +160,7 @@ def q_dsir_weights(spark, sf_dir):
                 F.expr(
                     "aggregate(__toks, CAST(0 AS DECIMAL(38,14)), "
                     f"(acc, t) -> CAST(acc + element_at(__w, "
-                    f"{bkt_sql.format(t='t')}) AS DECIMAL(38,14)))"
+                    f"{bkt_sql('t')}) AS DECIMAL(38,14)))"
                 ).cast("double"),
                 8,
             ).alias("log_weight"),
@@ -950,13 +950,7 @@ def q_span_corruption(spark, sf_dir):
         ).alias("blk"),
     )
     masked = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat_ws("_", F.col("doc_id"), F.col("blk"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
+        T.fingerprint32(F.concat_ws("_", F.col("doc_id"), F.col("blk")))
         % SPAN_MOD
         == 0
     )
@@ -1708,9 +1702,6 @@ def q_embed_centroid_shift(spark, sf_dir):
 
 
 def _calibration_oracle() -> str:
-    from big_data_projects_spark.queries_corpus import GOPHER_STOPWORDS
-
-    stop_sql = ", ".join(f"'{w}'" for w in GOPHER_STOPWORDS)
     toks = r"regexp_split_to_array(trim(lower(text)), '\s+')"
     return rf"""
     WITH s AS (
@@ -1726,7 +1717,7 @@ def _calibration_oracle() -> str:
                CAST(len(t) AS BIGINT) AS n_words,
                list_sum(list_transform(t, w -> len(w)))
                    / CAST(len(t) AS DOUBLE) AS mwl,
-               CAST(len(list_intersect(list_distinct(t), [{stop_sql}]))
+               CAST(len(list_intersect(list_distinct(t), [{T.GOPHER_STOPWORDS_SQL}]))
                     AS BIGINT) AS n_stop
         FROM s
     ),
@@ -1766,36 +1757,13 @@ def q_quality_calibration(spark, sf_dir):
     (the scorer's int64 hashed-bag fold; the Gopher in-row rules) —
     this query is their composition plus ONE bin-keyed
     map-side-combined aggregate. No window, no collect, no join."""
-    from big_data_projects_spark.queries_corpus import GOPHER_STOPWORDS
-
     docs = _t(spark, sf_dir, "documents")
-    base = docs.select("doc_id", T.tokens("text").alias("__t"))
-    score = F.aggregate(
-        F.transform(
-            F.col("__t"),
-            lambda t: (
-                F.conv(F.substring(F.md5(t), 1, 6), 16, 10).cast("long")
-                % 512
-            )
-            * F.lit(2654435761)
-            % F.lit(1000003)
-            - F.lit(500001),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
+    base = docs.select(
+        T.hashed_linear_score("text").alias("__s"),
+        T.tokens("text").alias("__t"),
     )
-    n_words = F.size("__t").cast("long")
-    total_len = F.aggregate(
-        F.transform(F.col("__t"), lambda w: F.length(w).cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    mwl = total_len / n_words
-    stop_arr = F.array(*[F.lit(w) for w in GOPHER_STOPWORDS])
-    n_stop = F.size(F.array_intersect(F.col("__t"), stop_arr)).cast("long")
-    gopher_keep = (
-        n_words.between(25, 500) & mwl.between(3, 10) & (n_stop >= 2)
-    )
+    score = F.col("__s")
+    gopher_keep = F.expr(T.gopher("__t")["keep"])
     b = base.select(
         F.least(
             F.lit(9),
@@ -2443,11 +2411,7 @@ def q_pass_at_k(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     s = docs.select(
         (
-            F.conv(
-                F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
-                16, 10,
-            ).cast("long")
-            % PASS_AT_K_PROBLEMS
+            T.fingerprint32(F.col("doc_id").cast("string")) % PASS_AT_K_PROBLEMS
         ).alias("problem_id"),
         F.when(F.substring(F.md5("text"), 1, 1) < "8", 1)
         .otherwise(0)
@@ -3106,10 +3070,7 @@ def q_pii_prevalence(spark, sf_dir):
     from big_data_projects_spark.queries_corpus import EMAIL_RE, PHONE_RE
 
     docs = _t(spark, sf_dir, "documents")
-    h = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
-               16, 10).cast("long")
-    )
+    h = T.fingerprint32(F.col("doc_id").cast("string"))
     raw = F.concat(
         F.col("text"),
         F.when(
@@ -3204,9 +3165,6 @@ _LR_PRED_EXPR = "round(w0 + w1*x1 + w2*x2 + w3*x3, 12)"
 
 
 def _lr_train_oracle() -> str:
-    from big_data_projects_spark.queries_corpus import GOPHER_STOPWORDS
-
-    stop_sql = ", ".join(f"'{w}'" for w in GOPHER_STOPWORDS)
     toks = r"regexp_split_to_array(trim(lower(text)), '\s+')"
     moms = ",\n           ".join(
         [
@@ -3231,7 +3189,7 @@ def _lr_train_oracle() -> str:
                CAST(len(t) AS BIGINT) AS n_words,
                CAST(list_sum(list_transform(t, w -> len(w))) AS BIGINT)
                    AS total_len,
-               CAST(len(list_intersect(list_distinct(t), [{stop_sql}]))
+               CAST(len(list_intersect(list_distinct(t), [{T.GOPHER_STOPWORDS_SQL}]))
                     AS BIGINT) AS n_stop
         FROM s),
     f AS MATERIALIZED (
@@ -3305,19 +3263,10 @@ def q_quality_lr_train(spark, sf_dir):
     whole fit is one aggregate down to a 15-double row; scoring +
     confusion is a second scan with the weight row broadcast. Two
     corpus passes total, no window, no collect, no iteration."""
-    from big_data_projects_spark.queries_corpus import GOPHER_STOPWORDS
-
     docs = _t(spark, sf_dir, "documents")
     base = docs.select("doc_id", T.tokens("text").alias("__t"))
-    n_words = F.size("__t").cast("long")
-    total_len = F.aggregate(
-        F.transform(F.col("__t"), lambda w: F.length(w).cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    stop_arr = F.array(*[F.lit(w) for w in GOPHER_STOPWORDS])
-    n_stop = F.size(F.array_intersect(F.col("__t"), stop_arr)).cast("long")
-    mwl = total_len / n_words
+    g = {k: F.expr(e) for k, e in T.gopher("__t").items()}
+    n_words, mwl, n_stop = g["n_words"], g["mean_word_len"], g["n_stopwords"]
     feats = base.select(
         F.lit(1.0).alias("x0"),
         F.round(
@@ -3326,17 +3275,14 @@ def q_quality_lr_train(spark, sf_dir):
         ).alias("x1"),
         F.round(
             F.least(
-                F.abs(total_len / (n_words * F.lit(1.0)) - F.lit(6.5))
+                F.abs(mwl - F.lit(6.5))
                 / F.lit(3.5),
                 F.lit(2.0),
             ),
             12,
         ).alias("x2"),
         F.round(F.least(n_stop, F.lit(8)) / F.lit(8.0), 12).alias("x3"),
-        F.when(
-            n_words.between(25, 500) & mwl.between(3, 10) & (n_stop >= 2),
-            F.lit(1.0),
-        )
+        F.when(g["keep"], F.lit(1.0))
         .otherwise(F.lit(0.0))
         .alias("y"),
     ).persist()
@@ -3416,9 +3362,6 @@ def q_quality_lr_train(spark, sf_dir):
 
 
 def _filter_ablation_oracle() -> str:
-    from big_data_projects_spark.queries_corpus import GOPHER_STOPWORDS
-
-    stop_sql = ", ".join(f"'{w}'" for w in GOPHER_STOPWORDS)
     toks = r"regexp_split_to_array(trim(lower(text)), '\s+')"
     return rf"""
     WITH s AS MATERIALIZED (
@@ -3430,7 +3373,7 @@ def _filter_ablation_oracle() -> str:
                (CAST(len(t) AS BIGINT) BETWEEN 25 AND 500
                 AND list_sum(list_transform(t, w -> len(w)))
                     / CAST(len(t) AS DOUBLE) BETWEEN 3 AND 10
-                AND CAST(len(list_intersect(list_distinct(t), [{stop_sql}]))
+                AND CAST(len(list_intersect(list_distinct(t), [{T.GOPHER_STOPWORDS_SQL}]))
                          AS BIGINT) >= 2) AS gopher_keep,
                CAST(list_sum(list_transform(t,
                    tk -> (CAST(('0x' || substr(md5(tk), 1, 6)) AS BIGINT)
@@ -3509,33 +3452,18 @@ def q_filter_ablation(spark, sf_dir):
     per-gate views (q_gopher_rules, q_quality_classifier,
     q_char_entropy, q_pii_prevalence) cannot express.
 
-    Every gate expression is the already-hash-matched idiom from its
-    owning query, restated verbatim. The entropy gate needs the one
+    The Gopher gate and the scorer are the shared text operators; the
+    PII gate restates q_pii_prevalence's view. The entropy gate needs the one
     doc-keyed aggregate (char counts map-side-combine to ≤|alphabet|
     rows per doc); everything else is in-row. One doc-keyed join of
     the two per-doc relations, one 16-cell aggregate — at 100 TB this
     is two scans, one doc-keyed shuffle, one tiny rollup."""
-    from big_data_projects_spark.queries_corpus import (
-        EMAIL_RE,
-        GOPHER_STOPWORDS,
-        PHONE_RE,
-    )
+    from big_data_projects_spark.queries_corpus import EMAIL_RE, PHONE_RE
 
     docs = _t(spark, sf_dir, "documents")
     base = docs.select("doc_id", "text", T.tokens("text").alias("__t"))
-    n_words = F.size("__t").cast("long")
-    total_len = F.aggregate(
-        F.transform(F.col("__t"), lambda w: F.length(w).cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    stop_arr = F.array(*[F.lit(w) for w in GOPHER_STOPWORDS])
-    n_stop = F.size(F.array_intersect(F.col("__t"), stop_arr)).cast("long")
-    mwl = total_len / n_words
-    h = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
-               16, 10).cast("long")
-    )
+    g = T.gopher("__t")
+    h = T.fingerprint32(F.col("doc_id").cast("string"))
     raw = F.concat(
         F.col("text"),
         F.when(
@@ -3556,10 +3484,8 @@ def q_filter_ablation(spark, sf_dir):
     )
     flags = base.select(
         "doc_id",
-        n_words.alias("n_toks"),
-        (
-            n_words.between(25, 500) & mwl.between(3, 10) & (n_stop >= 2)
-        ).alias("gopher_keep"),
+        F.expr(g["n_words"]).alias("n_toks"),
+        F.expr(g["keep"]).alias("gopher_keep"),
         (T.hashed_linear_score(F.col("text")) > 0).alias("clf_keep"),
         (
             (
@@ -3890,11 +3816,7 @@ def q_split_leakage(spark, sf_dir):
     )
 
     def split_of(col):
-        bucket = (
-            F.conv(F.substring(F.md5(col.cast("string")), 1, 8), 16, 10)
-            .cast("long")
-            % 10
-        )
+        bucket = T.fingerprint32(col.cast("string")) % 10
         return (
             F.when(bucket < 8, "train")
             .when(bucket == 8, "val")
@@ -4018,10 +3940,7 @@ def q_encoding_audit(spark, sf_dir):
     regexes, no UDF), one source-keyed map-side-combined aggregate —
     the q_dataset_report shape; output is |sources| rows."""
     docs = _t(spark, sf_dir, "documents")
-    h = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
-               16, 10).cast("long")
-    )
+    h = T.fingerprint32(F.col("doc_id").cast("string"))
     moji = "don\u00e2\u20ac\u2122t"  # noqa: the CP1252 mojibake of a right quote
     txt = F.concat(
         F.col("text"),
@@ -4162,10 +4081,7 @@ def q_sft_turn_audit(spark, sf_dir):
     explode: turn arrays never leave the row) — then ONE source-keyed
     map-side-combined aggregate; output is |sources| rows."""
     docs = _t(spark, sf_dir, "documents")
-    h = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
-               16, 10).cast("long")
-    )
+    h = T.fingerprint32(F.col("doc_id").cast("string"))
     toks = T.tokens("text")
     n_toks = F.size(toks).cast("long")
     n_turns = F.floor(
@@ -4530,10 +4446,7 @@ def q_code_switch_audit(spark, sf_dir):
     proportional to scan cost by construction."""
     docs = _t(spark, sf_dir, "documents")
     w = CS_WINDOW_TOKENS
-    h = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
-               16, 10).cast("long")
-    )
+    h = T.fingerprint32(F.col("doc_id").cast("string"))
     txt = F.when(
         h % 6 == 2, F.concat(F.col("text"), F.lit(" " + CS_DE_SUFFIX))
     ).otherwise(F.col("text"))

@@ -1534,12 +1534,7 @@ def q_hash_split(spark, sf_dir):
     re-runs and resharding, and any engine can recompute membership —
     which is exactly what the oracle does."""
     docs = _t(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-        ).cast("long")
-        % 10
-    )
+    bucket = T.fingerprint32(F.col("doc_id").cast("string")) % 10
     split = (
         F.when(bucket < 8, "train").when(bucket == 8, "val").otherwise("test")
     )
@@ -3779,6 +3774,77 @@ def q_preference_pairs(spark, sf_dir):
     )
 
 
+def _recall_panel(emb):
+    """The recall harnesses' fixed query panel — the 20 smallest
+    md5(vec_id), persisted because every scoring path re-joins it (one
+    md5 order-by corpus scan, not one per path) — and the corpus,
+    spread across cores: each scoring pass runs panel×corpus
+    interpreted dot folds in the corpus scan stage, single-threaded on
+    a one-row-group testdata scan (no-op at real scale — see
+    data.spread_small_scan)."""
+    from big_data_projects_spark.data import spread_small_scan
+
+    panel = (
+        emb.select(F.col("vec_id").alias("__pid"))
+        .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
+        .limit(20)
+        .persist()
+    )
+    return panel, spread_small_scan(emb)
+
+
+def _ranked_top(scored, sim_col):
+    """Per qid, the 10 highest ``sim_col`` vec_ids (vec_id breaks ties)."""
+    w = Window.partitionBy("qid").orderBy(F.desc(sim_col), F.col("vec_id"))
+    return (
+        scored.withColumn("r", F.row_number().over(w))
+        .where(F.col("r") <= 10)
+        .select("qid", "vec_id")
+    )
+
+
+def _cosine_top(df, vec_col, panel):
+    """Exact-cosine top-10 of ``df``'s ``vec_col`` per panel query;
+    norms precompute once per row and the panel side broadcasts."""
+    dn = df.withColumn("__nn", S._norm(F.col(vec_col)))
+    pan = (
+        dn.join(F.broadcast(panel), F.col("vec_id") == F.col("__pid"))
+        .select(
+            F.col("vec_id").alias("qid"),
+            F.col(vec_col).alias("__qe"),
+            F.col("__nn").alias("__qn"),
+        )
+    )
+    scored = (
+        dn.crossJoin(F.broadcast(pan))
+        .where(F.col("vec_id") != F.col("qid"))
+        .select(
+            "qid", "vec_id",
+            (
+                S._dot(F.col(vec_col), F.col("__qe"))
+                / (F.col("__nn") * F.col("__qn"))
+            ).alias("sim"),
+        )
+    )
+    return _ranked_top(scored, "sim")
+
+
+def _recall_at_10(ex_top, approx_top):
+    """Per qid, how many of the exact top-10 the approximate top-10
+    also holds, and that count over 10."""
+    return (
+        ex_top.join(
+            approx_top.withColumn("__hit", F.lit(1)), ["qid", "vec_id"], "left"
+        )
+        .groupBy("qid")
+        .agg(F.sum(F.coalesce(F.col("__hit"), F.lit(0))).alias("n_overlap"))
+        .select(
+            "qid", "n_overlap",
+            (F.col("n_overlap") / F.lit(10.0)).alias("recall_at_10"),
+        )
+    )
+
+
 @register(
     "q_ann_recall",
     oracle="""
@@ -3847,50 +3913,15 @@ def q_ann_recall(spark, sf_dir):
     eval runs over a corpus SAMPLE (recall estimates need only a
     bounded candidate pool), keeping each window partition
     sample-sized."""
-    emb = _t(spark, sf_dir, "embeddings")
-    panel = (
-        emb.select(F.col("vec_id").alias("__pid"))
-        .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(20)
-        .persist()  # every scoring path re-joins it: one md5 order-by
-        # corpus scan, not one per path (the q_ivf_probe_recall
-        # pattern)
-    )
-    # Both scoring passes run panel×corpus interpreted dot folds in
-    # the corpus scan stage — single-threaded on a one-row-group
-    # testdata scan; spread the corpus rows across cores first (no-op
-    # at real scale — see data.spread_small_scan; r12 optimization).
-    from big_data_projects_spark.data import spread_small_scan
+    panel, emb = _recall_panel(_t(spark, sf_dir, "embeddings"))
 
-    emb = spread_small_scan(emb)
-
-    def ranked_top(scored, sim_col):
-        w = Window.partitionBy("qid").orderBy(
-            F.desc(sim_col), F.col("vec_id")
-        )
-        return (
-            scored.withColumn("r", F.row_number().over(w))
-            .where(F.col("r") <= 10)
-            .select("qid", "vec_id")
-        )
-
-    # int8 path (same expression shape as S.quantized_topk_cosine)
-    qemb = S.quantize_int8(emb)
-
-    def idot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x * y).cast("long")),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-
+    # int8 path (same expression shape as S.quantized_topk_cosine).
     # Per-side norms precompute ONCE per row (same float expression →
     # bit-identical values, ~3x less arithmetic than per-pair norms —
     # the topk_cosine precompute precedent).
-    i8_norm = F.sqrt(
-        idot(F.col("q_vec"), F.col("q_vec")).cast("double")
+    qemb_n = S.quantize_int8(emb).withColumn(
+        "__nn", F.sqrt(S._idot(F.col("q_vec"), F.col("q_vec")).cast("double"))
     )
-    qemb_n = qemb.withColumn("__nn", i8_norm)
     qpanel_n = (
         qemb_n.join(
             F.broadcast(panel), F.col("vec_id") == F.col("__pid")
@@ -3908,7 +3939,7 @@ def q_ann_recall(spark, sf_dir):
         .select(
             "qid", "vec_id",
             (
-                (idot(F.col("q_vec"), F.col("__qv")).cast("double")
+                (S._idot(F.col("q_vec"), F.col("__qv")).cast("double")
                  * F.col("q_scale") * F.col("__qs"))
                 / (
                     F.col("__nn") * F.col("q_scale")
@@ -3917,62 +3948,8 @@ def q_ann_recall(spark, sf_dir):
             ).alias("sim_q"),
         )
     )
-    i8_top = ranked_top(i8_scored, "sim_q")
-
-    # exact path (same precompute; S.cosine_sim's norm fold and this
-    # one produce identical doubles for identical inputs)
-    ex_norm = F.sqrt(
-        F.aggregate(
-            F.transform(
-                F.col("embedding"),
-                lambda x: x.cast("double") * x.cast("double"),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    emb_n = emb.withColumn("__nn", ex_norm)
-    rpanel = (
-        emb_n.join(
-            F.broadcast(panel), F.col("vec_id") == F.col("__pid")
-        )
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.col("embedding").alias("__qe"),
-            F.col("__nn").alias("__qn"),
-        )
-    )
-    ex_scored = (
-        emb_n.crossJoin(F.broadcast(rpanel))
-        .where(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid", "vec_id",
-            (
-                F.aggregate(
-                    F.zip_with(
-                        F.col("embedding"), F.col("__qe"),
-                        lambda x, y: x.cast("double") * y.cast("double"),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                / (F.col("__nn") * F.col("__qn"))
-            ).alias("sim"),
-        )
-    )
-    ex_top = ranked_top(ex_scored, "sim")
-
-    return (
-        ex_top.join(
-            i8_top.withColumn("__hit", F.lit(1)), ["qid", "vec_id"], "left"
-        )
-        .groupBy("qid")
-        .agg(F.sum(F.coalesce(F.col("__hit"), F.lit(0))).alias("n_overlap"))
-        .select(
-            "qid", "n_overlap",
-            (F.col("n_overlap") / F.lit(10.0)).alias("recall_at_10"),
-        )
-    )
+    i8_top = _ranked_top(i8_scored, "sim_q")
+    return _recall_at_10(_cosine_top(emb, "embedding", panel), i8_top)
 
 
 @register(
@@ -4404,92 +4381,12 @@ def q_matryoshka_recall(spark, sf_dir):
     NOT importance-ordered, so measured recall is the pessimistic
     untrained-truncation floor; a trained MRL model reorders mass
     into the prefix and this same query measures the gain.)"""
-    emb = _t(spark, sf_dir, "embeddings")
-    panel = (
-        emb.select(F.col("vec_id").alias("__pid"))
-        .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(20)
-        .persist()  # every scoring path re-joins it: one md5 order-by
-        # corpus scan, not one per path (the q_ivf_probe_recall
-        # pattern)
-    )
-    # Both scoring passes run panel×corpus interpreted dot folds in
-    # the corpus scan stage — single-threaded on a one-row-group
-    # testdata scan; spread the corpus rows across cores first (no-op
-    # at real scale — see data.spread_small_scan; r12 optimization).
-    from big_data_projects_spark.data import spread_small_scan
-
-    emb = spread_small_scan(emb)
-
-    def ranked_top(scored, sim_col):
-        w = Window.partitionBy("qid").orderBy(
-            F.desc(sim_col), F.col("vec_id")
-        )
-        return (
-            scored.withColumn("r", F.row_number().over(w))
-            .where(F.col("r") <= 10)
-            .select("qid", "vec_id")
-        )
-
-    def path_top(vec_expr_name, df):
-        norm = F.sqrt(
-            F.aggregate(
-                F.transform(
-                    F.col(vec_expr_name),
-                    lambda x: x.cast("double") * x.cast("double"),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        )
-        dn = df.withColumn("__nn", norm)
-        pan = (
-            dn.join(
-                F.broadcast(panel), F.col("vec_id") == F.col("__pid")
-            )
-            .select(
-                F.col("vec_id").alias("qid"),
-                F.col(vec_expr_name).alias("__qe"),
-                F.col("__nn").alias("__qn"),
-            )
-        )
-        scored = (
-            dn.crossJoin(F.broadcast(pan))
-            .where(F.col("vec_id") != F.col("qid"))
-            .select(
-                "qid", "vec_id",
-                (
-                    F.aggregate(
-                        F.zip_with(
-                            F.col(vec_expr_name), F.col("__qe"),
-                            lambda x, y: x.cast("double")
-                            * y.cast("double"),
-                        ),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x,
-                    )
-                    / (F.col("__nn") * F.col("__qn"))
-                ).alias("sim"),
-            )
-        )
-        return ranked_top(scored, "sim")
-
-    ex_top = path_top("embedding", emb)
+    panel, emb = _recall_panel(_t(spark, sf_dir, "embeddings"))
     cut = emb.select(
         "vec_id", F.slice(F.col("embedding"), 1, 16).alias("emb16")
     )
-    tr_top = path_top("emb16", cut)
-
-    return (
-        ex_top.join(
-            tr_top.withColumn("__hit", F.lit(1)), ["qid", "vec_id"], "left"
-        )
-        .groupBy("qid")
-        .agg(F.sum(F.coalesce(F.col("__hit"), F.lit(0))).alias("n_overlap"))
-        .select(
-            "qid", "n_overlap",
-            (F.col("n_overlap") / F.lit(10.0)).alias("recall_at_10"),
-        )
+    return _recall_at_10(
+        _cosine_top(emb, "embedding", panel), _cosine_top(cut, "emb16", panel)
     )
 
 

@@ -28,6 +28,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from big_data_projects_spark.data import load_table as _t
+from big_data_projects_spark.operators import text as T
 from big_data_projects_spark.registry import register
 
 _DEC = "decimal(38,6)"
@@ -987,36 +988,22 @@ def q_shard_assignment(spark, sf_dir):
     vn = spark.range(n * r).select(
         (F.col("id") % n).alias("s"), (F.col("id") / n).cast("long").alias("r")
     )
-    vpos = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.lit("vn:"),
-                    F.col("s").cast("string"),
-                    F.lit(":"),
-                    F.col("r").cast("string"),
-                )
-            ),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
+    vpos = T.fingerprint32(
+        F.concat(
+            F.lit("vn:"),
+            F.col("s").cast("string"),
+            F.lit(":"),
+            F.col("r").cast("string"),
+        )
+    )
     ring = vn.select(vpos.alias("vpos"), "s").agg(
         F.array_sort(
             F.collect_list(F.struct("vpos", "s"))
         ).alias("ring")
     )
-    dpos = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("doc:"), F.col("doc_id").cast("string"))),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
+    dpos = T.fingerprint32(
+        F.concat(F.lit("doc:"), F.col("doc_id").cast("string"))
+    )
     d = docs.select("doc_id", dpos.alias("dpos")).join(F.broadcast(ring))
     cand = F.filter("ring", lambda x: x["vpos"] >= F.col("dpos"))
     # try_element_at, not element_at: a document hashed past the LAST

@@ -15,24 +15,50 @@ already verified here.
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+from typing import Iterator
 
-from big_data_projects_spark.data import load_stream
+import pandas as pd
+from pyspark.sql import Window
+from pyspark.sql import functions as F
+from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
+from big_data_projects_spark.data import load_stream, load_table
+from big_data_projects_spark.operators import text as T
 from big_data_projects_spark.registry import register
 from big_data_projects_spark.session import scratch_dir
-from big_data_projects_spark.streaming.joins import (
-    stream_static_enrich,
-    stream_stream_click_purchase,
+from big_data_projects_spark.streaming.core import (
+    run_to_completion,
+    run_to_distributed_batch,
 )
-from big_data_projects_spark.streaming.stateful import (
-    session_window_stream,
-    stream_dedup,
-    user_running_stats_stream,
-)
-from big_data_projects_spark.streaming.windowed import (
-    hourly_event_counts_stream,
-    sliding_event_counts_stream,
-)
+
+
+def _windowed_counts(spark, sf_dir, *window_args):
+    """Per-(event-time window, event_type) count and value sum.
+
+    Complete output mode emits every window at the final trigger
+    (append mode would withhold windows newer than the 2-hour
+    watermark, so a bounded backfill would lose its last hours).
+    Decimal accumulation makes the sums independent of the order in
+    which micro-batches update the state."""
+    agg = (
+        load_stream(spark, sf_dir, "events")
+        .withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", *window_args), "event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("value").cast("decimal(38,6)"))
+            .cast("double")
+            .alias("total_value"),
+        )
+        .select(
+            F.unix_millis(F.col("window.start")).alias("window_start_ms"),
+            "event_type",
+            "n",
+            "total_value",
+        )
+    )
+    return run_to_completion(agg, "complete")
 
 
 @register(
@@ -48,9 +74,8 @@ from big_data_projects_spark.streaming.windowed import (
 def q_stream_hourly_counts(spark, sf_dir):
     """Tumbling 1-hour event-time windows with watermark, run as a real
     readStream→writeStream job (memory sink, complete mode, driven to
-    completion). Decimal-accumulated sums keep streaming-state update
-    order from affecting the result."""
-    return hourly_event_counts_stream(spark, sf_dir)
+    completion)."""
+    return _windowed_counts(spark, sf_dir, "1 hour")
 
 
 @register(
@@ -68,7 +93,7 @@ def q_stream_sliding_counts(spark, sf_dir):
     """Sliding 1-hour windows every 30 minutes (each event in exactly
     two windows), run as a real streaming job. Oracle replicates each
     event into its two window starts."""
-    return sliding_event_counts_stream(spark, sf_dir)
+    return _windowed_counts(spark, sf_dir, "1 hour", "30 minutes")
 
 
 @register(
@@ -98,7 +123,18 @@ def q_stream_session_windows(spark, sf_dir):
     """Event-time session windows (30-min inactivity gap) as a real
     streaming query; final merged sessions equal batch gap-based
     sessionization (the oracle's lag/running-sum island detection)."""
-    return session_window_stream(spark, sf_dir)
+    sess = (
+        load_stream(spark, sf_dir, "events")
+        .withWatermark("ts", "2 hours")
+        .groupBy(F.session_window("ts", "30 minutes"), "user_id")
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select(
+            "user_id",
+            F.unix_millis(F.col("session_window.start")).alias("session_start_ms"),
+            "n_events",
+        )
+    )
+    return run_to_completion(sess, "complete")
 
 
 @register(
@@ -108,7 +144,24 @@ def q_stream_session_windows(spark, sf_dir):
 def q_stream_dedup(spark, sf_dir):
     """Streaming dedup against the state store: first (user_id,
     event_type) occurrence passes, later duplicates are dropped."""
-    return stream_dedup(spark, sf_dir)
+    stream = load_stream(spark, sf_dir, "events").select("user_id", "event_type")
+    return run_to_completion(stream.dropDuplicates(["user_id", "event_type"]), "append")
+
+
+def _update_user_stats(
+    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+) -> Iterator[pd.DataFrame]:
+    """Per-user running (count, max value): fold the Arrow batches into
+    scalars, merge with the prior state, emit the key's updated row."""
+    n, vmax = state.get if state.exists else (0, float("-inf"))
+    for pdf in pdfs:
+        n += len(pdf)
+        if len(pdf):
+            vmax = max(vmax, float(pdf["value"].max()))
+    state.update((n, vmax))
+    yield pd.DataFrame(
+        {"user_id": [key[0]], "n_events": [n], "max_value": [vmax]}
+    )
 
 
 @register(
@@ -121,9 +174,33 @@ def q_stream_dedup(spark, sf_dir):
 )
 def q_stream_user_stats(spark, sf_dir):
     """Custom stateful operator (applyInPandasWithState): per-user
-    running count + max, emitted per micro-batch in update mode; the
-    bounded run's final state matches the batch aggregate."""
-    return user_running_stats_stream(spark, sf_dir)
+    running count + max, emitted per micro-batch in update mode. The
+    sink holds one row per (user, batch); both values only grow, so the
+    final value per user is the row-wise max, taken after the drain,
+    and matches the batch aggregate. State is partitioned by user_id
+    (one shuffle)."""
+    stream = load_stream(spark, sf_dir, "events").select("user_id", "value")
+    updated = stream.groupBy("user_id").applyInPandasWithState(
+        _update_user_stats,
+        # StructTypes, not DDL strings: a string is parsed in the JVM.
+        outputStructType=StructType(
+            [
+                StructField("user_id", LongType()),
+                StructField("n_events", LongType()),
+                StructField("max_value", DoubleType()),
+            ]
+        ),
+        stateStructType=StructType(
+            [StructField("n", LongType()), StructField("vmax", DoubleType())]
+        ),
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+    sink = run_to_completion(updated, "update")
+    return sink.groupBy("user_id").agg(
+        F.max("n_events").alias("n_events"),
+        F.max("max_value").alias("max_value"),
+    )
 
 
 @register(
@@ -137,11 +214,33 @@ def q_stream_user_stats(spark, sf_dir):
     """,
 )
 def q_stream_static_join(spark, sf_dir):
-    """Stream⋈static enrichment: each micro-batch joins the broadcast
-    customer dim (no streaming state for the static side), then a daily
-    tumbling-window aggregate per market segment. Run to completion over
-    the bounded source; equals the batch join+group."""
-    return stream_static_enrich(spark, sf_dir)
+    """Stream⋈static enrichment: each micro-batch joins the customer
+    dim (no streaming state for the static side; no broadcast hint, the
+    dim's size picks the join strategy), then a daily tumbling-window
+    aggregate per market segment. Run to completion over the bounded
+    source; equals the batch join+group."""
+    stream = load_stream(spark, sf_dir, "events")
+    cust = load_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_mktsegment"
+    )
+    agg = (
+        stream.withWatermark("ts", "2 hours")
+        .join(cust, stream.user_id == cust.c_custkey)
+        .groupBy(F.window("ts", "1 day"), "c_mktsegment")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("value").cast("decimal(38,6)"))
+            .cast("double")
+            .alias("total_value"),
+        )
+        .select(
+            F.unix_millis(F.col("window.start")).alias("window_start_ms"),
+            "c_mktsegment",
+            "n",
+            "total_value",
+        )
+    )
+    return run_to_completion(agg, "complete")
 
 
 @register(
@@ -161,7 +260,38 @@ def q_stream_stream_join(spark, sf_dir):
     keep the join state finite — the only stream-stream formulation
     that survives an unbounded source. Append mode; the bounded run
     emits exactly the batch join's pairs."""
-    return stream_stream_click_purchase(spark, sf_dir)
+    ev = load_stream(spark, sf_dir, "events")
+    clicks = (
+        ev.filter(F.col("event_type") == "click")
+        .select(
+            F.col("event_id").alias("click_id"),
+            F.col("user_id").alias("c_user"),
+            F.col("ts").alias("click_ts"),
+        )
+        .withWatermark("click_ts", "1 hour")
+    )
+    purchases = (
+        ev.filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("event_id").alias("purchase_id"),
+            F.col("user_id").alias("p_user"),
+            F.col("ts").alias("purchase_ts"),
+        )
+        .withWatermark("purchase_ts", "1 hour")
+    )
+    joined = clicks.join(
+        purchases,
+        (F.col("c_user") == F.col("p_user"))
+        & (F.col("purchase_ts") >= F.col("click_ts"))
+        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
+    ).select(
+        F.col("c_user").alias("user_id"),
+        "click_id",
+        "purchase_id",
+        F.unix_millis("click_ts").alias("click_ms"),
+        F.unix_millis("purchase_ts").alias("purchase_ms"),
+    )
+    return run_to_completion(joined, "append")
 
 
 @register(
@@ -216,8 +346,6 @@ def q_stream_custom_source(spark, sf_dir):
     connector end-to-end. ``sf_dir`` unused — the source is its own
     data."""
     from big_data_projects_spark.sources import synthetic
-    from big_data_projects_spark.streaming.core import run_to_completion
-
     synthetic.register(spark)
     stream = (
         spark.readStream.format("bdp_synth")
@@ -246,12 +374,26 @@ def q_stream_anti_dedup(spark, sf_dir):
     """Stream⋈static LEFT ANTI dedup: records whose id is already in
     the historical ingestion ledger are dropped inside each micro-batch
     before aggregation — the incremental-corpus shape where replayed
-    feeds must not double-count. Oracle is the batch twin."""
-    from big_data_projects_spark.streaming.joins import (
-        stream_static_anti_dedup,
+    feeds must not double-count. The ledger side keeps no streaming
+    state, and the planner picks broadcast or shuffled-hash from its
+    size. Oracle is the batch twin."""
+    stream = load_stream(spark, sf_dir, "events")
+    seen = (
+        load_table(spark, sf_dir, "events")
+        .filter(F.col("event_id") % 3 == 0)
+        .select("event_id")
     )
-
-    return stream_static_anti_dedup(spark, sf_dir)
+    agg = (
+        stream.join(seen, "event_id", "left_anti")
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_new"),
+            F.sum(F.col("value").cast("decimal(38,6)"))
+            .cast("double")
+            .alias("total_value"),
+        )
+    )
+    return run_to_completion(agg, "complete")
 
 
 @register(
@@ -261,13 +403,16 @@ def q_stream_anti_dedup(spark, sf_dir):
 def q_stream_dedup_watermarked(spark, sf_dir):
     """Bounded-state streaming dedup via dropDuplicatesWithinWatermark
     — the state-evicting production API (plain dropDuplicates keeps
-    every key forever). Horizon > data span here, so the run equals
-    global DISTINCT and stays fully oracle-checked."""
-    from big_data_projects_spark.streaming.stateful import (
-        stream_dedup_watermarked,
+    every key forever). The 60-day horizon exceeds the 30-day backfill,
+    so no key is evicted mid-run: the run equals global DISTINCT and
+    stays fully oracle-checked."""
+    stream = load_stream(spark, sf_dir, "events").select("user_id", "event_type", "ts")
+    deduped = (
+        stream.withWatermark("ts", "60 days")
+        .dropDuplicatesWithinWatermark(["user_id", "event_type"])
+        .select("user_id", "event_type")
     )
-
-    return stream_dedup_watermarked(spark, sf_dir)
+    return run_to_completion(deduped, "append")
 
 
 @register(
@@ -291,11 +436,23 @@ def q_stream_daily_topk(spark, sf_dir):
     aggregate (rank-over-aggregate can't live inside a streaming
     plan — this two-stage split is the production shape). Equals the
     batch window-rank twin."""
-    from big_data_projects_spark.streaming.windowed import (
-        daily_topk_types_stream,
+    counts = (
+        load_stream(spark, sf_dir, "events")
+        .withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 day"), F.col("event_type"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(
+            F.unix_millis(F.col("window.start")).alias("day_start_ms"),
+            "event_type",
+            "n",
+        )
     )
-
-    return daily_topk_types_stream(spark, sf_dir, k=3)
+    drained = run_to_completion(counts, "complete")
+    w = Window.partitionBy("day_start_ms").orderBy(F.desc("n"), "event_type")
+    return (
+        drained.withColumn("rk", F.row_number().over(w).cast("long"))
+        .filter(F.col("rk") <= 3)
+    )
 
 
 @register(
@@ -317,7 +474,6 @@ def q_stream_file_ingest(spark, sf_dir):
     limit). Each micro-batch lands via foreachBatch append; the
     read-back aggregate proves every staged row arrived exactly once.
     tests/test_streaming_recovery.py pins the batch split itself."""
-    from big_data_projects_spark.data import load_table
     from big_data_projects_spark.streaming.core import (
         run_available_now_to_parquet,
     )
@@ -399,10 +555,6 @@ def q_stream_drift_psi(spark, sf_dir):
     control-plane-sized state. Counts are additive, so micro-batch
     arrival order cannot change the result; the oracle is q_drift_psi's
     batch statement verbatim."""
-    from big_data_projects_spark.streaming.core import run_to_completion
-
-    from big_data_projects_spark.data import load_table
-
     # Control plane (batch): midpoint + reference-half bin edges.
     ev = load_table(spark, sf_dir, "events")
     b = ev.select(
@@ -583,10 +735,6 @@ def q_stream_fuzzy_dedup(spark, sf_dir):
     reconstructs the whole pipeline in SQL, so signatures, banding,
     the stream-side candidate set, and the verify all hash-match."""
     from big_data_projects_spark.operators import dedup as D
-    from big_data_projects_spark.streaming.core import run_to_distributed_batch
-
-    from big_data_projects_spark.data import load_table
-
     M = D._MERSENNE31
     docs = load_table(spark, sf_dir, "documents")
 
@@ -835,11 +983,7 @@ def _ivf_gate_run(spark, sf_dir, bits: int = 8):
     """Full gate (stream drain + batch-side verify) under a selectable
     signature width — the registered query pins bits=8 (oracle-static
     buckets); the scale smoke measures the production scaled width."""
-    from big_data_projects_spark.data import load_table
     from big_data_projects_spark.operators import similarity as S
-    from big_data_projects_spark.streaming.core import (
-        run_to_distributed_batch,
-    )
 
     threshold = 0.3
     emb = load_table(spark, sf_dir, "embeddings")
@@ -880,7 +1024,6 @@ def _ivf_gate_match_stream(spark, sf_dir, bits: int = 8):
     operators/similarity.py ivf_merge_ingest).  The scale smoke's
     x_stream_ivf_gate_scaled measures this gate under the scaled
     width."""
-    from big_data_projects_spark.data import load_table
     from big_data_projects_spark.operators import similarity as S
 
     dim, n_bands, n_probe = 64, S.DEFAULT_LSH_BANDS, 2
@@ -997,9 +1140,6 @@ def q_stream_bloom_dedup(spark, sf_dir):
     ledger sizes the bitmask to the ledger cardinality.) Candidates
     drain through the distributed foreachBatch sink, never the
     driver."""
-    from big_data_projects_spark.data import load_table
-    from big_data_projects_spark.streaming.core import run_to_distributed_batch
-
     B, K = 4096, 3
 
     def fp_col():
@@ -1102,8 +1242,6 @@ def q_stream_cdc_apply(spark, sf_dir):
     key-count-sized (aggregate-shaped memory sink), and the tombstone
     filter is applied to the materialized state exactly as a
     downstream reader would."""
-    from big_data_projects_spark.streaming.core import run_to_completion
-
     stream = load_stream(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "value",
         F.when(F.col("event_type") == "error", "D")
@@ -1200,10 +1338,7 @@ def q_stream_dsir_gate(spark, sf_dir):
     KB-sized forever (bucket-count rows), the training pass is the
     batch DSIR plan, and the serving cost per document is O(tokens) in
     the scan task — the shape of a production streaming filter."""
-    from big_data_projects_spark.data import load_table
     from big_data_projects_spark.queries_curation import DSIR_BUCKETS
-    from big_data_projects_spark.streaming.core import run_to_distributed_batch
-
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.where(F.col("doc_id") % 3 != 0)
     toks = corpus.select(
@@ -1212,10 +1347,7 @@ def q_stream_dsir_gate(spark, sf_dir):
     )
     b = toks.select(
         "source",
-        (
-            F.conv(F.substring(F.md5("term"), 1, 8), 16, 10).cast("long")
-            % DSIR_BUCKETS
-        ).alias("bkt"),
+        (T.fingerprint32("term") % DSIR_BUCKETS).alias("bkt"),
     )
     tgt = F.col("source").isin("src0", "src1")
     tc = b.filter(tgt).groupBy("bkt").agg(F.count(F.lit(1)).alias("ct"))
@@ -1286,9 +1418,6 @@ def q_stream_dsir_gate(spark, sf_dir):
 
 
 def _stream_gopher_oracle() -> str:
-    from big_data_projects_spark.queries_corpus import GOPHER_STOPWORDS
-
-    stop_sql = ", ".join(f"'{w}'" for w in GOPHER_STOPWORDS)
     return rf"""
     WITH s AS (
         SELECT doc_id, source,
@@ -1300,7 +1429,7 @@ def _stream_gopher_oracle() -> str:
                CAST(len(t) AS BIGINT) AS n_words,
                list_sum(list_transform(t, w -> len(w)))
                    / CAST(len(t) AS DOUBLE) AS mwl,
-               CAST(len(list_intersect(list_distinct(t), [{stop_sql}]))
+               CAST(len(list_intersect(list_distinct(t), [{T.GOPHER_STOPWORDS_SQL}]))
                     AS BIGINT) AS n_stop
         FROM s
     ),
@@ -1335,27 +1464,10 @@ def q_stream_gopher_gate(spark, sf_dir):
     At 100 TB this is the first stage of a streaming ingest pipeline:
     the rules cost O(tokens) inside the scan task, the only state is
     |sources| running count pairs."""
-    from big_data_projects_spark.queries_corpus import GOPHER_STOPWORDS
-    from big_data_projects_spark.streaming.core import run_to_completion
-
     stream = load_stream(spark, sf_dir, "documents").where(F.col("doc_id") % 3 == 0)
-    base = stream.select(
-        "source", F.split(F.trim(F.lower("text")), r"\s+").alias("__t")
-    )
-    n_words = F.size("__t").cast("long")
-    total_len = F.aggregate(
-        F.transform(F.col("__t"), lambda w: F.length(w).cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    mwl = total_len / n_words
-    stop_arr = F.array(*[F.lit(w) for w in GOPHER_STOPWORDS])
-    n_stop = F.size(F.array_intersect(F.col("__t"), stop_arr)).cast("long")
-    keep = (
-        n_words.between(25, 500) & mwl.between(3, 10) & (n_stop >= 2)
-    )
+    base = stream.select("source", T.tokens("text").alias("__t"))
     agg = (
-        base.select("source", keep.alias("keep"))
+        base.selectExpr("source", f"{T.gopher('__t')['keep']} AS keep")
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_seen"),

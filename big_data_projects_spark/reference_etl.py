@@ -249,8 +249,9 @@ def write_star_schema(out_dir: str, **tables: DataFrame) -> None:
     chain waits on the driver and the cores idle between jobs.  Each
     thread's target is wrapped in ``inheritable_thread_target``:
     PySpark pins every Python thread to a JVM thread of its own, and a
-    bare thread would lose the caller's job group and local properties
-    (its jobs would escape ``measure.jobs_launched``, for one).  Once
+    bare thread would lose the caller's local properties, job group
+    and job tags (its jobs would escape ``measure.jobs_launched``, for
+    one).  Once
     every write has ended, the first failed one in table order raises
     here."""
     partitioning = {

@@ -1,9 +1,10 @@
-"""Shared Structured Streaming plumbing.
+"""Drains for the streaming queries in ``queries_streaming.py``.
 
-Every streaming query here follows one shape: readStream over a
-bounded testdata table, read from its own files (data.load_stream) →
-event-time stateful transform → memory sink driven to completion with
-processAllAvailable(). The same plan runs unchanged over a file/Kafka
+Each query reads a bounded testdata table as a stream
+(``data.load_stream``) and hands it to one of these drains: a memory
+sink for aggregate-shaped results, a foreachBatch parquet sink for
+results that scale with the data, or an AvailableNow trigger for
+rate-limited ingest. The same plans run unchanged over a file/Kafka
 source in production; only the sink and trigger differ.
 """
 

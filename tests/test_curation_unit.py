@@ -319,6 +319,78 @@ def test_filter_ablation_partitions_corpus(spark):
     assert gopher_marginal == gk
 
 
+# (case, text): each boundary of the Gopher gate from both sides.
+_GOPHER_CASES = [
+    ("empty", ""),  # tokens [''] — 1 word, mean length 0
+    ("whitespace", "   "),
+    # trim strips spaces only: the tab splits into two empty tokens
+    ("tab", " \t "),
+    ("null", None),
+    ("n24", " ".join(["the", "and"] + ["word"] * 22)),
+    ("n25", " ".join(["the", "and"] + ["word"] * 23)),
+    ("n500", " ".join(["the", "and"] + ["word"] * 498)),
+    ("n501", " ".join(["the", "and"] + ["word"] * 499)),
+    ("mean3", " ".join(["the", "and"] + ["abc"] * 28)),
+    ("mean_under3", " ".join(["the", "and", "ab"] + ["abc"] * 27)),
+    (
+        "mean10",
+        " ".join(["the", "and"] + ["a" * 10] * 14 + ["b" * 11] * 14),
+    ),
+    (
+        "mean_over10",
+        " ".join(["the", "and"] + ["a" * 10] * 13 + ["b" * 11] * 15),
+    ),
+    ("one_stopword_repeated", " ".join(["the"] * 5 + ["word"] * 25)),
+    ("two_stopwords", " ".join(["  The", "AND\t"] + ["word"] * 28)),
+]
+
+
+def test_gopher_gate_edge_cases_match_duckdb_oracle(spark):
+    """operators.text.gopher against the q_gopher_rules oracle run in
+    DuckDB, row by row: every output (n_words, mean_word_len,
+    n_stopwords, keep) at each boundary of the rule, plus empty,
+    whitespace-only and null text."""
+    import duckdb
+
+    from big_data_projects_spark.operators import text as T
+
+    rows = [(i, text) for i, (_, text) in enumerate(_GOPHER_CASES)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    cols = [f"{e} AS {k}" for k, e in T.gopher("__t").items()]
+    got = sorted(
+        tuple(r)
+        for r in df.select("doc_id", T.tokens("text").alias("__t"))
+        .selectExpr("doc_id", *cols)
+        .collect()
+    )
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    want = sorted(con.sql(REGISTRY["q_gopher_rules"].oracle).fetchall())
+    assert got == want
+    keep = {_GOPHER_CASES[r[0]][0]: r[4] for r in got}
+    assert keep == {
+        "empty": False,
+        "whitespace": False,
+        "tab": False,
+        "null": None,
+        "n24": False,
+        "n25": True,
+        "n500": True,
+        "n501": False,
+        "mean3": True,
+        "mean_under3": False,
+        "mean10": True,
+        "mean_over10": False,
+        "one_stopword_repeated": False,
+        "two_stopwords": True,
+    }
+    stats = {_GOPHER_CASES[r[0]][0]: r[1:4] for r in got}
+    assert stats["empty"] == stats["whitespace"] == (1, 0.0, 0)
+    assert stats["tab"] == (2, 0.0, 0)
+    assert stats["one_stopword_repeated"][2] == 1
+
+
 def test_survivor_bias_conservation(spark):
     """Before/after masses conserve (after ≤ before per source, totals
     consistent), shares each sum to 1, deltas sum to ~0, and the

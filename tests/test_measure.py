@@ -1,5 +1,5 @@
-"""Pins for measure.force_count: the benchmark forcing must compute
-the WHOLE query.  A bare count() lets Catalyst prune output-only
+"""Pins for measure: force_count, the benchmark forcing, must compute
+the WHOLE query, and jobs_launched must see a drained stream's jobs.  A bare count() lets Catalyst prune output-only
 columns/windows and eliminate left joins to unique-key aggregates —
 the round-9 audit found 29 benched/smoked plans losing work that way
 (merge-ingest count-plans collapsed to a bare scan), so the forcing
@@ -11,7 +11,11 @@ import re
 
 from pyspark.sql import functions as F
 
-from big_data_projects_spark.measure import force_count
+from big_data_projects_spark.data import load_stream
+from big_data_projects_spark.measure import force_count, jobs_launched
+from big_data_projects_spark.streaming.core import run_to_completion
+
+from conftest import SF_SMALL
 
 
 def _optimized(df) -> str:
@@ -82,3 +86,17 @@ def test_force_count_keeps_output_only_windows(spark):
     assert "Window" not in _optimized(w.groupBy().count())
     assert "Window" in _forcing_plan(w)
     assert force_count(w) == 100
+
+
+def test_jobs_launched_counts_micro_batch_jobs(spark):
+    """A stream's thread runs its micro-batches under its own job group
+    (the run id), so a group-based count saw none of them; the job tag
+    of the thread that starts the stream carries over."""
+
+    def drain():
+        stream = load_stream(spark, SF_SMALL, "events").select("user_id")
+        return run_to_completion(stream.dropDuplicates(["user_id"]), "append")
+
+    drain()  # warm: the schema memo leaves the micro-batches as the only jobs
+    _, jobs = jobs_launched(spark, drain)
+    assert jobs >= 1

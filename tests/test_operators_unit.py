@@ -1615,7 +1615,7 @@ def test_ivf_merge_frozen_index_recall_vs_full_rebuild(spark):
     pins for the synthetic corpus, not ANN-quality claims (the label
     partitioning is arbitrary, not semantic)."""
     from big_data_projects_spark.operators.similarity import (
-        cosine_sim,
+        cosine_sim_total,
         ivf_merge_ingest,
         part_centroids,
     )
@@ -1635,7 +1635,7 @@ def test_ivf_merge_frozen_index_recall_vs_full_rebuild(spark):
     exact_ids = {
         r["b_id"]
         for r in b.crossJoin(o)
-        .filter(cosine_sim(F.col("bv"), F.col("ov")) >= 0.3)
+        .filter(cosine_sim_total(F.col("bv"), F.col("ov")) >= 0.3)
         .select("b_id")
         .distinct()
         .collect()

@@ -4,7 +4,8 @@ queries at $SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS], each sample
 reports the builder's seconds, its py4j round trips, the seconds of
 force_count (all-columns forcing) on the built DataFrame, and the Spark
 jobs each of the two launched (``build_jobs``, ``force_jobs``; counted
-under a job group per phase); optionally dumps the formatted physical
+under a job tag per phase, so a drained stream's micro-batch jobs
+count too); optionally dumps the formatted physical
 plan. The first line of output records the shuffle partitions and
 default parallelism the samples ran under.
 
