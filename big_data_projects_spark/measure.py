@@ -25,6 +25,9 @@ a drained stream's micro-batches included.
 ``round_trips`` counts the py4j commands a call sends to the JVM: every
 PySpark ``Column`` call is one, so thousands of them while building
 mean a Column chain that belongs in SQL text.
+``codegen_compiles`` counts the generated classes the JVM compiled
+during a call: a repeated query that compiles any has lost its classes
+from Spark's codegen cache (``spark.sql.codegen.cache.maxEntries``).
 """
 
 from __future__ import annotations
@@ -101,3 +104,16 @@ def round_trips(fn: Callable[[], T]) -> tuple[T, int]:
     finally:
         ClientServerConnection.send_command = send
     return result, calls
+
+
+def codegen_compiles(spark: SparkSession, fn: Callable[[], T]) -> tuple[T, int]:
+    """Run ``fn()`` and return its result with the number of generated
+    classes Janino compiled meanwhile (each a miss in Spark's codegen
+    cache).
+
+    The counter is the JVM's, not the call's: compiles of any other
+    thread in the same JVM (a concurrent query, a stream) count too."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    before = metrics.METRIC_COMPILATION_TIME().getCount()
+    result = fn()
+    return result, metrics.METRIC_COMPILATION_TIME().getCount() - before

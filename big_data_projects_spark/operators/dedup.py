@@ -40,7 +40,7 @@ from __future__ import annotations
 
 import random
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from big_data_projects_spark.operators.text import tokens
@@ -61,11 +61,6 @@ _PERMS = [
     (_rng.randrange(1, _MERSENNE31), _rng.randrange(0, _MERSENNE31))
     for _ in range(NUM_PERM)
 ]
-
-
-def content_hash(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.md5(c)
 
 
 def shingles(

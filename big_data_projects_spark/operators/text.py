@@ -36,8 +36,7 @@ def tokens(col: Column | str) -> Column:
     Matches DuckDB ``regexp_split_to_array(trim(lower(x)), '\\s+')``
     exactly, including the empty-string → [''] edge.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.split(F.trim(F.lower(c)), r"\s+")
+    return F.split(F.trim(F.lower(col)), r"\s+")
 
 
 def with_token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -53,8 +52,7 @@ def lang_scores(text_col: Column | str = "text") -> dict[str, Column]:
     Accepts a column name or an arbitrary Column expression — the
     latter lets the same marker arithmetic run per-window inside a
     higher-order ``transform`` lambda (q_code_switch_audit)."""
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    low = F.lower(c)
+    low = F.lower(text_col)
     scores = {
         lang: F.regexp_count(low, F.lit(pat)).cast("long")
         for lang, pat in LANG_MARKERS.items()
@@ -89,7 +87,7 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     × (0.5 + 0.5 × stopword-hit ratio). All ratios are int/int
     divisions → bit-identical doubles on Spark and DuckDB.
     """
-    low = F.lower(F.col(text_col))
+    low = F.lower(text_col)
     t = tokens(text_col)
     out = (
         df.withColumn("n_chars_obs", F.length(text_col).cast("long"))
@@ -142,8 +140,7 @@ def gopher(t: str) -> dict[str, str]:
 
 def fingerprint(col: Column | str) -> Column:
     """Full-text md5 hex fingerprint (engine-portable)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.md5(c)
+    return F.md5(col)
 
 
 def fingerprint32(col: Column | str) -> Column:
@@ -174,8 +171,7 @@ ROLL_MOD = (1 << 31) - 1
 
 def bpe_token_count(col: Column | str) -> Column:
     """Number of BPE-style pre-tokens (bigint)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.size(F.regexp_extract_all(F.lower(c), F.lit(BPE_PATTERN), F.lit(0))).cast(
+    return F.size(F.regexp_extract_all(F.lower(col), F.lit(BPE_PATTERN), F.lit(0))).cast(
         "long"
     )
 

@@ -814,9 +814,9 @@ def q_incremental_dedup(spark, sf_dir):
     old = docs.filter(~new_pred)
 
     exact_ids = (
-        newb.select("doc_id", D.content_hash("text").alias("__h"))
+        newb.select("doc_id", T.fingerprint("text").alias("__h"))
         .join(
-            old.select(D.content_hash("text").alias("__h")).distinct(), "__h"
+            old.select(T.fingerprint("text").alias("__h")).distinct(), "__h"
         )
         .select("doc_id")
         .distinct()

@@ -334,7 +334,7 @@ def q_dedup_exact(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     return docs.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_total"),
-        F.countDistinct(D.content_hash("text")).alias("n_unique"),
+        F.countDistinct(T.fingerprint("text")).alias("n_unique"),
     )
 
 

@@ -11,6 +11,14 @@ Arrow for any pandas interchange, and shuffle parallelism taken from
 the session (one partition per core unless it set its own) rather
 than the 200 default.
 
+get_spark also sizes Spark's cache of compiled generated classes
+(``spark.sql.codegen.cache.maxEntries``, 1000 instead of 100) to the
+package's working set, so a repeated query reuses its classes instead
+of recompiling them. It is a static SQL conf: ``spark.conf.set``
+rejects it, so ensure_runtime_conf cannot pin it, and a session the
+caller builds (``__spark_entry__``'s, for one) keeps the cap it was
+built with.
+
 The runtime conf is pinned (ensure_runtime_conf) only where a caller's
 session enters the package: get_spark, the registry wrapper
 (``Query.spark``), ``__spark_entry__.entry`` and
@@ -64,7 +72,11 @@ def get_spark(
     cpus: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a local SparkSession tuned for this engine."""
+    """Build (or fetch) a local SparkSession tuned for this engine.
+
+    Static confs (the codegen cache cap among them) take effect only
+    when this call starts the JVM's SparkContext; a session that already
+    runs keeps its own."""
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or (os.cpu_count() or 4)
 
@@ -77,6 +89,12 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC")
         .config("spark.executor.extraJavaOptions", "-Duser.timezone=UTC")
+        # Spark's JVM-wide cache of compiled generated classes holds 100
+        # by default. One olap_etl pass uses ~145 (a perfbench run ~270), so
+        # LRU evicted each before its next use and every pass recompiled
+        # them (~0.9 s). Guava splits the cap over 4 segments, hence the
+        # headroom.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -8,11 +8,12 @@ itself is contract-tested here."""
 from __future__ import annotations
 
 import re
+import uuid
 
 from pyspark.sql import functions as F
 
 from big_data_projects_spark.data import load_stream
-from big_data_projects_spark.measure import force_count, jobs_launched
+from big_data_projects_spark.measure import codegen_compiles, force_count, jobs_launched
 from big_data_projects_spark.streaming.core import run_to_completion
 
 from conftest import SF_SMALL
@@ -100,3 +101,19 @@ def test_jobs_launched_counts_micro_batch_jobs(spark):
     drain()  # warm: the schema memo leaves the micro-batches as the only jobs
     _, jobs = jobs_launched(spark, drain)
     assert jobs >= 1
+
+
+def test_codegen_compiles_counts_cache_misses_only(spark):
+    """A plan no earlier call compiled costs at least one generated
+    class; the same plan built again finds its classes in the codegen
+    cache and compiles none."""
+    k = 10**9 + uuid.uuid4().int % 10**9  # a literal no other plan holds
+
+    def run():
+        return spark.range(0, 100).select((F.col("id") * k).alias("x")).collect()
+
+    rows, first = codegen_compiles(spark, run)
+    rows_again, again = codegen_compiles(spark, run)
+    assert rows == rows_again and len(rows) == 100
+    assert first >= 1
+    assert again == 0

@@ -5,8 +5,10 @@ reports the builder's seconds, its py4j round trips, the seconds of
 force_count (all-columns forcing) on the built DataFrame, and the Spark
 jobs each of the two launched (``build_jobs``, ``force_jobs``; counted
 under a job tag per phase, so a drained stream's micro-batch jobs
-count too); optionally dumps the formatted physical
-plan. The first line of output records the shuffle partitions and
+count too) and the generated classes each compiled (``build_compiles``,
+``force_compiles``; JVM-wide counts, 0 on a warm run whose classes
+are still in Spark's codegen cache); optionally dumps the formatted
+physical plan. The first line of output records the shuffle partitions and
 default parallelism the samples ran under.
 
 Usage: python tools/profile_query.py name[,name...] [--runs N] [--plan DIR]
@@ -55,7 +57,8 @@ def main() -> None:
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from big_data_projects_spark.measure import force_count, jobs_launched, round_trips
+    from big_data_projects_spark.measure import (
+        codegen_compiles, force_count, jobs_launched, round_trips)
     from big_data_projects_spark.session import ensure_runtime_conf, get_spark
     from big_data_projects_spark.queries import REGISTRY
 
@@ -102,6 +105,12 @@ def main() -> None:
         # sample count below; fail loudly with the reason instead.
         raise SystemExit(f"--runs must be >= 1 (got {runs})")
 
+    def counted(fn):
+        """fn's result, its Spark jobs and its generated-class compiles."""
+        (result, compiles), jobs = jobs_launched(
+            spark, lambda: codegen_compiles(spark, fn))
+        return result, jobs, compiles
+
     out: dict[str, dict] = {}
     for name in names:
         q = REGISTRY[name]
@@ -120,14 +129,16 @@ def main() -> None:
                 t0 = time.perf_counter()
                 return force_count(df), time.perf_counter() - t0
 
-            (df, build_s, calls), build_jobs = jobs_launched(spark, build)
-            (n, force_s), force_jobs = jobs_launched(spark, force)
+            (df, build_s, calls), build_jobs, build_compiles = counted(build)
+            (n, force_s), force_jobs, force_compiles = counted(force)
             samples.append({
                 "build_s": round(build_s, 3),
                 "force_s": round(force_s, 3),
                 "round_trips": calls,
                 "build_jobs": build_jobs,
                 "force_jobs": force_jobs,
+                "build_compiles": build_compiles,
+                "force_compiles": force_compiles,
             })
             ensure_runtime_conf(spark)
         totals = [round(s["build_s"] + s["force_s"], 3) for s in samples]
